@@ -928,6 +928,8 @@ def grouped_map_sorted(
     prep=None,
     group_cap: int | None = None,
     layer_caps: dict[int, int] | None = None,
+    partitioned: bool = False,
+    on_end=None,
 ):
     """applyInPandas-equivalent with per-BATCH (not per-group) Python
     overhead: repartition on the keys, sort within partitions, then
@@ -963,6 +965,13 @@ def grouped_map_sorted(
     group is re-compacted after every appended batch, so a capped hot
     group spanning B batches holds O(sum(caps)) rows, not O(rows).
     Mutually exclusive with group_cap.
+
+    `partitioned`: `df` is already hash-partitioned on the keys and
+    sorted within partitions (e.g. a checkpointed frame several kernels
+    share) — skip the repartition + sort.
+
+    `on_end`: called once per partition after its last group; the rows
+    it returns are emitted too (per-task totals, accumulator flushes).
     """
     import pandas as pd
 
@@ -982,7 +991,7 @@ def grouped_map_sorted(
     # do.
     n_enc = df.sparkSession.conf.get("spark.sparktiles.encodePartitions", None)
     part_cols = [F.col(k) for k in keys]
-    part = (
+    part = df if partitioned else (
         df.repartition(int(n_enc), *part_cols)
         if n_enc
         else df.repartition(*part_cols)
@@ -1146,6 +1155,10 @@ def grouped_map_sorted(
                 yield pd.DataFrame(rows, columns=out_cols)
         if held and held_n:
             rows = flush_held()
+            if rows:
+                yield pd.DataFrame(rows, columns=out_cols)
+        if on_end is not None:
+            rows = on_end()
             if rows:
                 yield pd.DataFrame(rows, columns=out_cols)
 

@@ -5,7 +5,10 @@ Reference counterparts:
 - impute (T3)               -> mbtile_tools.py:106-196 (children math
                                at 179-190; dup threshold 20 / 50 for
                                z>12 at mbtile_tools.py:36-38)
-- MID_ZOOM driver loop (T4) -> bin/generate-tiles:100-117
+- MID_ZOOM driver loop (T4) -> bin/generate-tiles:100-117; the
+                               one-pass form of the walk (walk_input /
+                               impute_summary / replay_impute /
+                               emit_tile_map) is what build_fast runs
 - tile_multiplier (T5)      -> bin/tile_multiplier:24-54
 
 Scale design notes (100 TB / 1000 executors):
@@ -23,8 +26,12 @@ Scale design notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+from collections import Counter
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from sparktiles.functions.tilemath import (
     HALF_WORLD,
@@ -34,6 +41,11 @@ from sparktiles.functions.tilemath import (
 
 EMPTY_TILE_DUP_THRESHOLD = 20       # mbtile_tools.py:36-38
 EMPTY_TILE_DUP_THRESHOLD_HIGH = 50  # for z > 12
+
+
+def dup_threshold(zoom: int) -> int:
+    """Copies of one tile_id in the map at `zoom` that make it a dup."""
+    return EMPTY_TILE_DUP_THRESHOLD_HIGH if zoom > 12 else EMPTY_TILE_DUP_THRESHOLD
 
 
 def tile_pyramid(
@@ -263,7 +275,7 @@ def dup_tile_ids(tile_map: DataFrame, zoom: int | None = None) -> DataFrame:
     """Duplicate-tile finder (A6, reference mbtile_tools.py:49-103):
     tile_ids appearing >= threshold times — 'empty-ish' content
     (oceans, deserts). Threshold 20, or 50 above z12."""
-    th = EMPTY_TILE_DUP_THRESHOLD_HIGH if (zoom or 0) > 12 else EMPTY_TILE_DUP_THRESHOLD
+    th = dup_threshold(zoom or 0)
     df = tile_map
     if zoom is not None:
         df = df.where(F.col("zoom_level") == zoom)
@@ -310,6 +322,337 @@ def impute_children(parents: DataFrame, dup_keys: DataFrame) -> tuple[DataFrame,
         F.col("tile_row").alias("y"),
     )
     return imputed, generate
+
+
+# ------------------------------------------------- one-pass impute walk
+#
+# The reference walk (impute_children per zoom) needs the map at z-1 to
+# decide zoom z. It rests on one fact: a dup tile_id has >= 20 copies,
+# so >= 80 one zoom deeper, and stays dup. Every imputed region is
+# therefore a whole quadtree subtree under its first dup ancestor (its
+# "root"), i.e. one morton interval per deeper zoom (Raster Intervals,
+# SIGMOD 2023). Only the per-zoom dup SETS are global; given them, each
+# mid-zoom subtree walks on its own. So build_fast runs:
+#   walk_input     tiles_all keys + universe markers, grouped per
+#                  low-zoom tile / mid-zoom subtree
+#   impute_summary one kernel pass -> per (zoom, ancestor pattern,
+#                  candidate id) counts, collected to the driver
+#   replay_impute  the driver replays the walk on those counts: the dup
+#                  set of every zoom + per-zoom stats
+#   emit_tile_map  one kernel pass emits every map row, z0..max
+
+_M29 = (1 << 29) - 1
+
+
+def _pack(z, x, y):
+    """(z, x, y) int arrays -> one int64 key, ordered like (z, x, y)."""
+    return ((z.astype(np.int64) << 58) | (x.astype(np.int64) << 29)
+            | y.astype(np.int64))
+
+
+def walk_input(tiles: DataFrame, universe: DataFrame, mid: int,
+               empty_id: str) -> DataFrame:
+    """The impute walk's input: every tiles_all key (z, x, y, tile_id)
+    plus a NULL-id marker row per universe tile at z <= mid, keyed
+    g = pack(min(z, mid), x >> d, y >> d) with d = z - min(z, mid). A
+    g group is one low-zoom tile, or one mid-zoom tile with everything
+    tiles_all holds below it.
+
+    `cand` flags the ids that may ever be dups: the empty id, and ids
+    with at least the dup threshold of rows at some zoom >= mid. An id
+    first turns dup at zoom z through rows generated at z, and no more
+    rows are generated than tiles_all holds there.
+
+    Hash-partitioned on g and sorted (g, z, x, y): both kernels below
+    read it, so the caller checkpoints it."""
+    th = F.when(F.col("z") > 12, F.lit(EMPTY_TILE_DUP_THRESHOLD_HIGH)) \
+        .otherwise(F.lit(EMPTY_TILE_DUP_THRESHOLD))
+    # one exchange: hashing on tile_id alone clusters both windows
+    keyed = (
+        tiles.select("z", "x", "y", "tile_id").repartition("tile_id")
+        .withColumn("_h", (F.col("z") >= mid) & (
+            F.count(F.lit(1)).over(Window.partitionBy("tile_id", "z")) >= th))
+        .withColumn("cand", F.max("_h").over(Window.partitionBy("tile_id"))
+                    | (F.col("tile_id") == empty_id))
+        .drop("_h")
+    )
+    markers = universe.select(
+        "z", "x", "y", F.lit(None).cast("string").alias("tile_id"),
+        F.lit(None).cast("boolean").alias("cand"))
+    gz = F.least(F.col("z"), F.lit(mid))
+    d = (F.col("z") - gz).cast("int")
+    g = (F.shiftleft(gz.cast("long"), 58)
+         .bitwiseOR(F.shiftleft(F.call_function("shiftright", F.col("x"), d), 29))
+         .bitwiseOR(F.call_function("shiftright", F.col("y"), d)))
+    return (keyed.unionByName(markers).withColumn("g", g)
+            .repartition("g").sortWithinPartitions("g", "z", "x", "y"))
+
+
+def _group(arrs, s: int, e: int):
+    """One g group -> (gz, gx, gy, marker present, tiles_all rows as
+    z, x, y, id, cand, sorted packed keys)."""
+    import pandas as pd
+
+    g = int(arrs["g"][s])
+    tid = arrs["tile_id"][s:e]
+    t = ~pd.isna(tid)
+    z = arrs["z"][s:e][t].astype(np.int64)
+    x = arrs["x"][s:e][t].astype(np.int64)
+    y = arrs["y"][s:e][t].astype(np.int64)
+    cand = arrs["cand"][s:e][t].astype(bool)
+    return (g >> 58, (g >> 29) & _M29, g & _M29, bool((~t).any()),
+            z, x, y, tid[t], cand, _pack(z, x, y))
+
+
+def _ancestor_codes(z, x, y, keys, code, mid: int, maxzoom: int):
+    """(rows, maxzoom - mid) matrix: column j - mid holds the code of
+    the row's ancestor at zoom j (0, the empty id, when tiles_all has
+    no such tile) or -1 (not a candidate, or not an ancestor)."""
+    anc = np.full((len(z), max(maxzoom - mid, 0)), -1, dtype=np.int64)
+    for j in range(mid, maxzoom):
+        sel = np.flatnonzero(z > j)
+        if not len(sel):
+            break
+        sh = z[sel] - j
+        ak = (np.int64(j) << 58) | ((x[sel] >> sh) << 29) | (y[sel] >> sh)
+        i = np.minimum(np.searchsorted(keys, ak), len(keys) - 1)
+        anc[sel, j - mid] = np.where(keys[i] == ak, code[i], 0)
+    return anc
+
+
+def impute_summary(part: DataFrame, mid: int, maxzoom: int,
+                   empty_id: str) -> list:
+    """One pass over walk_input -> the summary replay_impute needs:
+    rows (z, x, y, pat, own, n).
+
+    - z >= mid: n tiles_all rows at zoom z inside the map's domain whose
+      own id is `own` (a candidate; None otherwise) and whose candidate
+      ancestors at zooms mid..z-1 are `pat` ("j:id,..."; a tile missing
+      from tiles_all counts as the empty id). A universe tile at mid
+      missing from tiles_all is one (mid, "", empty id) row. x = y = -1.
+    - z < mid: one row per map tile (pat "", own as above or the empty id).
+    - tiles that image bookkeeping needs by position carry x, y, n = 1:
+      a non-candidate row with a candidate ancestor (imputed away if an
+      ancestor turns out a dup root), and every row under a mid tile
+      outside the domain (pat "X", never in the map).
+    Counts are merged per task, so the driver collects few rows."""
+    from sparktiles.operators.mvt import grouped_map_sorted
+
+    acc: Counter = Counter()
+    singles: list = []
+
+    def fn(arrs, s, e):
+        gz, gx, gy, marker, z, x, y, ids, cand, keys = _group(arrs, s, e)
+        if gz < mid:  # one low-zoom tile: its map row is the T id or E
+            own = (ids[0] if cand[0] else None) if len(ids) else empty_id
+            acc[(int(gz), "", own)] += 1
+            return []
+        if not (marker or (z == mid).any()):
+            singles.extend(
+                (int(z[i]), int(x[i]), int(y[i]), "X",
+                 ids[i] if cand[i] else None, 1) for i in range(len(z)))
+            return []
+        if not (z == mid).any():
+            acc[(mid, "", empty_id)] += 1
+        names = [empty_id] + sorted({c for c in ids[cand]} - {empty_id})
+        lut = {c: i for i, c in enumerate(names)}
+        code = np.array([lut[c] if k else -1 for c, k in zip(ids, cand)],
+                        dtype=np.int64)
+        anc = _ancestor_codes(z, x, y, keys, code, mid, maxzoom)
+
+        def pat(row):
+            return ",".join(f"{mid + j}:{names[c]}"
+                            for j, c in enumerate(row) if c >= 0)
+
+        single = (code < 0) & (anc >= 0).any(axis=1)
+        for i in np.flatnonzero(single):
+            singles.append((int(z[i]), int(x[i]), int(y[i]),
+                            pat(anc[i]), None, 1))
+        m = np.column_stack([z, code, anc])[~single]
+        uniq, cnt = np.unique(m, axis=0, return_counts=True)
+        for row, n in zip(uniq, cnt):
+            own = names[row[1]] if row[1] >= 0 else None
+            acc[(int(row[0]), pat(row[2:]), own)] += int(n)
+        return []
+
+    def flush():
+        rows = [(z, -1, -1, p, own, n) for (z, p, own), n in acc.items()]
+        rows += singles
+        acc.clear()
+        singles.clear()
+        return rows
+
+    return grouped_map_sorted(
+        part, ["g"], fn, "z int, x long, y long, pat string, own string, n long",
+        partitioned=True, on_end=flush).collect()
+
+
+def _parse_pat(p: str) -> tuple:
+    return tuple((int(j), c) for j, c in
+                 (e.split(":", 1) for e in p.split(","))) if p else ()
+
+
+def replay_impute(summary, minzoom: int, mid: int, maxzoom: int,
+                  empty_id: str) -> dict:
+    """Replay the reference walk (impute_children zoom by zoom) on the
+    impute_summary rows. Positions are tracked as counts per (ancestor
+    pattern, own candidate id); the children of a zoom's positions are
+    4x their count, and those tiles_all does not hold are empty.
+
+    Returns {"dups": {z: frozenset of dup ids of the map at z}, for
+    z in [mid, maxzoom), "zooms": per-zoom n_tiles / n_nonempty /
+    n_imputed / n_generated, "unused": candidate ids no map row uses,
+    "blocked": (z, x, y) of tiles_all rows the map does not use whose
+    id may be used elsewhere}."""
+    at: dict[int, Counter] = {}
+    singles, out_of_domain, seen = [], [], set()
+    for z, x, y, p, own, n in summary:
+        if own is not None and own != empty_id:
+            seen.add(own)
+        if p == "X":
+            out_of_domain.append((z, x, y))
+            continue
+        key = (_parse_pat(p), own)
+        at.setdefault(z, Counter())[key] += n
+        if x >= 0:
+            singles.append((z, x, y, key[0]))
+
+    used: set = set()
+    dups: dict[int, frozenset] = {}
+    zooms = []
+    for z in range(minzoom, mid):
+        c = at.get(z, Counter())
+        n = sum(c.values())
+        used.update(own for (_, own) in c if own is not None)
+        zooms.append({"z": z, "n_tiles": n,
+                      "n_nonempty": n - c[((), empty_id)],
+                      "n_imputed": 0, "n_generated": n})
+
+    def root(p):
+        """The id a position inherits: its first dup ancestor's."""
+        for j, c in p:
+            if c in dups[j]:
+                return c
+        return None
+
+    pos: Counter = Counter()
+    for z in range(mid, maxzoom + 1):
+        cur = Counter(at.get(z, Counter()))
+        if z > mid:
+            held = Counter()
+            for (p, _), n in cur.items():
+                held[p] += n
+            kids = Counter()
+            for (p, own), n in pos.items():
+                kids[p + ((z - 1, own),) if own is not None else p] += 4 * n
+            for p, n in kids.items():
+                if n != held[p]:
+                    assert n > held[p], "tiles_all row outside its parent's subtree"
+                    cur[(p, empty_id)] += n - held[p]
+        pos = cur
+        gen: Counter = Counter()
+        n_tiles = n_imp = n_ne = 0
+        for (p, own), n in pos.items():
+            n_tiles += n
+            r = root(p)
+            if r is not None:
+                n_imp += n
+                n_ne += n if r != empty_id else 0
+                continue
+            n_ne += n if own != empty_id else 0
+            if own is not None:
+                gen[own] += n
+        used.update(gen)
+        prev = dups.get(z - 1, frozenset())
+        dups[z] = prev | {c for c, n in gen.items() if n >= dup_threshold(z)}
+        zooms.append({"z": z, "n_tiles": n_tiles, "n_nonempty": n_ne,
+                      "n_imputed": n_imp, "n_generated": n_tiles - n_imp})
+    blocked = out_of_domain + [(z, x, y) for z, x, y, p in singles
+                               if root(p) is not None]
+    dups.pop(maxzoom, None)
+    return {"dups": dups, "zooms": zooms, "unused": seen - used,
+            "blocked": blocked}
+
+
+def emit_tile_map(part: DataFrame, dups: dict, mid: int, maxzoom: int,
+                  empty_id: str, stats_acc=None) -> DataFrame:
+    """Every map row (zoom_level, tile_column, tile_row, tile_id) from
+    walk_input in one pass: a low-zoom tile takes its tiles_all id or
+    the empty id; a mid-zoom subtree walks down zoom by zoom, children
+    of a tile whose id is in dups[z] inheriting it, the others taking
+    their tiles_all id or the empty id. Subtrees under a mid tile
+    outside the domain emit nothing.
+
+    stats_acc, if given, is an accumulator that receives, per task and
+    zoom, {(partition id, z): (rows, non-empty rows, min x, max x,
+    min y, max y, distinct ids)} — one task writes one file per zoom,
+    so these are the per-file lineage rows of the map's write."""
+    from sparktiles.operators.mvt import grouped_map_sorted
+
+    quad_x = np.array([0, 1, 0, 1], dtype=np.int64)
+    quad_y = np.array([0, 0, 1, 1], dtype=np.int64)
+    stats: dict = {}
+
+    def note(z, xs, ys, names, codes, ecode):
+        st = stats.setdefault(z, [0, 0, None, None, None, None, set()])
+        st[0] += len(codes)
+        st[1] += int((codes != ecode).sum())
+        for k, v, f in ((2, xs.min(), min), (3, xs.max(), max),
+                        (4, ys.min(), min), (5, ys.max(), max)):
+            st[k] = int(v) if st[k] is None else f(st[k], int(v))
+        st[6].update(names[np.unique(codes)])
+
+    def fn(arrs, s, e):
+        gz, gx, gy, marker, z, x, y, ids, _, keys = _group(arrs, s, e)
+        if gz < mid:
+            tile = ids[0] if len(ids) else empty_id
+            if stats_acc is not None:
+                note(int(gz), np.array([gx]), np.array([gy]),
+                     np.array([tile], dtype=object), np.array([0]),
+                     0 if tile == empty_id else -1)
+            return [(int(gz), int(gx), int(gy), tile)]
+        at_mid = z == mid
+        if not (marker or at_mid.any()):
+            return []
+        names, inv = np.unique(np.append(ids, empty_id).astype(str),
+                               return_inverse=True)
+        names = names.astype(object)
+        code, ecode = inv[:-1], int(inv[-1])
+        px, py = np.array([gx]), np.array([gy])
+        pc = code[at_mid] if at_mid.any() else np.array([ecode])
+        rows = []
+        for j in range(mid, maxzoom + 1):
+            rows.extend(zip([j] * len(pc), px.tolist(), py.tolist(),
+                            names[pc].tolist()))
+            if stats_acc is not None:
+                note(j, px, py, names, pc, ecode)
+            if j == maxzoom:
+                break
+            dj = dups.get(j, ())
+            inherit = np.repeat(np.array([n in dj for n in names])[pc], 4)
+            cx = np.repeat(px * 2, 4) + np.tile(quad_x, len(px))
+            cy = np.repeat(py * 2, 4) + np.tile(quad_y, len(py))
+            ck = _pack(np.full(len(cx), j + 1), cx, cy)
+            i = np.minimum(np.searchsorted(keys, ck), max(len(keys) - 1, 0))
+            hit = (keys[i] == ck) if len(keys) else np.zeros(len(ck), bool)
+            own = np.where(hit, code[i] if len(keys) else ecode, ecode)
+            px, py, pc = cx, cy, np.where(inherit, np.repeat(pc, 4), own)
+        return rows
+
+    def flush():
+        if stats_acc is not None and stats:
+            from pyspark import TaskContext
+
+            pid = TaskContext.get().partitionId()
+            stats_acc.add({(pid, z): tuple(st[:6]) + (len(st[6]),)
+                           for z, st in stats.items()})
+            stats.clear()
+        return []
+
+    return grouped_map_sorted(
+        part, ["g"], fn,
+        "zoom_level int, tile_column long, tile_row long, tile_id string",
+        partitioned=True, on_end=flush)
 
 
 def tile_multiplier(changed: DataFrame, minzoom: int, maxzoom: int) -> DataFrame:

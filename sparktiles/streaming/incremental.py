@@ -117,7 +117,14 @@ def run_incremental_retile(
     columns) or WKB features (geom binary column); the invalidation
     dispatches to the matching assignment (points: column math; WKB:
     supercover rasterization — same assigners the build itself uses,
-    so invalidated == the tiles a full rebuild would touch)."""
+    so invalidated == the tiles a full rebuild would touch).
+
+    The invalidation list (z, x, y) is computed ONCE: it is eagerly
+    local-checkpointed before regenerate_fn and the merge read it, so
+    neither re-runs the diff, geoparse and assignment. Its blocks stay
+    in executor storage for as long as the returned frame (which reads
+    them) is referenced; Spark's ContextCleaner drops them after that,
+    or the session's end does."""
     from sparktiles.operators.pyramid import (
         assign_point_tiles_multi,
         assign_supercover_tiles_multi,
@@ -136,6 +143,6 @@ def run_incremental_retile(
     else:
         assigned = assign_point_tiles_multi(
             changed, minzoom, maxzoom, buffer_px=buffer_px)
-    inv = assigned.select("z", "x", "y").distinct()
+    inv = assigned.select("z", "x", "y").distinct().localCheckpoint(eager=True)
     fresh = regenerate_fn(inv)
     return merge_tile_map(existing_map, fresh, inv)

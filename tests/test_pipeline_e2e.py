@@ -9,16 +9,24 @@ assignments'). Also checks the impute-vs-direct pyramid equivalence
 """
 
 import hashlib
+import json
 import math
 import re
+import shutil
 from collections import Counter
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from sparktiles.functions import mvtcodec as C
 from sparktiles.plans.config import FieldDef, LayerDef, TilesetDef
-from sparktiles.plans.pipeline import BuildConfig, TileBuild, make_point_layer_frames
+from sparktiles.plans.pipeline import (
+    BuildConfig,
+    TileBuild,
+    empty_tile_blob,
+    make_point_layer_frames,
+)
 from sparktiles.sources.geoparse import build_features
 from sparktiles.sources.pages import generate_pages
 
@@ -304,3 +312,121 @@ def test_fast_build_equals_loop_build_wkb(spark, tmp_path):
     i2 = {r.tile_id: bytes(r.tile_data) for r in fast.read_tile_images().collect()}
     for tid in {r.tile_id for r in m2.select("tile_id").distinct().collect()}:
         assert i1[tid] == i2[tid]
+
+
+def _store_contents(b):
+    """(sorted map rows, {tile_id: image bytes})."""
+    rows = sorted(tuple(r) for r in b.read_tile_map().collect())
+    imgs = {r.tile_id: bytes(r.tile_data) for r in b.read_tile_images().collect()}
+    return rows, imgs
+
+
+def _keep_phase1(store):
+    """What a crash right after phase 1 leaves: tiles_all only."""
+    for p in Path(store).iterdir():
+        if p.name != "tiles_all":
+            shutil.rmtree(p) if p.is_dir() else p.unlink()
+
+
+def test_fast_build_equals_loop_build_tiny_bounds(spark, pages, tileset, tmp_path):
+    """A one-tile universe at mid: the empty id is NOT a dup there, and
+    tiles_all holds rows outside the bounds (in the map at z <= mid,
+    not below). build_fast == build()."""
+    feats = build_features(pages).cache()
+    frames = make_point_layer_frames(feats, tileset)
+    cfg = dict(minzoom=0, maxzoom=4, mid_zoom=2, bounds_lonlat=(5.0, 45.0, 6.0, 46.0))
+    slow = TileBuild(spark, frames, BuildConfig(store_dir=str(tmp_path / "s"), **cfg))
+    fast = TileBuild(spark, frames, BuildConfig(store_dir=str(tmp_path / "f"), **cfg))
+    slow.build()
+    fast.build_fast()
+    empty_id = hashlib.md5(empty_tile_blob(None)).hexdigest()
+    assert fast.read_tile_map(2).where(F.col("tile_id") == empty_id).count() < 20
+    m1, i1 = _store_contents(slow)
+    m2, i2 = _store_contents(fast)
+    assert m1 == m2
+    for tid in {r[3] for r in m2}:
+        assert i1[tid] == i2[tid]
+
+
+def test_fast_phase2_job_count_fixed(spark, pages, tileset, tmp_path):
+    """Phase 2 issues the same, small number of Spark jobs whatever
+    maxzoom is (the per-zoom walk issued 7 more per zoom)."""
+    feats = build_features(pages).cache()
+    frames = make_point_layer_frames(feats, tileset)
+    sc = spark.sparkContext
+    jobs = {}
+    for mz in (4, 6):
+        cfg = BuildConfig(store_dir=str(tmp_path / f"j{mz}"), minzoom=0,
+                          maxzoom=mz, mid_zoom=2)
+        TileBuild(spark, frames, cfg).build_fast()
+        _keep_phase1(cfg.store_dir)
+        group = f"phase2-jobs-{mz}-{id(tmp_path)}"
+        sc.setJobGroup(group, "build_fast phase 2 only")
+        try:
+            summary = TileBuild(spark, frames, cfg).build_fast()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert summary["tiles"] == sum(4**z for z in range(mz + 1))
+        jobs[mz] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs[4] == jobs[6] <= 12, jobs
+
+
+def test_fast_build_resume_after_phase1(spark, pages, tileset, tmp_path):
+    """A crash anywhere in phase 2 (tile_map and the manifest lost)
+    resumes from tiles_all to the identical store; a finished store is
+    not rebuilt."""
+    feats = build_features(pages).cache()
+    frames = make_point_layer_frames(feats, tileset)
+    cfg = BuildConfig(store_dir=str(tmp_path / "r"), minzoom=0, maxzoom=4,
+                      mid_zoom=2, gzip_level=6)
+    first = TileBuild(spark, frames, cfg)
+    s1 = first.build_fast()
+    before = _store_contents(first)
+    shutil.rmtree(Path(cfg.store_dir) / "tile_map")
+    (Path(cfg.store_dir) / "_manifest.json").unlink()
+    again = TileBuild(spark, frames, cfg)
+    s2 = again.build_fast()
+    assert _store_contents(again) == before
+    assert s2["zooms"] == s1["zooms"]
+    assert [z["n_imputed"] + z["n_generated"] for z in s2["zooms"]] == [
+        4**z for z in range(5)]
+    assert s2["phase1_wall_s"] < s1["phase1_wall_s"]  # phase 1 not redone
+    assert TileBuild(spark, frames, cfg).build_fast() == s2
+
+
+def test_fast_build_config_fingerprint(spark, pages, tileset, tmp_path):
+    """The manifest records the config fingerprint: another config on
+    the same store raises; a store whose tiles_all has no recorded
+    fingerprint (written by another writer) is resumed."""
+    feats = build_features(pages).cache()
+    frames = make_point_layer_frames(feats, tileset)
+    store = tmp_path / "fp"
+    cfg = BuildConfig(store_dir=str(store), minzoom=0, maxzoom=3, mid_zoom=1)
+    TileBuild(spark, frames, cfg).build_fast()
+    specs = [s for s, _ in frames]
+    recorded = json.loads((store / "_manifest.json").read_text())["fingerprint"]
+    assert recorded == cfg.fingerprint(specs)
+    for other in (dict(gzip_level=6), dict(maxzoom=4), dict(mid_zoom=2),
+                  dict(bounds_lonlat=(0.0, 0.0, 10.0, 10.0))):
+        kw = {**dict(store_dir=str(store), minzoom=0, maxzoom=3, mid_zoom=1), **other}
+        with pytest.raises(ValueError, match="another config"):
+            TileBuild(spark, frames, BuildConfig(**kw)).build_fast()
+    _keep_phase1(store)
+    s = TileBuild(spark, frames, cfg).build_fast()
+    assert s["tiles"] == sum(4**z for z in range(4))
+
+    # a post_assign hook is hashed by qualified name, not by repr
+    import dataclasses
+
+    def make_hook():
+        def hook(df):
+            return df
+        return hook
+
+    def other_hook(df):
+        return df
+
+    fp = [cfg.fingerprint([dataclasses.replace(specs[0], post_assign=h)])
+          for h in (make_hook(), make_hook(), other_hook)]
+    assert fp[0] == fp[1] != fp[2]
