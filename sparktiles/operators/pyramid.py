@@ -8,7 +8,8 @@ Reference counterparts:
 - MID_ZOOM driver loop (T4) -> bin/generate-tiles:100-117; the
                                one-pass form of the walk (walk_input /
                                impute_summary / replay_impute /
-                               emit_tile_map) is what build_fast runs
+                               emit_map_blocks / expand_map_blocks)
+                               is what build_fast runs
 - tile_multiplier (T5)      -> bin/tile_multiplier:24-54
 
 Scale design notes (100 TB / 1000 executors):
@@ -333,13 +334,18 @@ def impute_children(parents: DataFrame, dup_keys: DataFrame) -> tuple[DataFrame,
 # "root"), i.e. one morton interval per deeper zoom (Raster Intervals,
 # SIGMOD 2023). Only the per-zoom dup SETS are global; given them, each
 # mid-zoom subtree walks on its own. So build_fast runs:
-#   walk_input     tiles_all keys + universe markers, grouped per
-#                  low-zoom tile / mid-zoom subtree
-#   impute_summary one kernel pass -> per (zoom, ancestor pattern,
-#                  candidate id) counts, collected to the driver
-#   replay_impute  the driver replays the walk on those counts: the dup
-#                  set of every zoom + per-zoom stats
-#   emit_tile_map  one kernel pass emits every map row, z0..max
+#   walk_input       tiles_all keys + universe markers, grouped per
+#                    low-zoom tile / mid-zoom subtree
+#   impute_summary   one kernel pass -> per (zoom, ancestor pattern,
+#                    candidate id) counts, collected to the driver
+#   replay_impute    the driver replays the walk on those counts: the
+#                    dup set of every zoom + per-zoom stats
+#   emit_map_blocks  one kernel pass emits the map as blocks: a root
+#                    is ONE row standing for its whole subtree, so the
+#                    kernel's output is O(tiles_all rows), not O(map)
+#   expand_map_blocks  the JVM explodes the blocks into map rows in
+#                    the same stage as the map write (spillable, one
+#                    task per walk_input partition)
 
 _M29 = (1 << 29) - 1
 
@@ -351,7 +357,7 @@ def _pack(z, x, y):
 
 
 def walk_input(tiles: DataFrame, universe: DataFrame, mid: int,
-               empty_id: str) -> DataFrame:
+               empty_id: str, n_parts: int | None = None) -> DataFrame:
     """The impute walk's input: every tiles_all key (z, x, y, tile_id)
     plus a NULL-id marker row per universe tile at z <= mid, keyed
     g = pack(min(z, mid), x >> d, y >> d) with d = z - min(z, mid). A
@@ -363,8 +369,12 @@ def walk_input(tiles: DataFrame, universe: DataFrame, mid: int,
     first turns dup at zoom z through rows generated at z, and no more
     rows are generated than tiles_all holds there.
 
-    Hash-partitioned on g and sorted (g, z, x, y): both kernels below
-    read it, so the caller checkpoints it."""
+    Hash-partitioned on g into `n_parts` partitions (None: AQE sizes
+    them by bytes) and sorted (g, z, x, y): both kernels below read
+    it, so the caller checkpoints it. The map write runs one task per
+    partition, and a mid-zoom subtree expands to 4^(maxzoom - mid)
+    times its input, so a deep build passes a count sized by map rows
+    rather than by these few input bytes."""
     th = F.when(F.col("z") > 12, F.lit(EMPTY_TILE_DUP_THRESHOLD_HIGH)) \
         .otherwise(F.lit(EMPTY_TILE_DUP_THRESHOLD))
     # one exchange: hashing on tile_id alone clusters both windows
@@ -384,8 +394,10 @@ def walk_input(tiles: DataFrame, universe: DataFrame, mid: int,
     g = (F.shiftleft(gz.cast("long"), 58)
          .bitwiseOR(F.shiftleft(F.call_function("shiftright", F.col("x"), d), 29))
          .bitwiseOR(F.call_function("shiftright", F.col("y"), d)))
-    return (keyed.unionByName(markers).withColumn("g", g)
-            .repartition("g").sortWithinPartitions("g", "z", "x", "y"))
+    keyed = keyed.unionByName(markers).withColumn("g", g)
+    keyed = (keyed.repartition(n_parts, "g") if n_parts
+             else keyed.repartition("g"))
+    return keyed.sortWithinPartitions("g", "z", "x", "y")
 
 
 def _group(arrs, s: int, e: int):
@@ -423,23 +435,20 @@ def _ancestor_codes(z, x, y, keys, code, mid: int, maxzoom: int):
 def impute_summary(part: DataFrame, mid: int, maxzoom: int,
                    empty_id: str) -> list:
     """One pass over walk_input -> the summary replay_impute needs:
-    rows (z, x, y, pat, own, n).
+    rows (z, pat, own, n).
 
     - z >= mid: n tiles_all rows at zoom z inside the map's domain whose
       own id is `own` (a candidate; None otherwise) and whose candidate
       ancestors at zooms mid..z-1 are `pat` ("j:id,..."; a tile missing
       from tiles_all counts as the empty id). A universe tile at mid
-      missing from tiles_all is one (mid, "", empty id) row. x = y = -1.
+      missing from tiles_all is one (mid, "", empty id) row. Rows under
+      a mid tile outside the domain are never in the map: skipped.
     - z < mid: one row per map tile (pat "", own as above or the empty id).
-    - tiles that image bookkeeping needs by position carry x, y, n = 1:
-      a non-candidate row with a candidate ancestor (imputed away if an
-      ancestor turns out a dup root), and every row under a mid tile
-      outside the domain (pat "X", never in the map).
-    Counts are merged per task, so the driver collects few rows."""
+    Counts are merged per task, so the driver collects a few rows per
+    task and distinct pattern, whatever the data size."""
     from sparktiles.operators.mvt import grouped_map_sorted
 
     acc: Counter = Counter()
-    singles: list = []
 
     def fn(arrs, s, e):
         gz, gx, gy, marker, z, x, y, ids, cand, keys = _group(arrs, s, e)
@@ -448,9 +457,6 @@ def impute_summary(part: DataFrame, mid: int, maxzoom: int,
             acc[(int(gz), "", own)] += 1
             return []
         if not (marker or (z == mid).any()):
-            singles.extend(
-                (int(z[i]), int(x[i]), int(y[i]), "X",
-                 ids[i] if cand[i] else None, 1) for i in range(len(z)))
             return []
         if not (z == mid).any():
             acc[(mid, "", empty_id)] += 1
@@ -459,31 +465,22 @@ def impute_summary(part: DataFrame, mid: int, maxzoom: int,
         code = np.array([lut[c] if k else -1 for c, k in zip(ids, cand)],
                         dtype=np.int64)
         anc = _ancestor_codes(z, x, y, keys, code, mid, maxzoom)
-
-        def pat(row):
-            return ",".join(f"{mid + j}:{names[c]}"
-                            for j, c in enumerate(row) if c >= 0)
-
-        single = (code < 0) & (anc >= 0).any(axis=1)
-        for i in np.flatnonzero(single):
-            singles.append((int(z[i]), int(x[i]), int(y[i]),
-                            pat(anc[i]), None, 1))
-        m = np.column_stack([z, code, anc])[~single]
-        uniq, cnt = np.unique(m, axis=0, return_counts=True)
+        uniq, cnt = np.unique(np.column_stack([z, code, anc]), axis=0,
+                              return_counts=True)
         for row, n in zip(uniq, cnt):
             own = names[row[1]] if row[1] >= 0 else None
-            acc[(int(row[0]), pat(row[2:]), own)] += int(n)
+            pat = ",".join(f"{mid + j}:{names[c]}"
+                           for j, c in enumerate(row[2:]) if c >= 0)
+            acc[(int(row[0]), pat, own)] += int(n)
         return []
 
     def flush():
-        rows = [(z, -1, -1, p, own, n) for (z, p, own), n in acc.items()]
-        rows += singles
+        rows = [(z, p, own, n) for (z, p, own), n in acc.items()]
         acc.clear()
-        singles.clear()
         return rows
 
     return grouped_map_sorted(
-        part, ["g"], fn, "z int, x long, y long, pat string, own string, n long",
+        part, ["g"], fn, "z int, pat string, own string, n long",
         partitioned=True, on_end=flush).collect()
 
 
@@ -501,29 +498,16 @@ def replay_impute(summary, minzoom: int, mid: int, maxzoom: int,
 
     Returns {"dups": {z: frozenset of dup ids of the map at z}, for
     z in [mid, maxzoom), "zooms": per-zoom n_tiles / n_nonempty /
-    n_imputed / n_generated, "unused": candidate ids no map row uses,
-    "blocked": (z, x, y) of tiles_all rows the map does not use whose
-    id may be used elsewhere}."""
+    n_imputed / n_generated}."""
     at: dict[int, Counter] = {}
-    singles, out_of_domain, seen = [], [], set()
-    for z, x, y, p, own, n in summary:
-        if own is not None and own != empty_id:
-            seen.add(own)
-        if p == "X":
-            out_of_domain.append((z, x, y))
-            continue
-        key = (_parse_pat(p), own)
-        at.setdefault(z, Counter())[key] += n
-        if x >= 0:
-            singles.append((z, x, y, key[0]))
+    for z, p, own, n in summary:
+        at.setdefault(z, Counter())[(_parse_pat(p), own)] += n
 
-    used: set = set()
     dups: dict[int, frozenset] = {}
     zooms = []
     for z in range(minzoom, mid):
         c = at.get(z, Counter())
         n = sum(c.values())
-        used.update(own for (_, own) in c if own is not None)
         zooms.append({"z": z, "n_tiles": n,
                       "n_nonempty": n - c[((), empty_id)],
                       "n_imputed": 0, "n_generated": n})
@@ -562,97 +546,149 @@ def replay_impute(summary, minzoom: int, mid: int, maxzoom: int,
             n_ne += n if own != empty_id else 0
             if own is not None:
                 gen[own] += n
-        used.update(gen)
         prev = dups.get(z - 1, frozenset())
         dups[z] = prev | {c for c, n in gen.items() if n >= dup_threshold(z)}
         zooms.append({"z": z, "n_tiles": n_tiles, "n_nonempty": n_ne,
                       "n_imputed": n_imp, "n_generated": n_tiles - n_imp})
-    blocked = out_of_domain + [(z, x, y) for z, x, y, p in singles
-                               if root(p) is not None]
     dups.pop(maxzoom, None)
-    return {"dups": dups, "zooms": zooms, "unused": seen - used,
-            "blocked": blocked}
+    return {"dups": dups, "zooms": zooms}
 
 
-def emit_tile_map(part: DataFrame, dups: dict, mid: int, maxzoom: int,
-                  empty_id: str, stats_acc=None) -> DataFrame:
-    """Every map row (zoom_level, tile_column, tile_row, tile_id) from
-    walk_input in one pass: a low-zoom tile takes its tiles_all id or
-    the empty id; a mid-zoom subtree walks down zoom by zoom, children
-    of a tile whose id is in dups[z] inheriting it, the others taking
+BLOCK_SCHEMA = ("zoom_level int, tile_column long, tile_row long, "
+                "tile_id string, deep boolean")
+
+
+def block_stats(blocks: list, maxzoom: int, empty_id: str, stats: dict):
+    """Fold map blocks (zoom_level, tile_column, tile_row, tile_id,
+    deep) into per-zoom lineage stats {z: [rows, non-empty rows, min x,
+    max x, min y, max y, set of ids]} of the rows they expand to. A
+    deep block at zoom z covers 4^d tiles at zoom z + d, x in
+    [x << d, ((x + 1) << d) - 1] and likewise y."""
+    if not blocks:
+        return
+    z, x, y, ids, deep = (np.array(c) for c in zip(*blocks))
+    z, x, y = z.astype(np.int64), x.astype(np.int64), y.astype(np.int64)
+    ids = ids.astype(object)
+    ne = ids != empty_id
+    for d in range(maxzoom - int(z.min()) + 1):
+        live = np.ones(len(z), bool) if d == 0 else deep & (z + d <= maxzoom)
+        if not live.any():
+            break
+        for zz in np.unique(z[live] + d):
+            sel = live & (z + d == zz)
+            st = stats.setdefault(int(zz), [0, 0, None, None, None, None, set()])
+            n = int(sel.sum())
+            st[0] += n << (2 * d)
+            st[1] += int(ne[sel].sum()) << (2 * d)
+            for k, v, f in ((2, (x[sel] << d).min(), min),
+                            (3, ((x[sel] + 1) << d).max() - 1, max),
+                            (4, (y[sel] << d).min(), min),
+                            (5, ((y[sel] + 1) << d).max() - 1, max)):
+                st[k] = int(v) if st[k] is None else f(st[k], int(v))
+            st[6].update(ids[sel])
+
+
+def emit_map_blocks(part: DataFrame, dups: dict, mid: int, maxzoom: int,
+                    empty_id: str, stats_acc=None) -> DataFrame:
+    """The map as blocks (BLOCK_SCHEMA) from walk_input in one pass: a
+    low-zoom tile takes its tiles_all id or the empty id; a mid-zoom
+    subtree walks down zoom by zoom. A tile whose id is in dups[z] is a
+    root: it is emitted once with deep = true (its whole subtree down to
+    maxzoom inherits its id) and not walked further; its siblings take
     their tiles_all id or the empty id. Subtrees under a mid tile
-    outside the domain emit nothing.
+    outside the domain emit nothing. Roots only sit under non-roots, so
+    a group emits at most ~5x its tiles_all rows plus its marker.
 
     stats_acc, if given, is an accumulator that receives, per task and
     zoom, {(partition id, z): (rows, non-empty rows, min x, max x,
-    min y, max y, distinct ids)} — one task writes one file per zoom,
-    so these are the per-file lineage rows of the map's write."""
+    min y, max y, distinct ids)} of the expanded rows: the lineage rows
+    of the files a map write in the same task writes."""
     from sparktiles.operators.mvt import grouped_map_sorted
 
     quad_x = np.array([0, 1, 0, 1], dtype=np.int64)
     quad_y = np.array([0, 0, 1, 1], dtype=np.int64)
     stats: dict = {}
-
-    def note(z, xs, ys, names, codes, ecode):
-        st = stats.setdefault(z, [0, 0, None, None, None, None, set()])
-        st[0] += len(codes)
-        st[1] += int((codes != ecode).sum())
-        for k, v, f in ((2, xs.min(), min), (3, xs.max(), max),
-                        (4, ys.min(), min), (5, ys.max(), max)):
-            st[k] = int(v) if st[k] is None else f(st[k], int(v))
-        st[6].update(names[np.unique(codes)])
+    pending: list = []
 
     def fn(arrs, s, e):
         gz, gx, gy, marker, z, x, y, ids, _, keys = _group(arrs, s, e)
         if gz < mid:
-            tile = ids[0] if len(ids) else empty_id
-            if stats_acc is not None:
-                note(int(gz), np.array([gx]), np.array([gy]),
-                     np.array([tile], dtype=object), np.array([0]),
-                     0 if tile == empty_id else -1)
-            return [(int(gz), int(gx), int(gy), tile)]
-        at_mid = z == mid
-        if not (marker or at_mid.any()):
-            return []
-        names, inv = np.unique(np.append(ids, empty_id).astype(str),
-                               return_inverse=True)
-        names = names.astype(object)
-        code, ecode = inv[:-1], int(inv[-1])
-        px, py = np.array([gx]), np.array([gy])
-        pc = code[at_mid] if at_mid.any() else np.array([ecode])
-        rows = []
-        for j in range(mid, maxzoom + 1):
-            rows.extend(zip([j] * len(pc), px.tolist(), py.tolist(),
-                            names[pc].tolist()))
-            if stats_acc is not None:
-                note(j, px, py, names, pc, ecode)
-            if j == maxzoom:
-                break
-            dj = dups.get(j, ())
-            inherit = np.repeat(np.array([n in dj for n in names])[pc], 4)
-            cx = np.repeat(px * 2, 4) + np.tile(quad_x, len(px))
-            cy = np.repeat(py * 2, 4) + np.tile(quad_y, len(py))
-            ck = _pack(np.full(len(cx), j + 1), cx, cy)
-            i = np.minimum(np.searchsorted(keys, ck), max(len(keys) - 1, 0))
-            hit = (keys[i] == ck) if len(keys) else np.zeros(len(ck), bool)
-            own = np.where(hit, code[i] if len(keys) else ecode, ecode)
-            px, py, pc = cx, cy, np.where(inherit, np.repeat(pc, 4), own)
+            rows = [(int(gz), int(gx), int(gy),
+                     ids[0] if len(ids) else empty_id, False)]
+        else:
+            at_mid = z == mid
+            if not (marker or at_mid.any()):
+                return []
+            names, inv = np.unique(np.append(ids, empty_id).astype(str),
+                                   return_inverse=True)
+            names = names.astype(object)
+            code, ecode = inv[:-1], int(inv[-1])
+            px, py = np.array([gx]), np.array([gy])
+            pc = code[at_mid] if at_mid.any() else np.array([ecode])
+            rows = []
+            for j in range(mid, maxzoom + 1):
+                dj = dups.get(j, ())
+                deep = np.array([n in dj for n in names])[pc]
+                rows.extend(zip([j] * len(pc), px.tolist(), py.tolist(),
+                                names[pc].tolist(), deep.tolist()))
+                walk = ~deep
+                if j == maxzoom or not walk.any():
+                    break
+                px, py, pc = px[walk], py[walk], pc[walk]
+                cx = np.repeat(px * 2, 4) + np.tile(quad_x, len(px))
+                cy = np.repeat(py * 2, 4) + np.tile(quad_y, len(py))
+                ck = _pack(np.full(len(cx), j + 1), cx, cy)
+                i = np.minimum(np.searchsorted(keys, ck), max(len(keys) - 1, 0))
+                hit = (keys[i] == ck) if len(keys) else np.zeros(len(ck), bool)
+                px, py = cx, cy
+                pc = np.where(hit, code[i] if len(keys) else ecode, ecode)
+        if stats_acc is not None:
+            pending.extend(rows)
+            if len(pending) >= 65536:
+                block_stats(pending, maxzoom, empty_id, stats)
+                pending.clear()
         return rows
 
     def flush():
-        if stats_acc is not None and stats:
+        if stats_acc is not None:
             from pyspark import TaskContext
 
+            block_stats(pending, maxzoom, empty_id, stats)
+            pending.clear()
             pid = TaskContext.get().partitionId()
             stats_acc.add({(pid, z): tuple(st[:6]) + (len(st[6]),)
                            for z, st in stats.items()})
             stats.clear()
         return []
 
-    return grouped_map_sorted(
-        part, ["g"], fn,
-        "zoom_level int, tile_column long, tile_row long, tile_id string",
-        partitioned=True, on_end=flush)
+    return grouped_map_sorted(part, ["g"], fn, BLOCK_SCHEMA,
+                              partitioned=True, on_end=flush)
+
+
+def expand_map_blocks(blocks: DataFrame, maxzoom: int) -> DataFrame:
+    """Map rows (zoom_level, tile_column, tile_row, tile_id) from
+    emit_map_blocks output: a deep block at zoom z becomes its 4^d
+    descendants at every zoom z + d <= maxzoom. Generator expressions
+    only — rows stream through the task that writes them."""
+    levels = blocks.select(
+        "tile_id", F.col("tile_column").alias("bx"), F.col("tile_row").alias("by"),
+        F.col("zoom_level").alias("bz"),
+        F.explode(F.sequence(
+            F.col("zoom_level"),
+            F.when(F.col("deep"), F.lit(maxzoom)).otherwise(F.col("zoom_level"))
+        )).alias("zoom_level"))
+    d = (F.col("zoom_level") - F.col("bz")).cast("int")
+
+    def span(c):
+        return F.sequence(F.call_function("shiftleft", F.col(c), d),
+                          F.call_function("shiftleft", F.col(c) + 1, d) - 1)
+
+    return (levels
+            .select("zoom_level", "tile_id",
+                    F.explode(span("bx")).alias("tile_column"),
+                    span("by").alias("ys"))
+            .select("zoom_level", "tile_column",
+                    F.explode("ys").alias("tile_row"), "tile_id"))
 
 
 def tile_multiplier(changed: DataFrame, minzoom: int, maxzoom: int) -> DataFrame:

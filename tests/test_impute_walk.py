@@ -1,5 +1,5 @@
 """The one-pass impute walk (walk_input -> impute_summary ->
-replay_impute -> emit_tile_map) against a plain-Python replay of the
+replay_impute -> emit_map_blocks -> expand_map_blocks) against a plain-Python replay of the
 reference walk (impute_children zoom by zoom, mbtile_tools.py:106-196)
 on random tiles_all key sets: heavy ids that turn dup at different
 zooms, rows carrying the empty id, rows under tiles that tiles_all does
@@ -12,8 +12,10 @@ from collections import Counter
 import pytest
 
 from sparktiles.operators.pyramid import (
+    block_stats,
     dup_threshold,
-    emit_tile_map,
+    emit_map_blocks,
+    expand_map_blocks,
     impute_summary,
     replay_impute,
     walk_input,
@@ -89,11 +91,13 @@ def random_case(seed, minzoom, mid, maxzoom, shadow=False):
     return tiles, universe
 
 
-@pytest.mark.parametrize("seed,minzoom,mid,maxzoom,shadow", [
-    (0, 0, 2, 5, False), (1, 1, 3, 5, False), (2, 0, 0, 4, False),
-    (6, 1, 3, 5, False), (3, 0, 3, 5, True), (4, 2, 3, 5, True),
+@pytest.mark.parametrize("seed,minzoom,mid,maxzoom,shadow,n_parts", [
+    (0, 0, 2, 5, False, None), (1, 1, 3, 5, False, None),
+    (2, 0, 0, 4, False, None), (6, 1, 3, 5, False, 5),
+    (3, 0, 3, 5, True, None), (4, 2, 3, 5, True, 3),
 ])
-def test_walk_equals_reference(spark, seed, minzoom, mid, maxzoom, shadow):
+def test_walk_equals_reference(spark, seed, minzoom, mid, maxzoom, shadow,
+                               n_parts):
     tiles, universe = random_case(seed, minzoom, mid, maxzoom, shadow)
     tdf = spark.createDataFrame(
         [(z, x, y, t) for (z, x, y), t in tiles.items()],
@@ -101,10 +105,14 @@ def test_walk_equals_reference(spark, seed, minzoom, mid, maxzoom, shadow):
     udf = spark.createDataFrame(
         [(z, x, y) for z, ps in universe.items() for x, y in ps],
         "z int, x long, y long")
-    part = walk_input(tdf, udf, mid, E).localCheckpoint(eager=False)
+    part = walk_input(tdf, udf, mid, E, n_parts).localCheckpoint(eager=False)
+    if n_parts:
+        assert part.rdd.getNumPartitions() == n_parts
     summary = impute_summary(part, mid, maxzoom, E)
     plan = replay_impute(summary, minzoom, mid, maxzoom, E)
-    got = emit_tile_map(part, plan["dups"], mid, maxzoom, E).collect()
+    blocks = emit_map_blocks(part, plan["dups"], mid, maxzoom, E) \
+        .localCheckpoint(eager=True)
+    got = expand_map_blocks(blocks, maxzoom).collect()
 
     want = reference_walk(tiles, universe, minzoom, mid, maxzoom)
     rows = [(r.zoom_level, r.tile_column, r.tile_row) for r in got]
@@ -112,6 +120,14 @@ def test_walk_equals_reference(spark, seed, minzoom, mid, maxzoom, shadow):
     assert {(r.zoom_level, r.tile_column, r.tile_row): r.tile_id
             for r in got} == {(z, x, y): t for z, m in want.items()
                               for (x, y), t in m.items()}
+
+    # the kernel's output grows with tiles_all, not with the map: a
+    # root is one row, and roots only sit under non-roots
+    brows = blocks.collect()
+    n_marker = sum(len(ps) for ps in universe.values())
+    assert len(brows) <= 5 * len(tiles) + n_marker
+    if shadow:  # 24 dup roots at mid: their subtrees are 24 rows
+        assert len(brows) < len(got) - 24 * 4
 
     # per-zoom stats match the reference walk's counts
     for st in plan["zooms"]:
@@ -127,11 +143,18 @@ def test_walk_equals_reference(spark, seed, minzoom, mid, maxzoom, shadow):
                 c in dups for c in parents.values())
         assert st["n_generated"] == st["n_tiles"] - st["n_imputed"]
 
-    # images: tiles_all rows kept by the unused-id and blocked-position
-    # filters carry exactly the non-empty ids the map uses
-    blocked = set(plan["blocked"])
-    kept = {t for k, t in tiles.items()
-            if t != E and t not in plan["unused"] and k not in blocked}
-    used = {t for m in want.values() for t in m.values()} - {E}
-    assert kept == used
-    assert ("s" * 32 in plan["unused"]) == shadow
+    # lineage stats folded from the blocks == those of the rows
+    folded: dict = {}
+    block_stats([tuple(r) for r in brows], maxzoom, E, folded)
+    for z, m in want.items():
+        xs = [x for x, _ in m]
+        ys = [y for _, y in m]
+        assert folded[z][:6] == [len(m), sum(t != E for t in m.values()),
+                                 min(xs), max(xs), min(ys), max(ys)]
+        assert folded[z][6] == set(m.values())
+
+    # images: the blocks carry exactly the ids the map uses, and the
+    # shadowed heavy id (imputed away everywhere) is not among them
+    used = {r.tile_id for r in brows}
+    assert used == {t for m in want.values() for t in m.values()}
+    assert ("s" * 32 not in used) or not shadow

@@ -430,3 +430,67 @@ def test_fast_build_config_fingerprint(spark, pages, tileset, tmp_path):
     fp = [cfg.fingerprint([dataclasses.replace(specs[0], post_assign=h)])
           for h in (make_hook(), make_hook(), other_hook)]
     assert fp[0] == fp[1] != fp[2]
+
+
+def _check_lineage_files(b, empty_id):
+    """Every map file has one lineage row, and its counts and extents
+    are those of the file's rows."""
+    import pyarrow.parquet as pq
+    from urllib.parse import unquote, urlparse
+
+    def path(uri):
+        return unquote(urlparse(uri).path)
+
+    lin = b.read_lineage().collect()
+    files = sorted(str(p.resolve()) for p in Path(b._map_root()).glob("zoom_level=*/part-*"))
+    assert sorted(path(r.partition_file) for r in lin) == files
+    for r in lin:
+        t = pq.read_table(path(r.partition_file)).to_pydict()
+        ids = t["tile_id"]
+        assert (r.n_rows, r.n_nonempty, r.n_distinct_ids) == (
+            len(ids), sum(i != empty_id for i in ids), len(set(ids)))
+        assert (r.min_x, r.max_x, r.min_y, r.max_y) == (
+            min(t["tile_column"]), max(t["tile_column"]),
+            min(t["tile_row"]), max(t["tile_row"]))
+
+
+def test_fast_build_many_tasks_and_lineage(spark, pages, tileset, tmp_path,
+                                           monkeypatch):
+    """A map too large for one task is written by one task per few
+    mid-zoom subtrees (here forced by a tiny rows-per-task budget):
+    same map and images as build(), one lineage row per file, and the
+    per-file lineage stays exact when spark.sql.files.maxRecordsPerFile
+    splits a task's output (the rows are then read back)."""
+    import sparktiles.plans.pipeline as pl
+
+    feats = build_features(pages).cache()
+    frames = make_point_layer_frames(feats, tileset)
+    cfg = dict(minzoom=0, maxzoom=5, mid_zoom=2)
+    slow = TileBuild(spark, frames, BuildConfig(store_dir=str(tmp_path / "s"), **cfg))
+    slow.build()
+    fast = TileBuild(spark, frames, BuildConfig(store_dir=str(tmp_path / "f"), **cfg))
+    assert fast._walk_partitions(2) is None  # 1,360 rows: AQE decides
+    deep = TileBuild(spark, frames, BuildConfig(
+        store_dir=str(tmp_path / "d"), minzoom=0, maxzoom=14, mid_zoom=8))
+    assert deep._walk_partitions(8) == 179  # 65,536 x 5,461 rows / 2M
+    monkeypatch.setattr(pl, "MAP_ROWS_PER_TASK", 50)
+    assert fast._walk_partitions(2) == 16  # capped at one per mid subtree
+    fast.build_fast()
+    m1, i1 = _store_contents(slow)
+    m2, i2 = _store_contents(fast)
+    assert m1 == m2
+    assert set(i2) == {r[3] for r in m2}
+    for tid in i2:
+        assert i1[tid] == i2[tid]
+    empty_id = hashlib.md5(empty_tile_blob(None)).hexdigest()
+    assert len(list(Path(fast._map_path(5)).glob("part-*"))) > 1
+    _check_lineage_files(fast, empty_id)
+
+    split = TileBuild(spark, frames, BuildConfig(store_dir=str(tmp_path / "m"), **cfg))
+    spark.conf.set("spark.sql.files.maxRecordsPerFile", "100")
+    try:
+        split.build_fast()
+    finally:
+        spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    assert _store_contents(split)[0] == m1
+    _check_lineage_files(split, empty_id)
