@@ -227,17 +227,6 @@ def get_basic_names(tags) -> Column:
     return F.map_from_entries(pairs)
 
 
-def update_tags(tags, basic_names=True) -> Column:
-    """delete_empty_keys(tags) || get_basic_names(tags) (reference
-    zzz_language.sql:157-166); merge_wiki_names is a join — see
-    operators.joins.merge_wiki_names_join."""
-    t = F.col(tags) if isinstance(tags, str) else tags
-    out = delete_empty_keys(t)
-    if basic_names:
-        out = F.map_concat(out, get_basic_names(t))
-    return out
-
-
 # --------------------------------------------------------- LabelGrid / LineLabel
 
 def label_grid_exprs(x, y, grid_size) -> tuple[Column, Column]:

@@ -96,12 +96,6 @@ def tile_bbox_exprs(z, x, y) -> tuple[Column, Column, Column, Column]:
     return (xmin, ymax - res, xmin + res, ymax)
 
 
-def tile_buffer_meters(z: float, buffer_px: float) -> float:
-    """ST_Expand distance for a buffer of `buffer_px` pixels of a 256px
-    tile at zoom z (reference sqltomvt.py:226-242): world*buffer/256/2^z."""
-    return WORLD_MERC_WIDTH * buffer_px / PIXEL_SCALE / 2.0 ** z
-
-
 def buffered_tile_bbox_exprs(z, x, y, buffer_px: float) -> tuple[Column, ...]:
     xmin, ymin, xmax, ymax = tile_bbox_exprs(z, x, y)
     if buffer_px <= 0:
@@ -158,18 +152,6 @@ def mercator_y_expr(lat) -> Column:
     )
 
 
-def merc_to_tile_exprs(x, y, zoom) -> tuple[Column, Column]:
-    """EPSG:3857 meters -> tile coords at zoom (y grows downward)."""
-    x, y, zoom = _c(x), _c(y), _c(zoom)
-    n = F.pow(F.lit(2.0), zoom.cast("double"))
-    xt = F.floor((x + F.lit(HALF_WORLD)) / F.lit(WORLD_MERC_WIDTH) * n)
-    yt = F.floor((F.lit(HALF_WORLD) - y) / F.lit(WORLD_MERC_WIDTH) * n)
-    top = (n - F.lit(1.0)).cast("long")
-    xt = F.greatest(F.lit(0).cast("long"), F.least(xt.cast("long"), top))
-    yt = F.greatest(F.lit(0).cast("long"), F.least(yt.cast("long"), top))
-    return xt, yt
-
-
 # ------------------------------------------------------------- cell ids
 
 def quadkey_expr(z, x, y) -> Column:
@@ -208,14 +190,6 @@ def cell_id_expr(z, x, y) -> Column:
         .bitwiseOR(F.shiftleft(x.cast("long"), 29))
         .bitwiseOR(y.cast("long"))
     )
-
-
-def cell_unpack_exprs(cell) -> tuple[Column, Column, Column]:
-    cell = _c(cell)
-    z = F.shiftright(cell, 58).bitwiseAND(F.lit((1 << 6) - 1))
-    x = F.shiftright(cell, 29).bitwiseAND(F.lit((1 << 29) - 1))
-    y = cell.bitwiseAND(F.lit((1 << 29) - 1))
-    return z.cast("int"), x.cast("long"), y.cast("long")
 
 
 def coarse_cell_expr(z, x, y, coarse_z: int = 5) -> Column:

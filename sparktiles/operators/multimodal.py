@@ -65,15 +65,6 @@ def _decode_image(payload: bytes, deterministic_fake: bool):
     return arr.reshape(8, 8).astype(np.float32) / 255.0
 
 
-def _decode_audio(payload: bytes, deterministic_fake: bool):
-    if not deterministic_fake:
-        raise NotImplementedError(
-            "audio decode requires soundfile/ffmpeg (not in this container); "
-            "pass deterministic_fake=True for the seeded stand-in")
-    arr = np.frombuffer(payload[:256].ljust(256, b"\0"), dtype=np.uint8)
-    return (arr.astype(np.float32) - 128.0) / 128.0
-
-
 def image_features(media: DataFrame, deterministic_fake: bool = False) -> DataFrame:
     """Decode + feature-extract per image: mean/std intensity + an 8-dim
     row-mean embedding. Arrow-batched mapInPandas; the batch shape

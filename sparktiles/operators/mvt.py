@@ -1499,18 +1499,3 @@ def assemble_tiles(layer_blobs: DataFrame, gzip_level: int | None = None) -> Dat
         "z int, x long, y long, mvt binary, tile_id string",
         sort_extra=["layer_index"],
     )
-
-
-def dedup_tiles(tiles: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """mbtiles normalization (reference mbtile_tools.py:555-571):
-    tile_map(z,x,y,tile_id) + tile_images(tile_id, tile_data) distinct."""
-    tile_map = tiles.select(
-        F.col("z").alias("zoom_level"),
-        F.col("x").alias("tile_column"),
-        F.col("y").alias("tile_row"),
-        "tile_id",
-    )
-    images = tiles.select("tile_id", F.col("mvt").alias("tile_data")).dropDuplicates(
-        ["tile_id"]
-    )
-    return tile_map, images

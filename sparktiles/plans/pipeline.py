@@ -67,6 +67,7 @@ from sparktiles.operators.pyramid import (
     walk_input,
 )
 from sparktiles.plans.config import TilesetDef
+from sparktiles.session import codegen_compiles
 
 MAP_SCHEMA = "zoom_level int, tile_column long, tile_row long, tile_id string"
 LINEAGE_COLS = ("zoom_level", "partition_file", "n_rows", "n_nonempty",
@@ -364,12 +365,14 @@ class TileBuild:
         built with another config is refused.
 
         Returns (and writes to metrics.json) tiles, wall_s, tiles_per_s,
-        phase1_wall_s, phase2_wall_s and per-zoom n_tiles / n_nonempty /
-        n_imputed / n_generated; a store whose phase 2 is committed
-        returns its recorded summary without running a job.
+        phase1_wall_s, phase2_wall_s, codegen_compiles (classes the
+        driver JVM compiled during the build) and per-zoom n_tiles /
+        n_nonempty / n_imputed / n_generated; a store whose phase 2 is
+        committed returns its recorded summary without running a job.
         """
         cfg = self.cfg
         t_start = time.time()
+        compiles0 = codegen_compiles(self.spark)
         self._check_fingerprint()
         done = self._load_manifest().get("phase2")
         if done is not None:
@@ -391,6 +394,7 @@ class TileBuild:
             "tiles_per_s": round(summary["tiles"] / wall, 2) if wall > 0 else None,
             "phase1_wall_s": round(t_phase2 - t_start, 3),
             "phase2_wall_s": round(time.time() - t_phase2, 3),
+            "codegen_compiles": codegen_compiles(self.spark) - compiles0,
             "zooms": summary["zooms"],
         }
         self.metrics = summary["zooms"]
@@ -528,8 +532,10 @@ class TileBuild:
                        str(lin_dir / "part-00000.parquet"))
 
     def build(self) -> dict:
-        """Run the full z loop; returns summary metrics."""
+        """Run the full z loop; returns summary metrics (codegen_compiles:
+        classes the driver JVM compiled during the build)."""
         cfg = self.cfg
+        compiles0 = codegen_compiles(self.spark)
         self._check_fingerprint()
         self._record_fingerprint()
         empty_blob = empty_tile_blob(cfg.gzip_level)
@@ -624,6 +630,7 @@ class TileBuild:
             "tiles": total_tiles,
             "wall_s": round(wall, 3),
             "tiles_per_s": round(total_tiles / wall, 2) if wall > 0 else None,
+            "codegen_compiles": codegen_compiles(self.spark) - compiles0,
             "zooms": self.metrics,
         }
         (self.store / "metrics.json").write_text(json.dumps(summary, indent=1))

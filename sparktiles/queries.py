@@ -1232,28 +1232,32 @@ def ann_cosine_topk(spark, sf_dir):
         for j in range(dim):
             nnb += B[:, j] * B[:, j]
         nb = np.sqrt(nnb)
-        # query-block size keeps the (qb x |base|) accumulator under
-        # ~512 MB at ANY base size (scale-adaptive, guide §5) — the
-        # per-pair fold order is per-row, so blocking cannot change a
-        # single cosine bit
-        qb = max(1, (64 << 20) // max(1, len(bids)))
+        # query-block size: at most two (qb x |base|) float64 arrays are
+        # alive at once — the accumulator (reused by every block, divided
+        # in place) and one broadcast temporary (the product in the fold,
+        # then the denominator) — so qb keeps the pair under ~512 MB at
+        # ANY base size (scale-adaptive, guide §5). The per-pair fold
+        # order is per-row, so blocking cannot change a single cosine bit
+        qb = max(1, (32 << 20) // max(1, len(bids)))
         for batch in batches:
             if batch.num_rows == 0:
                 continue
             all_qids = batch.column("vec_id").to_numpy()
             Qall = _mat(pa.chunked_array([batch.column("embedding")]))
             oq, ob, oc = [], [], []
+            buf = np.empty((min(qb, len(all_qids)), len(bids)))
             for q0 in range(0, len(all_qids), qb):
                 qids = all_qids[q0:q0 + qb]
                 Q = Qall[q0:q0 + qb]
                 nnq = np.zeros(len(qids))
-                acc = np.zeros((len(qids), len(bids)))
+                acc = buf[:len(qids)]
+                acc.fill(0.0)
                 for j in range(dim):
                     nnq += Q[:, j] * Q[:, j]
                     acc += Q[:, j][:, None] * B[:, j][None, :]
                 nq = np.sqrt(nnq)
                 with np.errstate(divide="ignore", invalid="ignore"):
-                    cos = acc / (nq[:, None] * nb[None, :])
+                    cos = np.divide(acc, nq[:, None] * nb[None, :], out=acc)
                 for i in range(len(qids)):
                     c = cos[i]
                     valid = bids != qids[i]

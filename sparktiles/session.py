@@ -4,7 +4,8 @@ Local testing runs on ``local[N]``; the same config block is what we'd
 pass to ``spark-submit --py-files`` on a multi-executor cluster. AQE is
 always on (runtime re-planning: partition coalescing + skew-join
 splitting), Arrow is always on (every heavy kernel in this engine is a
-pandas/Arrow UDF).
+pandas/Arrow UDF). The generated-code cache holds 1000 classes, not
+Spark's 100, so the engine's ~380-class working set is compiled once.
 """
 
 from __future__ import annotations
@@ -57,6 +58,16 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Spark's generated-code cache holds 100 classes by default. The
+        # 16 perfbench curation legs use ~380 distinct classes and one
+        # perfbench tiles op ~185, so at 100 every sweep recompiled (and
+        # the JVM re-loaded and re-JITted) ~490 classes it had just
+        # evicted. 1000 is 2.6x the largest measured working set and
+        # still bounds the classes a session keeps alive. The cache is
+        # JVM-global and sized from this conf when it is first used: it
+        # must be in the builder before the first query, and it has no
+        # effect on a JVM whose session already exists.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # shuffle/broadcast IO codec: zstd moves ~31% fewer bytes than
         # lz4 on the tile-spine shuffle at equal wall time (measured
@@ -69,3 +80,10 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Spark's code generator has compiled in the driver JVM so
+    far (a process-wide counter; local-mode executors share the JVM)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

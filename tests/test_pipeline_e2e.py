@@ -372,6 +372,21 @@ def test_fast_phase2_job_count_fixed(spark, pages, tileset, tmp_path):
     assert jobs[4] == jobs[6] <= 12, jobs
 
 
+def test_fast_build_repeat_compiles_nothing(spark, pages, tileset, tmp_path):
+    """A second identical build in the same session reuses every class
+    the first one generated (metrics.json records the count)."""
+    frames = make_point_layer_frames(build_features(pages), tileset)
+    summaries = []
+    for name in ("a", "b"):
+        cfg = BuildConfig(store_dir=str(tmp_path / name), minzoom=0,
+                          maxzoom=4, mid_zoom=2)
+        summaries.append(TileBuild(spark, frames, cfg).build_fast())
+    first, second = summaries
+    assert second["codegen_compiles"] == 0, first["codegen_compiles"]
+    recorded = json.loads((tmp_path / "b" / "metrics.json").read_text())
+    assert recorded["codegen_compiles"] == 0
+
+
 def test_fast_build_resume_after_phase1(spark, pages, tileset, tmp_path):
     """A crash anywhere in phase 2 (tile_map and the manifest lost)
     resumes from tiles_all to the identical store; a finished store is
