@@ -113,8 +113,8 @@ def main():
     frames = make_point_layer_frames(feats, tileset)
 
     def build_pyramid():
-        # tmpfs store (same methodology as tools/scaling_bench.py):
-        # measure the engine, not one local NVMe a cluster wouldn't share
+        # tmpfs store: measure the engine, not one local NVMe a
+        # cluster wouldn't share
         store = tempfile.mkdtemp(prefix="sparktiles_bench_", dir=tmp_base)
         try:
             b = TileBuild(spark, frames, BuildConfig(

@@ -81,7 +81,7 @@ def cmd_build_tiles(args):
         gzip_level=args.gzip if args.gzip >= 0 else None,
     )
     build = TileBuild(spark, frames, cfg)
-    summary = build.build_fast() if not args.faithful_loop else build.build()
+    summary = build.build_fast()
     print(json.dumps(summary))
 
 
@@ -170,7 +170,6 @@ def main(argv=None):
     b.add_argument("--mid-zoom", type=int, default=8)
     b.add_argument("--buffer", type=int, default=8)
     b.add_argument("--gzip", type=int, default=-1)
-    b.add_argument("--faithful-loop", action="store_true")
     b.add_argument("--with-lines", type=int, default=0, metavar="N",
                    help="add a WKB transportation layer with N synthetic "
                         "polylines (supercover assignment + vecmvt encode)")

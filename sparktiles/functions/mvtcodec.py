@@ -485,155 +485,6 @@ def _write_varints(buf: np.ndarray, offs: np.ndarray, vals: np.ndarray,
         buf[offs[m] + k] = byte | ((nb[m] > k + 1).astype(np.uint8) << 7)
 
 
-def encode_layer_points_vec(
-    name: str,
-    fids,
-    ix: np.ndarray,
-    iy: np.ndarray,
-    attr_cols: list[tuple[str, list]],
-    extent: int = DEFAULT_EXTENT,
-    all_string_attrs: bool = False,
-) -> bytes:
-    """Fully numpy-vectorized single-point layer encoder — byte-identical
-    to encode_layer_columnar(..., GEOM_POINT, encode_point_geoms(ix, iy),
-    ...) (pytest-asserted), with O(passes) numpy work instead of
-    per-feature Python varint packing (the MVT encode hot loop was ~50%
-    of pyramid-build CPU before this).
-
-    Dictionary semantics preserved exactly: keys = every attr column in
-    column order; values deduped by (type, value) in first-seen order
-    scanning features row-major then columns (None skipped) — the same
-    order the memoized scalar path produces.
-    """
-    import pandas as pd
-
-    n = len(ix)
-    A = len(attr_cols)
-    if A >= 128:
-        raise ValueError("more than 127 attr columns")  # 1-byte key idx
-
-    # --- value dictionary (global first-seen order, (type,value) keyed)
-    if A:
-        mat = np.empty((n, A), dtype=object)
-        for a, (_k, col) in enumerate(attr_cols):
-            mat[:, a] = col
-        flat = mat.ravel()
-        if all_string_attrs:
-            # strings can only hash-equal strings: factorize raw values
-            codes, uniques = pd.factorize(flat, use_na_sentinel=True)
-            values = [encode_value(u) for u in uniques]
-        else:
-            # type-tag values so e.g. True / 1 / 1.0 never collapse (they
-            # encode differently); equal typed values across columns share
-            keyed = np.empty(len(flat), dtype=object)
-            for i, v in enumerate(flat):
-                keyed[i] = None if v is None else (v.__class__.__name__, v)
-            codes, uniques = pd.factorize(keyed, use_na_sentinel=True)
-            # re-dedupe the uniques by ENCODED BYTES (first-seen order),
-            # so numpy scalars that encode identically to Python scalars
-            # (np.int64(1) vs 1) share one Value entry — the same dedup
-            # key the scalar/columnar paths use
-            values = []
-            byte_idx: dict[bytes, int] = {}
-            remap = np.empty(len(uniques), dtype=np.int64)
-            for ui, u in enumerate(uniques):
-                ev = encode_value(u[1])
-                vi = byte_idx.get(ev)
-                if vi is None:
-                    vi = byte_idx[ev] = len(values)
-                    values.append(ev)
-                remap[ui] = vi
-            if len(uniques):
-                codes = np.where(codes >= 0, remap[codes], codes)
-        C = codes.reshape(n, A)
-    else:
-        values = []
-        C = np.empty((n, 0), dtype=np.int64)
-
-    # --- per-piece varint lengths
-    zzx = ((ix.astype(np.int64) << 1) ^ (ix.astype(np.int64) >> 63)).view(np.uint64)
-    zzy = ((iy.astype(np.int64) << 1) ^ (iy.astype(np.int64) >> 63)).view(np.uint64)
-    nb_zzx, nb_zzy = _varint_nbytes(zzx), _varint_nbytes(zzy)
-    geom_len = 1 + nb_zzx + nb_zzy
-    nb_geom_len = _varint_nbytes(geom_len.astype(np.uint64))
-
-    if fids is not None:
-        fid_arr = np.asarray(fids, dtype=np.int64).view(np.uint64)
-        nb_fid = _varint_nbytes(fid_arr)
-        fid_part = 1 + nb_fid
-    else:
-        fid_part = np.zeros(n, dtype=np.int64)
-
-    present = []          # per column: bool mask
-    nb_code = []          # per column: varint size of value idx
-    tag_len = np.zeros(n, dtype=np.int64)
-    for a in range(A):
-        pm = C[:, a] >= 0
-        nc = np.zeros(n, dtype=np.int64)
-        nc[pm] = _varint_nbytes(C[pm, a].astype(np.uint64))
-        present.append(pm)
-        nb_code.append(nc)
-        tag_len += pm * (1 + nc)
-    has_tags = tag_len > 0
-    nb_tag_len = np.zeros(n, dtype=np.int64)
-    nb_tag_len[has_tags] = _varint_nbytes(tag_len[has_tags].astype(np.uint64))
-    tags_part = has_tags * (1 + nb_tag_len + tag_len)
-
-    type_part = 2                                   # 0x18, gtype<128
-    geom_part = 1 + nb_geom_len + geom_len
-    body_len = fid_part + tags_part + type_part + geom_part
-    nb_body = _varint_nbytes(body_len.astype(np.uint64))
-    total = 1 + nb_body + body_len                  # 0x12 len body
-
-    offs = np.zeros(n, dtype=np.int64)
-    if n > 1:
-        offs[1:] = np.cumsum(total[:-1])
-    buf = np.zeros(int(total.sum()), dtype=np.uint8)
-
-    # --- scatter writes (order matches encode_feature)
-    o = offs.copy()
-    buf[o] = 0x12
-    o += 1
-    _write_varints(buf, o, body_len.astype(np.uint64), nb_body)
-    o += nb_body
-    if fids is not None:
-        buf[o] = 0x08
-        _write_varints(buf, o + 1, fid_arr, nb_fid)
-        o += 1 + nb_fid
-    if A:
-        ht = has_tags
-        buf[o[ht]] = 0x12
-        _write_varints(buf, o[ht] + 1, tag_len[ht].astype(np.uint64),
-                       nb_tag_len[ht])
-        o2 = o + ht * (1 + nb_tag_len)
-        for a in range(A):
-            pm = present[a]
-            buf[o2[pm]] = a                          # key idx varint (<128)
-            _write_varints(buf, o2[pm] + 1, C[pm, a].astype(np.uint64),
-                           nb_code[a][pm])
-            o2 = o2 + pm * (1 + nb_code[a])
-        o = o2
-    buf[o] = 0x18
-    buf[o + 1] = GEOM_POINT
-    o += 2
-    buf[o] = 0x22
-    _write_varints(buf, o + 1, geom_len.astype(np.uint64), nb_geom_len)
-    o += 1 + nb_geom_len
-    buf[o] = 0x09
-    _write_varints(buf, o + 1, zzx, nb_zzx)
-    o += 1 + nb_zzx
-    _write_varints(buf, o, zzy, nb_zzy)
-
-    keys = [k for k, _ in attr_cols]
-    body = _varint_field(15, 2)
-    body += _len_field(1, name.encode("utf-8"))
-    body += buf.tobytes()
-    body += b"".join(_len_field(3, k.encode("utf-8")) for k in keys)
-    body += b"".join(_len_field(4, v) for v in values)
-    body += _varint_field(5, extent)
-    return _len_field(3, body)
-
-
 def decode_tile(buf: bytes) -> dict:
     """Decode an MVT tile blob (optionally gzip'd) into
     {layer_name: {"extent": int, "version": int, "features": [

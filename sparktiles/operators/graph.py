@@ -1,4 +1,4 @@
-"""Distributed connected components (hash-min label propagation).
+"""Distributed connected components (large-star / small-star).
 
 Why this exists: the one-sweep LSH dedup mapping
 (`operators/text.py::minhash_dedup`) assigns each doc the smallest id
@@ -6,23 +6,22 @@ it shares *any* band bucket with — which is not transitively closed
 (A~B and B~C via different buckets leaves A and C with different
 canonicals). Closing the candidate graph into components is the
 textbook finish of a near-dup pipeline (Kiveris et al. 2014,
-"Connected Components in MapReduce and Beyond" — this is the
-hash-min/label-propagation variant, the simplest of that family),
-and it is an honest *iterative* Spark algorithm: a loop of
-join+groupBy rounds with a monotone convergence certificate, lineage
-truncated per round so the plan does not grow with the iteration
-count.
+"Connected Components in MapReduce and Beyond", the two-phase
+large-star/small-star algorithm), and it is an honest *iterative*
+Spark algorithm: a loop of window rounds with a convergence
+certificate, lineage truncated per round so the plan does not grow
+with the iteration count.
 
 Scale notes (100 TB):
 
-* Each round is one shuffle on the edge key plus one on the node key;
-  rounds needed = the max component diameter. LSH dedup graphs are
-  star-forests stitched by shared buckets — diameter is tiny (2-4
-  observed), so this converges in a handful of rounds even at corpus
-  scale.
-* Convergence is detected with ONE scalar aggregate per round
-  (labels only ever decrease, so `sum(component)` strictly decreases
-  until the fixpoint) — no extra join against the previous labels.
+* Each round contracts the edge set toward the n-1 star edges, so
+  later rounds shuffle less; Kiveris et al. bound the rounds by
+  O(log^2 n). LSH dedup graphs are star-forests stitched by shared buckets, so
+  this converges in a handful of rounds even at corpus scale, and the
+  last rounds run as one single-task union-find once the edge set is
+  small.
+* Convergence is detected with ONE count + checksum aggregate per
+  round — no full comparison join against the previous edge set.
 * `localCheckpoint` truncates lineage each round. On a real cluster
   prefer `spark.sparkContext.setCheckpointDir(...)` + reliable
   `.checkpoint()` (executor loss replays a localCheckpoint'd
@@ -37,66 +36,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
-                         max_iter: int = 50,
-                         reliable: bool = False) -> DataFrame:
-    """(node, component) for every node appearing in `edges`, where
-    component = min node id in the node's connected component.
-
-    Undirected: edges are symmetrized internally. Converges in
-    O(max component diameter) rounds; raises RuntimeError if
-    `max_iter` rounds don't reach the fixpoint (a diameter that large
-    means the input is not the candidate graph this is meant for).
-    """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    # node set BEFORE dropping self-loops: a node whose only edge is
-    # (n, n) is still a node and gets component n
-    nodes = (
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
-        .distinct()
-    )
-    sym = (
-        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .cache()
-    )
-    labels = nodes.select("node", F.col("node").alias("component"))
-    if reliable:
-        labels = labels.checkpoint()
-    else:
-        labels = labels.localCheckpoint()
-    prev_sum = labels.agg(F.sum("component")).collect()[0][0]
-
-    for _ in range(max_iter):
-        # min label over the neighborhood, then fold in the node's own
-        nbr = (
-            sym.join(labels, sym["b"] == labels["node"])
-            .groupBy("a")
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        labels = (
-            labels.join(nbr, labels["node"] == nbr["a"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"),
-                    F.coalesce(F.col("nbr_min"), F.col("component")),
-                ).alias("component"),
-            )
-        )
-        labels = labels.checkpoint() if reliable else labels.localCheckpoint()
-        cur_sum = labels.agg(F.sum("component")).collect()[0][0]
-        if cur_sum == prev_sum:  # labels are monotone non-increasing
-            sym.unpersist()
-            return labels
-        prev_sum = cur_sum
-    sym.unpersist()
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds")
 
 
 def _local_union_find(cur: DataFrame) -> DataFrame:
@@ -145,20 +84,19 @@ def connected_components_star(edges: DataFrame, src: str = "src",
                               dst: str = "dst", max_iter: int = 50,
                               reliable: bool = False,
                               local_finish_rows: int = 2_000_000) -> DataFrame:
-    """(node, component) via large-star/small-star alternation
-    (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond", Algorithm 2 "two-phase") — same output contract as
-    `connected_components` (component = min node id), different cost
-    shape:
+    """(node, component) for every node appearing in `edges`, where
+    component = min node id in the node's connected component, via
+    large-star/small-star alternation (Kiveris et al. 2014,
+    "Connected Components in MapReduce and Beyond", Algorithm 2
+    "two-phase"). Undirected; a node whose only edge is (n, n) gets
+    component n. Raises RuntimeError if `max_iter` rounds don't reach
+    the fixpoint.
 
-    * hash-min pays (edges ⋈ labels) + groupBy + (labels ⋈ mins) per
-      round over the FULL edge set — three exchanges of m rows every
-      round until the last diameter hop resolves.
-    * star rounds never touch a labels table: each phase is ONE
-      window-min over the current edge set partitioned by source
-      (plus a distinct to fold the rewired duplicates), and the edge
-      set itself CONTRACTS toward the n-1 star edges as subtrees hook
-      onto their minimum — later rounds shuffle less, not the same.
+    Star rounds never touch a labels table: each phase is ONE
+    window-min over the current edge set partitioned by source (plus a
+    distinct to fold the rewired duplicates), and the edge set itself
+    CONTRACTS toward the n-1 star edges as subtrees hook onto their
+    minimum — later rounds shuffle less, not the same.
 
     Phases (edges kept oriented larger -> smaller throughout):
       large-star(v): connect every strictly larger neighbor of v to
@@ -252,17 +190,15 @@ def connected_components_star(edges: DataFrame, src: str = "src",
 
 
 def minhash_dedup_cc(df: DataFrame, n_hashes: int = 8, band_size: int = 2,
-                     text_col: str = "text", id_col: str = "doc_id",
-                     algorithm: str = "star") -> DataFrame:
+                     text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Transitively-closed near-dup mapping: doc_id -> min doc_id of
     its whole duplicate *component* (vs `minhash_dedup`, which stops
     at one bucket hop). Star edges member->bucket-canonical keep the
     edge list linear in bucket membership — never the O(k^2) pairs of
-    a bucket explosion.
-
-    algorithm: "star" (default — large-star/small-star, measured 1.35×
-    faster than hash-min on the 800k-doc funnel dup structure with
-    label-identical output, BENCH_CC_AB.json) or "hashmin"."""
+    a bucket explosion. The closure is connected_components_star
+    (measured 1.35× faster than hash-min label propagation on the
+    800k-doc funnel dup structure with label-identical output,
+    BENCH_CC_AB.json)."""
     from pyspark.sql.window import Window
 
     from sparktiles.operators.text import band_rows, minhash_signatures
@@ -282,9 +218,7 @@ def minhash_dedup_cc(df: DataFrame, n_hashes: int = 8, band_size: int = 2,
              .where(F.col("_n") > 1)
              .select(F.col(id_col).alias("src"), "dst")
              .localCheckpoint())
-    close = (connected_components_star if algorithm == "star"
-             else connected_components)
-    cc = close(edges)
+    cc = connected_components_star(edges)
     return cc.select(F.col("node").alias(id_col),
                      F.col("component").alias("canonical_id"))
 
@@ -302,9 +236,9 @@ def dedup_keep_best(df: DataFrame, quality_col: str = "n_chars",
     order keeps the longest/cleanest.
 
     Scale shape: the component mapping is minhash_dedup_cc (iterative
-    hash-min over star edges); ranking is one window partitioned by
-    component — duplicate clusters are small by construction (LSH
-    bucket fan-in), so partitions are tiny. The quality lookup joins
+    large-star/small-star over star edges); ranking is one window
+    partitioned by component — duplicate clusters are small by
+    construction (LSH bucket fan-in), so partitions are tiny. The quality lookup joins
     only docs that are IN a dup component (sparse vs the corpus).
 
     Returns (doc_id, component, keep_id, is_kept) for every doc in a
@@ -345,10 +279,10 @@ def leakage_safe_split(df: DataFrame, holdout_pct: int = 10,
     engine-independent auditor reproduces the exact split.
 
     Scale shape: the component mapping is minhash_dedup_cc (iterative
-    hash-min over star edges, linear in bucket membership); the split
-    itself adds ONE broadcast-or-shuffle left join (the mapping is
-    sparse — only docs in dup components) and a map-side hash per
-    row. Returns (doc_id, group_id, side)."""
+    large-star/small-star over star edges, linear in bucket
+    membership); the split itself adds ONE broadcast-or-shuffle left
+    join (the mapping is sparse — only docs in dup components) and a
+    map-side hash per row. Returns (doc_id, group_id, side)."""
     mapping = minhash_dedup_cc(df, n_hashes, band_size, text_col, id_col)
     comp = mapping.select(
         F.col(id_col).alias("doc_id"),

@@ -351,8 +351,8 @@ def with_wkb_supercover_encoded_fields(features: DataFrame, spec,
 
     Byte-equal to assign_supercover_tiles_multi -> with_wkb_encoded_
     fields (asserted in tests/test_tilecover.py); usable whenever the
-    layer has no post_assign hook and no only_tiles restriction (those
-    need the assigned rows as a DataFrame between the stages).
+    layer has no post_assign hook (it needs the assigned rows as a
+    DataFrame between the stages).
     normalized=True emits normalized rows (see with_wkb_encoded_fields)."""
     import pandas as pd
 

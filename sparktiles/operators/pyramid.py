@@ -45,7 +45,8 @@ EMPTY_TILE_DUP_THRESHOLD_HIGH = 50  # for z > 12
 
 
 def dup_threshold(zoom: int) -> int:
-    """Copies of one tile_id in the map at `zoom` that make it a dup."""
+    """Copies of one tile_id in the map at `zoom` that make it a dup
+    (A6 duplicate-tile finder, reference mbtile_tools.py:49-103)."""
     return EMPTY_TILE_DUP_THRESHOLD_HIGH if zoom > 12 else EMPTY_TILE_DUP_THRESHOLD
 
 
@@ -271,19 +272,6 @@ def with_tile_rank(assigned: DataFrame, order_by, rank_col: str = "rank") -> Dat
 
 
 # ----------------------------------------------------------------- impute
-
-def dup_tile_ids(tile_map: DataFrame, zoom: int | None = None) -> DataFrame:
-    """Duplicate-tile finder (A6, reference mbtile_tools.py:49-103):
-    tile_ids appearing >= threshold times — 'empty-ish' content
-    (oceans, deserts). Threshold 20, or 50 above z12."""
-    th = dup_threshold(zoom or 0)
-    df = tile_map
-    if zoom is not None:
-        df = df.where(F.col("zoom_level") == zoom)
-    return (
-        df.groupBy("tile_id").count().where(F.col("count") >= F.lit(th)).select("tile_id")
-    )
-
 
 def impute_children(parents: DataFrame, dup_keys: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Reference impute (T3, mbtile_tools.py:106-196): for each parent

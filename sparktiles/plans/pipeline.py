@@ -7,24 +7,17 @@ Reproduces the reference driver loop (bin/generate-tiles:88-117):
                   mbtile_tools.py:106-196), generate only the remaining
                   list ('list' scheme)
 
-Two drivers share the store layout (tile_map/zoom_level=z/,
-tile_images/, lineage/, _manifest.json, metrics.json):
-
-- build()      the faithful per-zoom loop: each zoom is a checkpoint
-               barrier (map + images written, manifest marks the zoom)
-               so a re-run resumes after the last finished zoom;
-- build_fast() the production path: phase 1 writes every non-empty
-               tile of every zoom in one shuffle (tiles_all); phase 2
-               replays the walk above on tiles_all keys in a fixed
-               number of Spark jobs (operators/pyramid.py "one-pass
-               impute walk"): Python decides the dup roots on data the
-               size of tiles_all, the JVM expands each root's subtree
-               inside the one map write; then the images and per-file
-               lineage rows. It resumes per phase.
-
-Both record a config fingerprint in the manifest and refuse a store
-built with another config (north_rule: resumable from checkpoint with
-per-partition lineage + metrics).
+TileBuild.build_fast() runs that walk and writes the store
+(tile_map/zoom_level=z/, tile_images/, lineage/, _manifest.json,
+metrics.json). Phase 1 writes every non-empty tile of every zoom in
+one shuffle (tiles_all); phase 2 replays the walk above on tiles_all
+keys in a fixed number of Spark jobs (operators/pyramid.py "one-pass
+impute walk"): Python decides the dup roots on data the size of
+tiles_all, the JVM expands each root's subtree inside the one map
+write; then the images and per-file lineage rows. It resumes per
+phase, records a config fingerprint in the manifest and refuses a
+store built with another config (north_rule: resumable from
+checkpoint with per-partition lineage + metrics).
 
 Scale notes: the feature->tile fan-out is map-side; the only wide
 shuffles are the per-(z,x,y[,layer]) groupBys, which AQE re-balances
@@ -57,10 +50,8 @@ from sparktiles.operators.mvt import (
 from sparktiles.functions.tilemath import deg2num
 from sparktiles.operators.pyramid import (
     assign_point_tiles,
-    dup_tile_ids,
     emit_map_blocks,
     expand_map_blocks,
-    impute_children,
     impute_summary,
     replay_impute,
     tile_pyramid,
@@ -161,7 +152,8 @@ class BuildConfig:
 
 
 class TileBuild:
-    """Drives the per-zoom build loop over a prepared feature DataFrame.
+    """Builds the tile pyramid of prepared feature DataFrames into a
+    store (build_fast).
 
     layer_frames: list of (LayerSpec, features DataFrame). Each features
     DataFrame must carry: feature_id long, x double, y double (mercator)
@@ -176,19 +168,13 @@ class TileBuild:
         self.store = Path(cfg.store_dir)
         self.store.mkdir(parents=True, exist_ok=True)
         self.manifest_path = self.store / "_manifest.json"
-        self.metrics: list[dict] = []
 
     # ------------------------------------------------------------ store
 
     def _load_manifest(self) -> dict:
         if self.manifest_path.exists():
             return json.loads(self.manifest_path.read_text())
-        return {"zooms": {}}
-
-    def _mark_zoom(self, z: int, stats: dict):
-        m = self._load_manifest()
-        m["zooms"][str(z)] = {"status": "complete", **stats}
-        self.manifest_path.write_text(json.dumps(m, indent=1))
+        return {}
 
     def _fingerprint(self) -> str:
         return self.cfg.fingerprint([spec for spec, _ in self.layer_frames])
@@ -208,9 +194,6 @@ class TileBuild:
         m["fingerprint"] = self._fingerprint()
         self.manifest_path.write_text(json.dumps(m, indent=1))
 
-    def _zoom_done(self, z: int) -> bool:
-        return self._load_manifest()["zooms"].get(str(z), {}).get("status") == "complete"
-
     def _map_root(self) -> str:
         return str(self.store / "tile_map")
 
@@ -220,27 +203,19 @@ class TileBuild:
         # any zoom subset; DuckDB reads it with hive_partitioning=1)
         return str(self.store / "tile_map" / f"zoom_level={z}")
 
-    def _img_path(self, z: int) -> str:
-        return str(self.store / "tile_images" / f"z={z}")
-
     def read_tile_map(self, z: int | None = None) -> DataFrame:
         r = self.spark.read.schema(MAP_SCHEMA).option("basePath", self._map_root())
         path = self._map_path(z) if z is not None else self._map_root()
         return r.parquet(path).select(
             "zoom_level", "tile_column", "tile_row", "tile_id")
 
-    def _write_zoom_map(self, map_rows: DataFrame, z: int):
-        """Write one zoom's map rows directly into its hive partition
-        dir (zoom_level stays in the directory name, not the files)."""
-        map_rows.select("tile_column", "tile_row", "tile_id").write.mode(
-            "overwrite").parquet(self._map_path(z))
-
     def read_lineage(self) -> DataFrame:
         """Per-partition lineage/metrics rows written by build_fast."""
         return self.spark.read.parquet(str(self.store / "lineage"))
 
     def read_tile_images(self) -> DataFrame:
-        # per-zoom dirs (faithful loop) and/or the bulk dir (fast build)
+        # tile_images/all from build_fast, plus the dirs a re-tile
+        # publishes beside it (e.g. tile_images/retile)
         root = self.store / "tile_images"
         paths = [str(p) for p in sorted(root.iterdir()) if p.is_dir()]
         dfs = [self.spark.read.parquet(p) for p in paths]
@@ -251,55 +226,43 @@ class TileBuild:
 
     # ------------------------------------------------------------ build
 
-    def _can_fuse(self, spec, only_tiles,
-                  kinds: tuple = ("wkb",)) -> bool:
-        """Layers with no post_assign hook and no tile restriction take
-        a FUSED assign + encode stage (the hook / only_tiles need the
-        assigned rows as a DataFrame between the stages): WKB layers
-        via the supercover kernel — candidate rows never cross Arrow
-        carrying raw WKB; point layers (multi-layer spine only) via the
-        in-kernel fan-out — base rows cross Arrow exactly once. The
-        single-layer point path stays JVM-assigned: there the fan-out
-        feeds the exchange directly with NO map-side Python at all, so
-        fusing would add an Arrow crossing instead of removing one."""
-        return (spec.geometry_kind in kinds and spec.post_assign is None
-                and only_tiles is None)
+    def _can_fuse(self, spec, kinds: tuple = ("wkb",)) -> bool:
+        """Layers with no post_assign hook take a FUSED assign + encode
+        stage (the hook needs the assigned rows as a DataFrame between
+        the stages): WKB layers via the supercover kernel — candidate
+        rows never cross Arrow carrying raw WKB; point layers
+        (multi-layer spine only) via the in-kernel fan-out — base rows
+        cross Arrow exactly once. The single-layer point path stays
+        JVM-assigned: there the fan-out feeds the exchange directly with
+        NO map-side Python at all, so fusing would add an Arrow crossing
+        instead of removing one."""
+        return spec.geometry_kind in kinds and spec.post_assign is None
 
-    def _generate_tiles_at(self, z: int, only_tiles: DataFrame | None) -> DataFrame:
-        """Run the layer pipelines for zoom z -> z,x,y,mvt,tile_id for
-        every NON-EMPTY tile (optionally restricted to only_tiles)."""
-        return self._build_tiles((z, z), only_tiles)
-
-    def _build_tiles(self, zr: tuple[int, int],
-                     only_tiles: DataFrame | None) -> DataFrame:
-        """All layers -> z,x,y,mvt,tile_id for the zoom range, with ONE
-        wide (zxy) shuffle: single-layer builds fuse encode+assemble
-        (encode_and_assemble_single); multi-layer builds union per-layer
-        NORM_SCHEMA frames map-side and run the single-shuffle assembly
-        (assemble_normalized) — the per-layer encode shuffles + blob
-        reshuffle of the old two-phase path are gone."""
+    def _build_tiles(self, zr: tuple[int, int]) -> DataFrame:
+        """All layers -> z,x,y,mvt,tile_id of every NON-EMPTY tile in
+        the zoom range, with ONE wide (zxy) shuffle: single-layer
+        builds fuse encode+assemble (encode_and_assemble_single);
+        multi-layer builds union per-layer NORM_SCHEMA frames map-side
+        and run the single-shuffle assembly (assemble_normalized) — the
+        per-layer encode shuffles + blob reshuffle of the old two-phase
+        path are gone."""
         if len(self.layer_frames) == 1:
             spec, feats = self.layer_frames[0]
-            if self._can_fuse(spec, only_tiles):
+            if self._can_fuse(spec):
                 return encode_and_assemble_single(
                     feats, spec, self.cfg.gzip_level, zoom_range=zr)
-            assigned = self._assign(feats, spec, *zr)
-            if only_tiles is not None:
-                assigned = assigned.join(only_tiles, ["z", "x", "y"], "left_semi")
-            return encode_and_assemble_single(assigned, spec, self.cfg.gzip_level)
+            return encode_and_assemble_single(
+                self._assign(feats, spec, *zr), spec, self.cfg.gzip_level)
         # all layers share the widest _v column set so the union lines up
         n_vals = max(len(s.attr_fields) for s, _ in self.layer_frames)
         norm = None
         for spec, feats in self.layer_frames:
-            if self._can_fuse(spec, only_tiles, kinds=("wkb", "point")):
+            if self._can_fuse(spec, kinds=("wkb", "point")):
                 nf = normalize_layer_df(feats, spec, zoom_range=zr,
                                         n_vals=n_vals)
             else:
-                assigned = self._assign(feats, spec, *zr)
-                if only_tiles is not None:
-                    assigned = assigned.join(only_tiles, ["z", "x", "y"],
-                                             "left_semi")
-                nf = normalize_layer_df(assigned, spec, n_vals=n_vals)
+                nf = normalize_layer_df(self._assign(feats, spec, *zr), spec,
+                                        n_vals=n_vals)
             norm = nf if norm is None else norm.unionByName(nf)
         return assemble_normalized(
             norm, [s for s, _ in self.layer_frames], self.cfg.gzip_level)
@@ -330,7 +293,8 @@ class TileBuild:
         return out
 
     def build_fast(self) -> dict:
-        """Two-phase build with identical output to build():
+        """Two-phase build with identical output to the reference walk
+        (the module docstring's per-zoom loop):
 
         Phase 1 — ONE wide job: every layer's features are exploded to
         all zooms (assign_point_tiles_multi), grouped once by (z,x,y)
@@ -376,13 +340,12 @@ class TileBuild:
         self._check_fingerprint()
         done = self._load_manifest().get("phase2")
         if done is not None:
-            self.metrics = done["zooms"]
             return done
         tiles_all = str(self.store / "tiles_all")
         sc = self.spark.sparkContext
         if not (self.store / "tiles_all" / "_SUCCESS").exists():
             with _job_label(sc, "build_fast phase 1: tiles_all"):
-                tiles = self._build_tiles((cfg.minzoom, cfg.maxzoom), None)
+                tiles = self._build_tiles((cfg.minzoom, cfg.maxzoom))
                 tiles.write.mode("overwrite").partitionBy("z").parquet(tiles_all)
         self._record_fingerprint()
         t_phase2 = time.time()
@@ -397,11 +360,8 @@ class TileBuild:
             "codegen_compiles": codegen_compiles(self.spark) - compiles0,
             "zooms": summary["zooms"],
         }
-        self.metrics = summary["zooms"]
         (self.store / "metrics.json").write_text(json.dumps(summary, indent=1))
         m = self._load_manifest()
-        m["zooms"] = {str(s["z"]): {"status": "complete", **s}
-                      for s in summary["zooms"]}
         m["phase2"] = summary
         self.manifest_path.write_text(json.dumps(m, indent=1))
         return summary
@@ -530,111 +490,6 @@ class TileBuild:
             + [(c, pa.int64()) for c in LINEAGE_COLS[2:]])
         pq.write_table(pa.Table.from_pylist(rows, schema=schema),
                        str(lin_dir / "part-00000.parquet"))
-
-    def build(self) -> dict:
-        """Run the full z loop; returns summary metrics (codegen_compiles:
-        classes the driver JVM compiled during the build)."""
-        cfg = self.cfg
-        compiles0 = codegen_compiles(self.spark)
-        self._check_fingerprint()
-        self._record_fingerprint()
-        empty_blob = empty_tile_blob(cfg.gzip_level)
-        empty_id = hashlib.md5(empty_blob).hexdigest()
-        t_start = time.time()
-        total_tiles = 0
-
-        for z in range(cfg.minzoom, cfg.maxzoom + 1):
-            if self._zoom_done(z):
-                continue
-            t0 = time.time()
-            if z <= cfg.mid_zoom or z == cfg.minzoom:
-                # pyramid scheme: every tile of the zoom
-                universe = tile_pyramid(self.spark, z, z, cfg.bounds_lonlat)
-                # persisted: the zoom's tiles feed THREE consumers (map
-                # rows, empties anti-join, images) — without it the
-                # whole encode pipeline re-runs per consumer
-                tiles = self._generate_tiles_at(z, None).persist()
-                gen_map = tiles.select(
-                    F.col("z").alias("zoom_level"),
-                    F.col("x").alias("tile_column"),
-                    F.col("y").alias("tile_row"),
-                    "tile_id",
-                )
-                empties = universe.join(
-                    tiles.select("z", "x", "y"), ["z", "x", "y"], "left_anti"
-                ).select(
-                    F.col("z").alias("zoom_level"),
-                    F.col("x").alias("tile_column"),
-                    F.col("y").alias("tile_row"),
-                    F.lit(empty_id).alias("tile_id"),
-                )
-                map_rows = gen_map.unionByName(empties)
-                n_gen_listed = None
-            else:
-                parents = self.read_tile_map(z - 1)
-                dups = dup_tile_ids(parents, z - 1)
-                imputed, gen_list = impute_children(parents, dups)
-                gen_list = gen_list.cache()
-                n_gen_listed = gen_list.count()
-                tiles = self._generate_tiles_at(z, gen_list).persist()
-                gen_map = tiles.select(
-                    F.col("z").alias("zoom_level"),
-                    F.col("x").alias("tile_column"),
-                    F.col("y").alias("tile_row"),
-                    "tile_id",
-                )
-                gen_empties = gen_list.join(
-                    tiles.select("z", "x", "y"), ["z", "x", "y"], "left_anti"
-                ).select(
-                    F.col("z").alias("zoom_level"),
-                    F.col("x").alias("tile_column"),
-                    F.col("y").alias("tile_row"),
-                    F.lit(empty_id).alias("tile_id"),
-                )
-                map_rows = imputed.unionByName(gen_map).unionByName(gen_empties)
-
-            # checkpoint barrier: persist this zoom (AQE coalesces output
-            # partitions; at cluster scale this is an Iceberg snapshot)
-            self._write_zoom_map(map_rows, z)
-            images = tiles.select("tile_id", F.col("mvt").alias("tile_data")) \
-                .dropDuplicates(["tile_id"])
-            images = images.unionByName(
-                self.spark.createDataFrame(
-                    [(empty_id, bytearray(empty_blob))], "tile_id string, tile_data binary"
-                )
-            )
-            images.write.mode("overwrite").parquet(self._img_path(z))
-            tiles.unpersist()
-            if n_gen_listed is not None:
-                gen_list.unpersist()
-
-            persisted = self.read_tile_map(z)
-            n_tiles = persisted.count()
-            stats = {
-                "z": z,
-                "n_tiles": n_tiles,
-                "n_nonempty": persisted.where(F.col("tile_id") != empty_id).count(),
-                "wall_s": round(time.time() - t0, 3),
-            }
-            if n_gen_listed is not None:
-                # impute savings (A11): children the walk actually
-                # generated vs inherited from duplicate parents
-                stats["n_generate_listed"] = n_gen_listed
-                stats["n_imputed"] = n_tiles - n_gen_listed
-            self.metrics.append(stats)
-            self._mark_zoom(z, stats)
-            total_tiles += n_tiles
-
-        wall = time.time() - t_start
-        summary = {
-            "tiles": total_tiles,
-            "wall_s": round(wall, 3),
-            "tiles_per_s": round(total_tiles / wall, 2) if wall > 0 else None,
-            "codegen_compiles": codegen_compiles(self.spark) - compiles0,
-            "zooms": self.metrics,
-        }
-        (self.store / "metrics.json").write_text(json.dumps(summary, indent=1))
-        return summary
 
 
 def make_point_layer_frames(features: DataFrame, tileset: TilesetDef):

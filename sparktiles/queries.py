@@ -2557,7 +2557,7 @@ def minhash_dedup_mapping(spark, sf_dir):
 
 # ===================================================================
 # connected-components dedup — transitively-closed near-dup mapping.
-# Spark side: iterative hash-min label propagation over the LSH
+# Spark side: iterative large-star/small-star CC over the LSH
 # candidate star-edges (operators/graph.py). Oracle: the same edge
 # set closed with a recursive CTE (transitive closure is fine at
 # sf0.01 graph sizes; the Spark side is the scale path).
@@ -2610,8 +2610,9 @@ SELECT a AS doc_id, MIN(b) AS canonical_id FROM reach GROUP BY a
 @q("minhash_dedup_cc", _MINHASH_CC_SQL)
 def minhash_dedup_cc_mapping(spark, sf_dir):
     """Transitively-closed LSH dedup: doc_id -> min id of its whole
-    duplicate component (iterative hash-min CC, operators/graph.py —
-    the closure minhash_dedup's one bucket hop can't give)."""
+    duplicate component (iterative large-star/small-star CC,
+    operators/graph.py — the closure minhash_dedup's one bucket hop
+    can't give)."""
     from sparktiles.operators.graph import minhash_dedup_cc
 
     d = _t(spark, sf_dir, "documents")
@@ -3758,7 +3759,7 @@ def dedup_keep_best_q(spark, sf_dir):
     """Quality-ranked representative per duplicate component (longest
     doc by n_chars wins, ties on doc_id) instead of smallest-id
     (operators/graph.py dedup_keep_best on top of the iterative
-    hash-min CC closure)."""
+    large-star/small-star CC closure)."""
     from sparktiles.operators.graph import dedup_keep_best
 
     return dedup_keep_best(_t(spark, sf_dir, "documents"),

@@ -11,37 +11,24 @@ tests/testlayers/housenumber/mapping.yaml:8-27).
 Extraction is pure JVM column math: regexp_extract_all pulls every
 mention, posexplode numbers them, regexp_extract splits the groups —
 the whole import stage stays inside whole-stage codegen (no Python
-workers, no Arrow transfer). extract_mentions_pandas keeps the
-Arrow-batched pandas variant as the template for extractions a Java
-regex can't express. Downstream enrichment (feature_id hash, mercator
-coords, tags, enum class) is pure column math too.
+workers, no Arrow transfer). Downstream enrichment (feature_id hash,
+mercator coords, tags, enum class) is pure column math too.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sparktiles.functions.tilemath import mercator_x_expr, mercator_y_expr
 
-MENTION_RE = r"Name_(?P<pid>\d+) \((?P<lat>-?\d+\.\d{5}); (?P<lon>-?\d+\.\d{5})\)"
-# numbered-group twin for the JVM regex engine (same language subset)
 _MENTION_RE_J = r"Name_(\d+) \((-?\d+\.\d{5}); (-?\d+\.\d{5})\)"
-
-_MENTIONS_SCHEMA = (
-    "url string, lang string, mention_idx int, place_id long, "
-    "lat double, lon double, name string"
-)
 
 
 def extract_mentions(pages: DataFrame) -> DataFrame:
     """pages -> one row per place mention. All JVM: regexp_extract_all
     (every match) -> posexplode (mention_idx) -> regexp_extract
-    (groups). Identical output to the pandas variant, with the import
-    stage inside whole-stage codegen."""
+    (groups), with the import stage inside whole-stage codegen."""
     p = F.lit(_MENTION_RE_J)
     ms = F.regexp_extract_all(F.col("text"), p, F.lit(0))
     exploded = pages.select(
@@ -57,39 +44,6 @@ def extract_mentions(pages: DataFrame) -> DataFrame:
         F.regexp_extract("_m", _MENTION_RE_J, 3).cast("double").alias("lon"),
         F.concat(F.lit("Name_"), pid.cast("string")).alias("name"),
     )
-
-
-def extract_mentions_pandas(pages: DataFrame) -> DataFrame:
-    """Arrow-batched pandas variant of extract_mentions (pandas C regex
-    via str.extractall) — the pattern to follow when an extraction
-    needs regex features Java lacks. Output-equal to extract_mentions
-    (pytest-asserted)."""
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            hits = pdf["text"].str.extractall(MENTION_RE)
-            if len(hits) == 0:
-                continue
-            hits = hits.reset_index()
-            base = pdf[["url", "lang"]].reset_index().rename(
-                columns={"index": "level_0"}
-            )
-            out = hits.merge(base, on="level_0", how="left")
-            yield pd.DataFrame(
-                {
-                    "url": out["url"],
-                    "lang": out["lang"],
-                    "mention_idx": out["match"].astype("int32"),
-                    "place_id": out["pid"].astype("int64"),
-                    "lat": out["lat"].astype("float64"),
-                    "lon": out["lon"].astype("float64"),
-                    "name": "Name_" + out["pid"].astype(str),
-                }
-            )
-
-    return pages.select("url", "lang", "text").mapInPandas(parse, _MENTIONS_SCHEMA)
 
 
 CLASS_SRC = ["city", "town", "village", "hamlet", "university", "farm_aux"]

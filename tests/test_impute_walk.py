@@ -1,15 +1,17 @@
 """The one-pass impute walk (walk_input -> impute_summary ->
-replay_impute -> emit_map_blocks -> expand_map_blocks) against a plain-Python replay of the
-reference walk (impute_children zoom by zoom, mbtile_tools.py:106-196)
-on random tiles_all key sets: heavy ids that turn dup at different
-zooms, rows carrying the empty id, rows under tiles that tiles_all does
-not hold, rows outside the universe, and universes small enough that
-the empty id is not a dup at mid."""
+replay_impute -> emit_map_blocks -> expand_map_blocks) against a
+plain-Python replay of the reference walk (build_oracle.reference_walk:
+impute zoom by zoom, mbtile_tools.py:106-196) on random tiles_all key
+sets: heavy ids that turn dup at different zooms, rows carrying the
+empty id, rows under tiles that tiles_all does not hold, rows outside
+the universe, and universes small enough that the empty id is not a
+dup at mid."""
 
 import random
 from collections import Counter
 
 import pytest
+from build_oracle import reference_walk
 
 from sparktiles.operators.pyramid import (
     block_stats,
@@ -22,27 +24,6 @@ from sparktiles.operators.pyramid import (
 )
 
 E = "e" * 32
-
-
-def reference_walk(tiles, universe, minzoom, mid, maxzoom):
-    """{z: {(x, y): tile_id}} by the reference walk: [minzoom..mid] is
-    the universe plus every tiles_all tile, deeper zooms impute."""
-    maps = {}
-    for z in range(minzoom, mid + 1):
-        m = {p: E for p in universe[z]}
-        m.update({(x, y): t for (zz, x, y), t in tiles.items() if zz == z})
-        maps[z] = m
-    for z in range(mid + 1, maxzoom + 1):
-        parents = maps[z - 1]
-        cnt = Counter(parents.values())
-        dups = {c for c, n in cnt.items() if n >= dup_threshold(z - 1)}
-        m = {}
-        for (x, y), c in parents.items():
-            for k in ((2 * x, 2 * y), (2 * x + 1, 2 * y),
-                      (2 * x, 2 * y + 1), (2 * x + 1, 2 * y + 1)):
-                m[k] = c if c in dups else tiles.get((z,) + k, E)
-        maps[z] = m
-    return maps
 
 
 def random_case(seed, minzoom, mid, maxzoom, shadow=False):
@@ -114,7 +95,7 @@ def test_walk_equals_reference(spark, seed, minzoom, mid, maxzoom, shadow,
         .localCheckpoint(eager=True)
     got = expand_map_blocks(blocks, maxzoom).collect()
 
-    want = reference_walk(tiles, universe, minzoom, mid, maxzoom)
+    want = reference_walk(tiles, universe, minzoom, mid, maxzoom, E)
     rows = [(r.zoom_level, r.tile_column, r.tile_row) for r in got]
     assert len(rows) == len(set(rows))
     assert {(r.zoom_level, r.tile_column, r.tile_row): r.tile_id

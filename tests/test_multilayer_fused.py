@@ -371,7 +371,7 @@ def test_build_tiles_fused_point_plan(spark):
     mlb = TileBuild(spark, frames, BuildConfig(
         store_dir=tempfile.mkdtemp(prefix="sparktiles_fpt_"),
         minzoom=0, maxzoom=ZMAX, gzip_level=None))
-    tiles = mlb._build_tiles((0, ZMAX), None)
+    tiles = mlb._build_tiles((0, ZMAX))
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         tiles.explain("formatted")

@@ -151,10 +151,10 @@ def test_fused_single_layer_equals_two_phase(spark):
 
 
 def test_point_encoder_paths_byte_identical():
-    """The three point-layer encoders (scalar columnar, whole-group
-    vectorized, batch-prepped) must produce identical bytes on
-    randomized tiles incl. None attrs, cross-type hash collisions
-    (True vs 1), negative fids, and empty strings."""
+    """The two point-layer encoders (scalar columnar, batch-prepped)
+    must produce identical bytes on randomized tiles incl. None attrs,
+    cross-type hash collisions (True vs 1), negative fids, and empty
+    strings."""
     import random
 
     import numpy as np
@@ -189,10 +189,8 @@ def test_point_encoder_paths_byte_identical():
         want = C.encode_layer_columnar(
             "L", fids.tolist() if fids is not None else None,
             C.GEOM_POINT, geoms, attr_cols, 4096)
-        vec = C.encode_layer_points_vec("L", fids, ix, iy, attr_cols, 4096)
         ff, gf = C.point_row_fields_vec(fids, ix, iy)
         prepped = C.encode_layer_points_prepped("L", ff, gf, 0, n, attr_cols, 4096)
-        assert want == vec, f"vec path diverged (trial {trial})"
         assert want == prepped, f"prepped path diverged (trial {trial})"
     # decode sanity on the last tile
     dec = C.decode_tile(want)

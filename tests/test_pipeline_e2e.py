@@ -17,6 +17,7 @@ from collections import Counter
 from pathlib import Path
 
 import pytest
+from build_oracle import assert_matches_oracle, store_contents
 from pyspark.sql import functions as F
 
 from sparktiles.functions import mvtcodec as C
@@ -125,12 +126,19 @@ def test_text_byte_identical_per_url(spark, pages):
 
 
 def test_feature_extraction_matches_oracle(spark, pages):
+    from sparktiles.sources.geoparse import extract_mentions
+
     feats = build_features(pages)
     texts = [r.text for r in pages.select("text").collect()]
     exp_total = sum(len(MENTION_RE.findall(t)) for t in texts)
     assert feats.count() == exp_total
     # feature ids unique per (url, mention)
     assert feats.select("feature_id").distinct().count() == exp_total
+    # mention_idx is dense per url starting at 0
+    mx = extract_mentions(pages).groupBy("url").agg(
+        F.min("mention_idx").alias("mn"), F.max("mention_idx").alias("mx"),
+        F.count("*").alias("c"))
+    assert mx.where((F.col("mn") != 0) | (F.col("mx") != F.col("c") - 1)).count() == 0
 
 
 def test_tile_assignment_matches_oracle(spark, pages, tileset, tmp_path):
@@ -160,7 +168,7 @@ def test_full_build_and_decode(spark, pages, tileset, tmp_path):
         mid_zoom=2, gzip_level=None,
     )
     build = TileBuild(spark, frames, cfg)
-    summary = build.build()
+    summary = build.build_fast()
     assert summary["tiles"] > 0
 
     # tile_map covers the full pyramid at every zoom
@@ -208,8 +216,8 @@ def test_impute_equals_direct(spark, pages, tileset, tmp_path):
         store_dir=str(tmp_path / "imputed"), minzoom=0, maxzoom=4, mid_zoom=1))
     b2 = TileBuild(spark, frames, BuildConfig(
         store_dir=str(tmp_path / "direct"), minzoom=0, maxzoom=4, mid_zoom=4))
-    b1.build()
-    b2.build()
+    b1.build_fast()
+    b2.build_fast()
     m1 = b1.read_tile_map()
     m2 = b2.read_tile_map()
     assert m1.count() == m2.count()
@@ -217,39 +225,15 @@ def test_impute_equals_direct(spark, pages, tileset, tmp_path):
 
 
 def test_fast_build_equals_loop_build(spark, pages, tileset, tmp_path):
-    """build_fast (one-shot blob generation + per-zoom bookkeeping)
+    """build_fast (one-shot blob generation + one-pass impute walk)
     must produce the identical tile_map AND identical image bytes as
-    the faithful per-zoom loop."""
+    the reference walk over per-zoom generation (build_oracle)."""
     feats = build_features(pages).cache()
     frames = make_point_layer_frames(feats, tileset)
-    slow = TileBuild(spark, frames, BuildConfig(
-        store_dir=str(tmp_path / "slow"), minzoom=0, maxzoom=4, mid_zoom=2))
     fast = TileBuild(spark, frames, BuildConfig(
         store_dir=str(tmp_path / "fast"), minzoom=0, maxzoom=4, mid_zoom=2))
-    slow.build()
     fast.build_fast()
-    m1, m2 = slow.read_tile_map(), fast.read_tile_map()
-    assert m1.count() == m2.count()
-    assert m1.exceptAll(m2).count() == 0
-    i1 = {r.tile_id: bytes(r.tile_data) for r in slow.read_tile_images().collect()}
-    i2 = {r.tile_id: bytes(r.tile_data) for r in fast.read_tile_images().collect()}
-    used = {r.tile_id for r in m2.select("tile_id").distinct().collect()}
-    for tid in used:
-        assert i1[tid] == i2[tid]
-
-
-def test_resume_skips_completed_zooms(spark, pages, tileset, tmp_path):
-    feats = build_features(pages).cache()
-    frames = make_point_layer_frames(feats, tileset)
-    cfg = BuildConfig(store_dir=str(tmp_path / "r"), minzoom=0, maxzoom=3, mid_zoom=1)
-    b = TileBuild(spark, frames, cfg)
-    b.build()
-    first = {s["z"]: s for s in b.metrics}
-    b2 = TileBuild(spark, frames, cfg)
-    s2 = b2.build()
-    # nothing re-done
-    assert s2["tiles"] == 0 and b2.metrics == []
-    assert sorted(first) == [0, 1, 2, 3]
+    assert_matches_oracle(fast)
 
 
 def test_single_zoom_build(spark, pages, tileset, tmp_path):
@@ -266,30 +250,12 @@ def test_single_zoom_build(spark, pages, tileset, tmp_path):
     assert {r.zoom_level for r in tm.select("zoom_level").distinct().collect()} == {3}
 
 
-def test_jvm_and_pandas_extraction_identical(spark, pages):
-    """The codegen extract_mentions and the Arrow/pandas variant are
-    row-for-row identical (same regex language subset)."""
-    from sparktiles.sources.geoparse import (
-        extract_mentions, extract_mentions_pandas)
-
-    a = extract_mentions(pages)
-    b = extract_mentions_pandas(pages)
-    key = ["url", "mention_idx"]
-    assert a.count() == b.count()
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    # mention_idx is dense per url starting at 0 in both
-    mx = a.groupBy("url").agg(
-        F.min("mention_idx").alias("mn"), F.max("mention_idx").alias("mx"),
-        F.count("*").alias("c"))
-    bad = mx.where((F.col("mn") != 0) | (F.col("mx") != F.col("c") - 1)).count()
-    assert bad == 0
-
-
 def test_fast_build_equals_loop_build_wkb(spark, tmp_path):
-    """Faithful-vs-fast equivalence for a WKB line layer: the per-zoom
-    loop (supercover assignment at each single zoom + impute) must
-    produce the identical tile_map and image bytes as the one-shot
-    build — the line/polygon twin of the point-layer test above."""
+    """Oracle-vs-fast equivalence for a WKB line layer: the reference
+    walk over per-zoom generation (supercover assignment at each single
+    zoom) must give the identical tile_map and image bytes as the
+    one-shot build — the line/polygon twin of the point-layer test
+    above."""
     from sparktiles.operators.mvt import LayerSpec
     from sparktiles.sources.lines import generate_lines
 
@@ -299,26 +265,10 @@ def test_fast_build_equals_loop_build_wkb(spark, tmp_path):
                      attr_fields={"class": "string", "name": "string"},
                      key_field="feature_id", buffer_px=4,
                      geometry_kind="wkb")
-    slow = TileBuild(spark, [(spec, lines)], BuildConfig(
-        store_dir=str(tmp_path / "wslow"), minzoom=0, maxzoom=3, mid_zoom=1))
     fast = TileBuild(spark, [(spec, lines)], BuildConfig(
         store_dir=str(tmp_path / "wfast"), minzoom=0, maxzoom=3, mid_zoom=1))
-    slow.build()
     fast.build_fast()
-    m1, m2 = slow.read_tile_map(), fast.read_tile_map()
-    assert m1.count() == m2.count()
-    assert m1.exceptAll(m2).count() == 0
-    i1 = {r.tile_id: bytes(r.tile_data) for r in slow.read_tile_images().collect()}
-    i2 = {r.tile_id: bytes(r.tile_data) for r in fast.read_tile_images().collect()}
-    for tid in {r.tile_id for r in m2.select("tile_id").distinct().collect()}:
-        assert i1[tid] == i2[tid]
-
-
-def _store_contents(b):
-    """(sorted map rows, {tile_id: image bytes})."""
-    rows = sorted(tuple(r) for r in b.read_tile_map().collect())
-    imgs = {r.tile_id: bytes(r.tile_data) for r in b.read_tile_images().collect()}
-    return rows, imgs
+    assert_matches_oracle(fast)
 
 
 def _keep_phase1(store):
@@ -331,21 +281,15 @@ def _keep_phase1(store):
 def test_fast_build_equals_loop_build_tiny_bounds(spark, pages, tileset, tmp_path):
     """A one-tile universe at mid: the empty id is NOT a dup there, and
     tiles_all holds rows outside the bounds (in the map at z <= mid,
-    not below). build_fast == build()."""
+    not below). build_fast == the reference walk."""
     feats = build_features(pages).cache()
     frames = make_point_layer_frames(feats, tileset)
     cfg = dict(minzoom=0, maxzoom=4, mid_zoom=2, bounds_lonlat=(5.0, 45.0, 6.0, 46.0))
-    slow = TileBuild(spark, frames, BuildConfig(store_dir=str(tmp_path / "s"), **cfg))
     fast = TileBuild(spark, frames, BuildConfig(store_dir=str(tmp_path / "f"), **cfg))
-    slow.build()
     fast.build_fast()
     empty_id = hashlib.md5(empty_tile_blob(None)).hexdigest()
     assert fast.read_tile_map(2).where(F.col("tile_id") == empty_id).count() < 20
-    m1, i1 = _store_contents(slow)
-    m2, i2 = _store_contents(fast)
-    assert m1 == m2
-    for tid in {r[3] for r in m2}:
-        assert i1[tid] == i2[tid]
+    assert_matches_oracle(fast)
 
 
 def test_fast_phase2_job_count_fixed(spark, pages, tileset, tmp_path):
@@ -397,12 +341,12 @@ def test_fast_build_resume_after_phase1(spark, pages, tileset, tmp_path):
                       mid_zoom=2, gzip_level=6)
     first = TileBuild(spark, frames, cfg)
     s1 = first.build_fast()
-    before = _store_contents(first)
+    before = store_contents(first)
     shutil.rmtree(Path(cfg.store_dir) / "tile_map")
     (Path(cfg.store_dir) / "_manifest.json").unlink()
     again = TileBuild(spark, frames, cfg)
     s2 = again.build_fast()
-    assert _store_contents(again) == before
+    assert store_contents(again) == before
     assert s2["zooms"] == s1["zooms"]
     assert [z["n_imputed"] + z["n_generated"] for z in s2["zooms"]] == [
         4**z for z in range(5)]
@@ -473,16 +417,15 @@ def test_fast_build_many_tasks_and_lineage(spark, pages, tileset, tmp_path,
                                            monkeypatch):
     """A map too large for one task is written by one task per few
     mid-zoom subtrees (here forced by a tiny rows-per-task budget):
-    same map and images as build(), one lineage row per file, and the
-    per-file lineage stays exact when spark.sql.files.maxRecordsPerFile
-    splits a task's output (the rows are then read back)."""
+    same map and images as the reference walk, one lineage row per
+    file, and the per-file lineage stays exact when
+    spark.sql.files.maxRecordsPerFile splits a task's output (the rows
+    are then read back)."""
     import sparktiles.plans.pipeline as pl
 
     feats = build_features(pages).cache()
     frames = make_point_layer_frames(feats, tileset)
     cfg = dict(minzoom=0, maxzoom=5, mid_zoom=2)
-    slow = TileBuild(spark, frames, BuildConfig(store_dir=str(tmp_path / "s"), **cfg))
-    slow.build()
     fast = TileBuild(spark, frames, BuildConfig(store_dir=str(tmp_path / "f"), **cfg))
     assert fast._walk_partitions(2) is None  # 1,360 rows: AQE decides
     deep = TileBuild(spark, frames, BuildConfig(
@@ -491,12 +434,8 @@ def test_fast_build_many_tasks_and_lineage(spark, pages, tileset, tmp_path,
     monkeypatch.setattr(pl, "MAP_ROWS_PER_TASK", 50)
     assert fast._walk_partitions(2) == 16  # capped at one per mid subtree
     fast.build_fast()
-    m1, i1 = _store_contents(slow)
-    m2, i2 = _store_contents(fast)
-    assert m1 == m2
-    assert set(i2) == {r[3] for r in m2}
-    for tid in i2:
-        assert i1[tid] == i2[tid]
+    rows, imgs = assert_matches_oracle(fast)
+    assert set(imgs) == {r[3] for r in rows}
     empty_id = hashlib.md5(empty_tile_blob(None)).hexdigest()
     assert len(list(Path(fast._map_path(5)).glob("part-*"))) > 1
     _check_lineage_files(fast, empty_id)
@@ -507,5 +446,5 @@ def test_fast_build_many_tasks_and_lineage(spark, pages, tileset, tmp_path,
         split.build_fast()
     finally:
         spark.conf.unset("spark.sql.files.maxRecordsPerFile")
-    assert _store_contents(split)[0] == m1
+    assert store_contents(split)[0] == rows
     _check_lineage_files(split, empty_id)

@@ -2,6 +2,7 @@
 multi-layer union + ordering."""
 
 import pytest
+from build_oracle import assert_matches_oracle
 from pyspark.sql import functions as F
 
 from sparktiles.functions import geom as G
@@ -139,41 +140,25 @@ def test_two_layer_union_ordering(spark, polys, tmp_path):
 HALF = 20037508.34278925
 
 
-def _same_store(slow, fast):
-    """Identical (z, x, y, tile_id) map and image bytes for every id the
-    map uses."""
-    m1, m2 = slow.read_tile_map(), fast.read_tile_map()
-    assert m1.count() == m2.count()
-    assert m1.exceptAll(m2).count() == 0
-    i1 = {r.tile_id: bytes(r.tile_data) for r in slow.read_tile_images().collect()}
-    i2 = {r.tile_id: bytes(r.tile_data) for r in fast.read_tile_images().collect()}
-    used = {r.tile_id for r in m2.select("tile_id").distinct().collect()}
-    assert used <= set(i2)
-    for tid in used:
-        assert i1[tid] == i2[tid]
-
-
 def _wkb_frame(spark, geoms):
     return spark.createDataFrame(
         [(i, bytearray(G.wkb_dumps(g, srid=3857)), c) for i, g, c in geoms],
         "feature_id long, geom binary, class string")
 
 
-def _both_builds(spark, frames, tmp_path, **cfg):
-    slow = TileBuild(spark, frames, BuildConfig(
-        store_dir=str(tmp_path / "slow"), **cfg))
+def _fast_build(spark, frames, tmp_path, **cfg):
     fast = TileBuild(spark, frames, BuildConfig(
         store_dir=str(tmp_path / "fast"), **cfg))
-    slow.build()
     fast.build_fast()
-    return slow, fast
+    return fast
 
 
 def test_fast_build_nonempty_dup_root(spark, tmp_path):
     """World-spanning horizontal lines + one large polygon: the polygon's
     interior tiles share one non-empty tile_id, >= 20 copies at mid, so
     the walk imputes whole subtrees from a non-empty root; the lines'
-    rows share ids along each tile row. build_fast == build()."""
+    rows share ids along each tile row. build_fast == the reference
+    walk."""
     import numpy as np
 
     lines = _wkb_frame(spark, [
@@ -191,21 +176,21 @@ def test_fast_build_nonempty_dup_root(spark, tmp_path):
     spec_p = LayerSpec(layer_id="landcover", index=1,
                        attr_fields={"class": "string"}, buffer_px=4,
                        geometry_kind="wkb")
-    slow, fast = _both_builds(spark, [(spec_l, lines), (spec_p, polys)],
-                              tmp_path, minzoom=0, maxzoom=5, mid_zoom=3)
+    fast = _fast_build(spark, [(spec_l, lines), (spec_p, polys)],
+                       tmp_path, minzoom=0, maxzoom=5, mid_zoom=3)
     top = (fast.read_tile_map(3).groupBy("tile_id").count()
            .orderBy(F.desc("count")).first())
     assert top["count"] >= 20
     assert bytes(fast.read_tile_images().where(
         F.col("tile_id") == top.tile_id).first().tile_data)  # non-empty root
-    _same_store(slow, fast)
+    assert_matches_oracle(fast)
 
 
 def test_fast_build_row_under_degenerate_parent(spark, tmp_path):
     """A polygon one MVT grid unit wide at z4 snaps to zero area (and is
     dropped) at z3, so tiles_all holds a z4 row under a z3 tile it does
     not hold: the walk must treat that parent as empty. build_fast ==
-    build()."""
+    the reference walk."""
     import numpy as np
 
     unit4 = 2 * HALF / 2**4 / 4096
@@ -217,9 +202,9 @@ def test_fast_build_row_under_degenerate_parent(spark, tmp_path):
     spec = LayerSpec(layer_id="building", index=0,
                      attr_fields={"class": "string"}, buffer_px=0,
                      geometry_kind="wkb")
-    slow, fast = _both_builds(spark, [(spec, _wkb_frame(spark, [(1, tiny, "b")]))],
-                              tmp_path, minzoom=0, maxzoom=4, mid_zoom=2)
+    fast = _fast_build(spark, [(spec, _wkb_frame(spark, [(1, tiny, "b")]))],
+                       tmp_path, minzoom=0, maxzoom=4, mid_zoom=2)
     keys = {(r.z, r.x, r.y) for r in spark.read.parquet(
         str(tmp_path / "fast" / "tiles_all")).select("z", "x", "y").collect()}
     assert (4, 9, 5) in keys and (3, 4, 2) not in keys
-    _same_store(slow, fast)
+    assert_matches_oracle(fast)

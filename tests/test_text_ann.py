@@ -340,27 +340,27 @@ def test_semdedup_over_kmeans_pipeline(spark, emb):
 # ------------------------------------------------------------------ CC dedup
 
 def test_connected_components_hand_graph(spark):
-    from sparktiles.operators.graph import connected_components
+    from sparktiles.operators.graph import connected_components_star
 
-    # two components: a 10-node path (forces multiple hash-min rounds:
-    # diameter 9) and a triangle, ids chosen non-contiguous
+    # two components: a 10-node path (diameter 9) and a triangle, ids
+    # chosen non-contiguous
     path = [(i, i + 1) for i in range(100, 109)]
     tri = [(7, 3), (3, 5), (5, 7)]
     edges = spark.createDataFrame(path + tri, "src long, dst long")
     got = {r["node"]: r["component"]
-           for r in connected_components(edges).collect()}
+           for r in connected_components_star(edges).collect()}
     assert {got[n] for n in range(100, 110)} == {100}
     assert {got[n] for n in (3, 5, 7)} == {3}
     assert len(got) == 13
 
 
 def test_connected_components_max_iter_raises(spark):
-    from sparktiles.operators.graph import connected_components
+    from sparktiles.operators.graph import connected_components_star
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(20)], "src long, dst long")
     with pytest.raises(RuntimeError, match="converge"):
-        connected_components(edges, max_iter=2)
+        connected_components_star(edges, max_iter=2, local_finish_rows=0)
 
 
 def test_minhash_cc_transitively_closed(spark, docs):
@@ -468,16 +468,16 @@ def test_pq_adc_recall_vs_exact(spark, emb):
 
 
 def test_connected_components_self_loop_only_node(spark):
-    from sparktiles.operators.graph import connected_components
+    from sparktiles.operators.graph import connected_components_star
 
     edges = spark.createDataFrame([(5, 5), (1, 2)], "src long, dst long")
     got = {r["node"]: r["component"]
-           for r in connected_components(edges).collect()}
+           for r in connected_components_star(edges).collect()}
     assert got == {5: 5, 1: 1, 2: 1}
 
 
 def _cc_cases():
-    """Adversarial edge lists for the star-vs-hashmin equivalence sweep."""
+    """Adversarial edge lists for the star-vs-union-find sweep."""
     import random
 
     cases = {
@@ -499,19 +499,42 @@ def _cc_cases():
     return cases
 
 
-def test_connected_components_star_matches_hashmin(spark):
-    """large-star/small-star must produce the identical (node -> min id)
-    mapping as hash-min label propagation on every adversarial shape."""
-    from sparktiles.operators.graph import (connected_components,
-                                            connected_components_star)
+def _union_find_components(pairs):
+    """{node: min node id of its component}, plain-Python union-find."""
+    parent = {}
 
-    for name, pairs in _cc_cases().items():
-        edges = spark.createDataFrame(pairs, "src long, dst long")
-        ref = {r["node"]: r["component"]
-               for r in connected_components(edges).collect()}
-        got = {r["node"]: r["component"]
-               for r in connected_components_star(edges).collect()}
-        assert got == ref, f"case {name}: star != hashmin"
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+def test_connected_components_star_matches_union_find(spark):
+    """large-star/small-star must produce the (node -> min id) mapping
+    of a plain union-find on every adversarial shape, both with its
+    single-task local finish and through the distributed rounds only
+    (local_finish_rows=0). The cases run as one graph, each shifted to
+    its own id range, so each gate is one run."""
+    from sparktiles.operators.graph import connected_components_star
+
+    span = 1 << 20
+    cases = _cc_cases()
+    pairs = [(a + i * span, b + i * span)
+             for i, ps in enumerate(cases.values()) for a, b in ps]
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    ref = _union_find_components(pairs)
+    for gate in (2_000_000, 0):
+        got = {r["node"]: r["component"] for r in connected_components_star(
+            edges, local_finish_rows=gate).collect()}
+        bad = sorted({list(cases)[n // span] for n in set(got) | set(ref)
+                      if got.get(n) != ref.get(n)})
+        assert not bad, f"cases {bad}, local_finish_rows={gate}"
 
 
 def test_connected_components_star_string_ids(spark):
