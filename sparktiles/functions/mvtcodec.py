@@ -402,67 +402,6 @@ def layer_frame_blobs(name: str, keys: list[str],
     return header, keys_blob, extent_blob
 
 
-def encode_layer_points_prepped(
-    name: str,
-    fid_fields,
-    geom_fields,
-    s: int,
-    e: int,
-    attr_cols: list[tuple[str, list]],
-    extent: int = DEFAULT_EXTENT,
-    frame_blobs: tuple[bytes, bytes, bytes] | None = None,
-    gtypes=None,
-) -> bytes:
-    """Per-group assembly over batch-prepped row pieces (rows [s, e) of
-    the batch-level fid/geom piece lists; attr_cols are group-local):
-    dictionary-encode values (memoized, same first-seen order as
-    encode_layer_columnar) and frame features from cached small
-    varints. Byte-identical to encode_layer_columnar (fuzz-asserted).
-
-    gtypes: optional per-row geometry-type codes (batch-aligned, like
-    fid/geom_fields) for the WKB path where lines/polygons/points can
-    mix; None means every feature is a point (the point-spine path)."""
-    keys = [k for k, _ in attr_cols]
-    key_bytes = [varint_cached(ki) for ki in range(len(keys))]
-    values: list[bytes] = []
-    value_idx: dict[bytes, int] = {}
-    memos: list[dict] = [dict() for _ in attr_cols]
-    tfield = _GTYPE_FIELD[GEOM_POINT]
-    parts: list[bytes] = []
-    for j in range(e - s):
-        tags = b""
-        for ki, (_kname, col) in enumerate(attr_cols):
-            v = col[j]
-            if v is None:
-                continue
-            memo = memos[ki]
-            vi = memo.get(v)
-            if vi is None:
-                ev = encode_value(v)
-                vi = value_idx.get(ev)
-                if vi is None:
-                    vi = value_idx[ev] = len(values)
-                    values.append(ev)
-                memo[v] = vi
-            tags += key_bytes[ki] + varint_cached(vi)
-        ff = fid_fields[s + j] if fid_fields is not None else b""
-        gf = geom_fields[s + j]
-        if gtypes is not None:
-            tfield = _GTYPE_FIELD[int(gtypes[s + j])]
-        if tags:
-            tags = b"\x12" + varint_cached(len(tags)) + tags
-        body_len = len(ff) + len(tags) + 2 + len(gf)
-        parts.append(b"\x12" + varint_cached(body_len) + ff + tags + tfield + gf)
-    header, keys_blob, extent_blob = (
-        frame_blobs if frame_blobs is not None
-        else layer_frame_blobs(name, keys, extent))
-    body = header
-    body += b"".join(parts)
-    body += keys_blob
-    body += b"".join(b"\x22" + varint_cached(len(v)) + v for v in values)
-    body += extent_blob
-    return _len_field(3, body)
-
 def _varint_nbytes(v: np.ndarray) -> np.ndarray:
     """Varint byte count per uint64 value (vectorized)."""
     nb = np.ones(len(v), dtype=np.int64)

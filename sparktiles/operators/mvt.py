@@ -1,19 +1,29 @@
-"""MVT aggregation operators — the engine's two custom "UDAFs".
+"""MVT tile encode — one kernel for every layer kind and layer count.
 
 Reproduces the reference tile query spine (openmaptiles/sqltomvt.py):
 
   per layer:  ST_AsMVTGeom(geom, TileBBox(z,x,y), extent, buffer, true)
               + ST_AsMVT(rows, layer_id, extent, 'mvtgeometry')
-              (sqltomvt.py:160-224)                      -> encode_layer_df
+              (sqltomvt.py:160-224)
   per tile:   STRING_AGG(mvtl, '' ORDER BY _layer_index)
               [+ GZIP(...)] + md5(mvt) AS key
-              (sqltomvt.py:104-140)                      -> assemble_tiles
+              (sqltomvt.py:104-140)
 
-Both are grouped pandas UDFs (Arrow batches); geometry math is numpy.
-Determinism: features are sorted by feature_id within each (tile, layer)
-group before dictionary encoding, so tile bytes and md5 tile_ids are
-stable across shuffles (ST_AsMVT relies on query ORDER BY; an unordered
-Spark shuffle would otherwise produce unstable bytes).
+Each layer is first normalized to one row shape (norm_schema: packed
+zxy key, layer index, sort key and pre-framed wire pieces): ST_AsMVTGeom
+runs map-side, in Catalyst for points (with_point_tile_coords) and in
+the vectorized vecmvt pipeline for WKB layers. Then ONE (zxy) exchange
+feeds ONE grouped pass (assemble_normalized) whose per-tile kernel
+frames each layer message (frame_layer), concatenates the layers in
+index order, gzips and md5s. encode_and_assemble_single is the same
+pass for one layer; for a JVM-assigned point layer the point
+normalizer runs as that pass's batch hook, after the exchange, so the
+layer crosses into Python once.
+
+Determinism: features are sorted by feature key within each (tile,
+layer) run before dictionary encoding, so tile bytes and md5 tile_ids
+are stable across shuffles (ST_AsMVT relies on query ORDER BY; an
+unordered Spark shuffle would otherwise produce unstable bytes).
 """
 
 from __future__ import annotations
@@ -168,10 +178,9 @@ def unpack_zxy(key: int) -> tuple[int, int, int]:
 def _value_blobs_batch(conv: np.ndarray) -> np.ndarray:
     """Per-row MVT Value wire blobs for one converted attribute column
     (output of _attr_convert_batch): object ndarray of bytes|None.
-    Memoized per batch keyed by (type, value) — the same collapse rule
-    the per-group memo in encode_layer_points_prepped applies (str keys
-    skip the tuple; a str never equals a tuple) — so repeated values
-    encode once per batch and candidate fan-outs share blob objects."""
+    Memoized per batch keyed by (type, value) (str keys skip the tuple;
+    a str never equals a tuple), so repeated values encode once per
+    batch and candidate fan-outs share blob objects."""
     out = np.empty(len(conv), dtype=object)
     memo: dict = {}
     for i, v in enumerate(conv.tolist()):
@@ -212,16 +221,18 @@ def _vals_columns(out: dict, col_blobs: list, idx, n_vals: int) -> None:
 
 
 def with_wkb_encoded_fields(features: DataFrame, spec,
-                            normalized: bool = False,
                             n_vals: int | None = None) -> DataFrame:
     """Map-side ST_AsMVTGeom + wire-encode for WKB (line/polygon/mixed)
     layers — the WKB twin of with_point_tile_coords, BEFORE the (z,x,y)
     shuffle. Each Arrow batch runs the batch-vectorized pipeline
     (functions/vecmvt.py): WKB decode -> tile transform -> clip
     (Liang-Barsky / Sutherland-Hodgman) -> snap -> MVT command-stream
-    varints. Output rows carry the packed zxy key plus the pre-framed
-    wire pieces (_fidf / _gt / _geomf); rows whose geometry clips away
-    never shuffle at all.
+    varints. Output rows are normalized (norm_schema): the packed zxy
+    key, the pre-framed wire pieces (_fidf / _gt / _geomf) and the attr
+    values pre-encoded as Value blobs; rows whose geometry clips away
+    never shuffle at all. A capped layer also carries `_imp` (the
+    importance value) and, when keyless, `_ord` (the raw tie-break
+    column) for the density-cap window (_normalized_cap).
 
     Scale effect: the pyramid shuffle previously moved the full-
     resolution float64 WKB once PER OVERLAPPED TILE; now it moves small
@@ -229,11 +240,6 @@ def with_wkb_encoded_fields(features: DataFrame, spec,
     for clipped-away candidates from the bbox over-approximation), and
     the post-shuffle kernel is pure dictionary/framing assembly — no
     geometry math after the exchange.
-
-    normalized=True emits the normalized-row shape (norm_schema) instead (attr values
-    pre-encoded as Value blobs, plus _li/_sk) — the multi-layer
-    single-shuffle spine's input; add_imp appends the importance value
-    as `_imp double` for the density-cap window.
     """
     import pandas as pd
 
@@ -245,32 +251,10 @@ def with_wkb_encoded_fields(features: DataFrame, spec,
     attr_items = list(spec.attr_fields.items())
     layer_index = spec.index
     imp_col = spec.importance_col
-    add_imp = normalized and spec.max_features_per_tile and imp_col
-    passthru = list(spec.attr_fields)
-    if key_field:
-        passthru = [key_field] + [c for c in passthru if c != key_field]
-    if imp_col and imp_col not in passthru:
-        passthru.append(imp_col)
-    # cap tie-break for keyless capped layers: _sk is constant 0 then,
-    # so carry the same raw column _prep_layer_features orders its
-    # window by (`key_field or needed[-1]` = the last projected
-    # attr/importance column) as `_ord` — keeps the normalized cap's
-    # selection deterministic and parity with the two-phase path
-    ord_col = (passthru[-1] if normalized and spec.max_features_per_tile
-               and not key_field and passthru else None)
-    if normalized:
-        nv = n_vals if n_vals is not None else len(attr_items)
-        out_schema = norm_schema(nv) + (", _imp double" if add_imp else "")
-        if ord_col:
-            out_schema += (", _ord "
-                           + features.schema[ord_col].dataType.simpleString())
-    else:
-        in_schema = features.schema
-        out_fields = ["zxy long"]
-        for c in passthru:
-            out_fields.append(f"`{c}` {in_schema[c].dataType.simpleString()}")
-        out_fields += ["_fidf binary", "_gt tinyint", "_geomf binary"]
-        out_schema = ", ".join(out_fields)
+    add_imp = spec.max_features_per_tile and imp_col
+    ord_col = _cap_tiebreak_col(spec)
+    nv = n_vals if n_vals is not None else len(attr_items)
+    out_schema = _norm_out_schema(features, nv, add_imp, ord_col)
 
     def run(batches):
         for pdf in batches:
@@ -285,40 +269,53 @@ def with_wkb_encoded_fields(features: DataFrame, spec,
             if not keep.any():
                 continue
             ki = np.flatnonzero(keep)
-            zxy = (z[ki] << 58) ^ (x[ki] << 29) ^ y[ki]
-            out = {"zxy": zxy}
-            if normalized:
-                nk = len(ki)
-                out["_li"] = np.full(nk, layer_index, dtype=np.int32)
-                if key_field:
-                    fids = pdf[key_field].to_numpy()[ki]
-                    out["_sk"] = fids
-                    out["_fidf"] = fid_fields_vec(fids)
-                else:
-                    out["_sk"] = np.zeros(nk, dtype=np.int64)
-                    out["_fidf"] = [None] * nk
-                out["_gt"] = gt[ki]
-                out["_geomf"] = [gf[i] for i in ki.tolist()]
-                col_blobs = [
-                    _value_blobs_batch(_attr_convert_batch(
-                        pdf[k].to_numpy(), t)) for k, t in attr_items]
-                _vals_columns(out, col_blobs, ki, nv)
-                if add_imp:
-                    out["_imp"] = pdf[imp_col].to_numpy()[ki]
-                if ord_col:
-                    out["_ord"] = pdf[ord_col].to_numpy()[ki]
+            nk = len(ki)
+            out = {"zxy": (z[ki] << 58) ^ (x[ki] << 29) ^ y[ki],
+                   "_li": np.full(nk, layer_index, dtype=np.int32)}
+            if key_field:
+                fids = pdf[key_field].to_numpy()[ki]
+                out["_sk"] = fids
+                out["_fidf"] = fid_fields_vec(fids)
             else:
-                for c in passthru:
-                    out[c] = pdf[c].to_numpy()[ki]
-                if key_field:
-                    out["_fidf"] = fid_fields_vec(out[key_field])
-                else:
-                    out["_fidf"] = [None] * len(ki)
-                out["_gt"] = gt[ki]
-                out["_geomf"] = [gf[i] for i in ki.tolist()]
+                out["_sk"] = np.zeros(nk, dtype=np.int64)
+                out["_fidf"] = [None] * nk
+            out["_gt"] = gt[ki]
+            out["_geomf"] = [gf[i] for i in ki.tolist()]
+            col_blobs = [
+                _value_blobs_batch(_attr_convert_batch(
+                    pdf[k].to_numpy(), t)) for k, t in attr_items]
+            _vals_columns(out, col_blobs, ki, nv)
+            if add_imp:
+                out["_imp"] = pdf[imp_col].to_numpy()[ki]
+            if ord_col:
+                out["_ord"] = pdf[ord_col].to_numpy()[ki]
             yield pd.DataFrame(out)
 
     return features.mapInPandas(run, out_schema)
+
+
+def _cap_tiebreak_col(spec) -> str | None:
+    """Raw column a KEYLESS capped layer carries as `_ord`: its _sk is
+    constant 0, so the cap window orders by the last projected column
+    instead (projection order: geometry, attrs, importance) — a
+    deterministic selection. _point_tile_frame's window orders keyless
+    layers by the same column."""
+    if not spec.max_features_per_tile or spec.key_field:
+        return None
+    cols = ["py" if spec.geometry_kind == "point" else "geom"]
+    cols += list(spec.attr_fields)
+    if spec.importance_col and spec.importance_col not in cols:
+        cols.append(spec.importance_col)
+    return cols[-1]
+
+
+def _norm_out_schema(features: DataFrame, nv: int, add_imp,
+                     ord_col: str | None) -> str:
+    """norm_schema plus the cap window's auxiliary `_imp` / `_ord`."""
+    out = norm_schema(nv) + (", _imp double" if add_imp else "")
+    if ord_col:
+        out += ", _ord " + features.schema[ord_col].dataType.simpleString()
+    return out
 
 
 # per-flush candidate-row cap for the fused supercover stage: bounds
@@ -331,7 +328,6 @@ FUSED_CANDIDATE_CAP = 262_144
 
 def with_wkb_supercover_encoded_fields(features: DataFrame, spec,
                                        minzoom: int, maxzoom: int,
-                                       normalized: bool = False,
                                        candidate_cap: int | None = None,
                                        n_vals: int | None = None,
                                        ) -> DataFrame:
@@ -350,10 +346,9 @@ def with_wkb_supercover_encoded_fields(features: DataFrame, spec,
     whole zoom-span fan-out.
 
     Byte-equal to assign_supercover_tiles_multi -> with_wkb_encoded_
-    fields (asserted in tests/test_tilecover.py); usable whenever the
-    layer has no post_assign hook (it needs the assigned rows as a
-    DataFrame between the stages).
-    normalized=True emits normalized rows (see with_wkb_encoded_fields)."""
+    fields (asserted in tests/test_tilecover.py), and emits the same
+    normalized rows; usable whenever the layer has no post_assign hook
+    (it needs the assigned rows as a DataFrame between the stages)."""
     import pandas as pd
 
     from sparktiles.functions.tilecover import cover_cells_zoom
@@ -371,29 +366,11 @@ def with_wkb_supercover_encoded_fields(features: DataFrame, spec,
     attr_items = list(spec.attr_fields.items())
     layer_index = spec.index
     imp_col = spec.importance_col
-    add_imp = normalized and spec.max_features_per_tile and imp_col
-    mkcap = _kernel_cap(spec) if normalized else None
-    passthru = list(spec.attr_fields)
-    if key_field:
-        passthru = [key_field] + [c for c in passthru if c != key_field]
-    if imp_col and imp_col not in passthru:
-        passthru.append(imp_col)
-    # keyless-cap tie-break column — see with_wkb_encoded_fields
-    ord_col = (passthru[-1] if normalized and spec.max_features_per_tile
-               and not key_field and passthru else None)
-    if normalized:
-        nv = n_vals if n_vals is not None else len(attr_items)
-        out_schema = norm_schema(nv) + (", _imp double" if add_imp else "")
-        if ord_col:
-            out_schema += (", _ord "
-                           + features.schema[ord_col].dataType.simpleString())
-    else:
-        in_schema = features.schema
-        out_fields = ["zxy long"]
-        for c in passthru:
-            out_fields.append(f"`{c}` {in_schema[c].dataType.simpleString()}")
-        out_fields += ["_fidf binary", "_gt tinyint", "_geomf binary"]
-        out_schema = ", ".join(out_fields)
+    add_imp = spec.max_features_per_tile and imp_col
+    mkcap = _kernel_cap(spec)
+    ord_col = _cap_tiebreak_col(spec)
+    nv = n_vals if n_vals is not None else len(attr_items)
+    out_schema = _norm_out_schema(features, nv, add_imp, ord_col)
 
     def run(batches):
         for pdf in batches:
@@ -401,15 +378,14 @@ def with_wkb_supercover_encoded_fields(features: DataFrame, spec,
                 continue
             blobs = pdf["geom"].to_numpy()
             pt, ln, pg = decode_wkb_batch(blobs)
-            if normalized:
-                col_blobs = [
-                    _value_blobs_batch(_attr_convert_batch(
-                        pdf[k].to_numpy(), t)) for k, t in attr_items]
-                fall = fid_fields_vec(
-                    pdf[key_field].to_numpy()) if key_field else None
-                sk_all = pdf[key_field].to_numpy() if key_field else None
-                imp_all = pdf[imp_col].to_numpy() if add_imp else None
-                ord_all = pdf[ord_col].to_numpy() if ord_col else None
+            col_blobs = [
+                _value_blobs_batch(_attr_convert_batch(
+                    pdf[k].to_numpy(), t)) for k, t in attr_items]
+            fall = fid_fields_vec(
+                pdf[key_field].to_numpy()) if key_field else None
+            sk_all = pdf[key_field].to_numpy() if key_field else None
+            imp_all = pdf[imp_col].to_numpy() if add_imp else None
+            ord_all = pdf[ord_col].to_numpy() if ord_col else None
 
             def flush(idx, zs, xs, ys):
                 gf, gt = wkb_row_fields_vec(
@@ -420,8 +396,7 @@ def with_wkb_supercover_encoded_fields(features: DataFrame, spec,
                 kpos = np.flatnonzero(keep)
                 ki = idx[kpos]
                 zxyv = (zs[kpos] << 58) ^ (xs[kpos] << 29) ^ ys[kpos]
-                if (normalized and mkcap is not None
-                        and sk_all.dtype.kind in "iu"):
+                if mkcap is not None and sk_all.dtype.kind in "iu":
                     # map-side partial cap for key-ordered caps: this
                     # flush keeps only its mkcap smallest keys per tile
                     # (clip already ran — the cap counts survivors);
@@ -431,32 +406,22 @@ def with_wkb_supercover_encoded_fields(features: DataFrame, spec,
                     sel = _partial_cap_sel(zxyv, sk_all[ki], mkcap)
                     if len(sel) < len(kpos):
                         kpos, ki, zxyv = kpos[sel], ki[sel], zxyv[sel]
-                out = {"zxy": zxyv}
-                if normalized:
-                    nk = len(ki)
-                    out["_li"] = np.full(nk, layer_index, dtype=np.int32)
-                    if key_field:
-                        out["_sk"] = sk_all[ki]
-                        out["_fidf"] = [fall[i] for i in ki.tolist()]
-                    else:
-                        out["_sk"] = np.zeros(nk, dtype=np.int64)
-                        out["_fidf"] = [None] * nk
-                    out["_gt"] = gt[kpos]
-                    out["_geomf"] = [gf[i] for i in kpos.tolist()]
-                    _vals_columns(out, col_blobs, ki, nv)
-                    if add_imp:
-                        out["_imp"] = imp_all[ki]
-                    if ord_col:
-                        out["_ord"] = ord_all[ki]
+                nk = len(ki)
+                out = {"zxy": zxyv,
+                       "_li": np.full(nk, layer_index, dtype=np.int32)}
+                if key_field:
+                    out["_sk"] = sk_all[ki]
+                    out["_fidf"] = [fall[i] for i in ki.tolist()]
                 else:
-                    for c in passthru:
-                        out[c] = pdf[c].to_numpy()[ki]
-                    if key_field:
-                        out["_fidf"] = fid_fields_vec(out[key_field])
-                    else:
-                        out["_fidf"] = [None] * len(ki)
-                    out["_gt"] = gt[kpos]
-                    out["_geomf"] = [gf[i] for i in kpos.tolist()]
+                    out["_sk"] = np.zeros(nk, dtype=np.int64)
+                    out["_fidf"] = [None] * nk
+                out["_gt"] = gt[kpos]
+                out["_geomf"] = [gf[i] for i in kpos.tolist()]
+                _vals_columns(out, col_blobs, ki, nv)
+                if add_imp:
+                    out["_imp"] = imp_all[ki]
+                if ord_col:
+                    out["_ord"] = ord_all[ki]
                 return pd.DataFrame(out)
 
             pend, pend_n = [], 0
@@ -517,43 +482,90 @@ def with_point_tile_coords(features: DataFrame, extent: int,
     )
 
 
-def _normalize_point_prepped(features: DataFrame, spec,
-                             n_vals: int | None = None) -> DataFrame:
-    """Normalized-row emitter for point layers: input is the
-    with_point_tile_coords output (zxy, ix, iy, attrs, key); one
-    mapInPandas computes the fid/geom wire pieces (point_row_fields_vec)
-    and per-batch pre-encoded attr Value blobs — the point twin of the
-    normalized WKB emitters, ahead of the single multi-layer shuffle."""
-    import pandas as pd
-
+def _point_normalizer(spec, n_vals: int | None = None):
+    """Batch normalizer for point layers: column arrays of the
+    with_point_tile_coords output (zxy, ix, iy, attrs, key) -> the
+    normalized columns (norm_schema): fid/geom wire pieces
+    (point_row_fields_vec) and per-batch pre-encoded attr Value blobs.
+    It runs map-side for the multi-layer spine (_normalize_point_rows)
+    and as the grouped pass's `prep` hook, after the exchange, for a
+    single JVM-assigned point layer (encode_and_assemble_single)."""
     key_field = spec.key_field
     attr_items = list(spec.attr_fields.items())
     layer_index = spec.index
     nv = n_vals if n_vals is not None else len(attr_items)
 
+    def normalize(cols: dict) -> dict:
+        n = len(cols["zxy"])
+        fids = cols[key_field] if key_field else None
+        ff, gf = C.point_row_fields_vec(fids, cols["ix"], cols["iy"])
+        col_blobs = [_value_blobs_batch(_attr_convert_batch(cols[k], t))
+                     for k, t in attr_items]
+        out = {
+            "zxy": cols["zxy"],
+            "_li": np.full(n, layer_index, dtype=np.int32),
+            "_sk": fids if key_field else np.zeros(n, dtype=np.int64),
+            "_fidf": ff if ff is not None else [None] * n,
+            "_gt": np.full(n, C.GEOM_POINT, dtype=np.int8),
+            "_geomf": gf,
+        }
+        _vals_columns(out, col_blobs, np.arange(n), nv)
+        return out
+
+    return normalize
+
+
+def _normalize_point_rows(features: DataFrame, spec,
+                          n_vals: int | None = None) -> DataFrame:
+    """Normalized-row emitter for point layers (one mapInPandas running
+    _point_normalizer per batch): the point twin of the normalized WKB
+    emitters, ahead of the single multi-layer shuffle."""
+    import pandas as pd
+
+    normalize = _point_normalizer(spec, n_vals)
+    nv = n_vals if n_vals is not None else len(spec.attr_fields)
+
     def run(batches):
         for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            fids = pdf[key_field].to_numpy() if key_field else None
-            ff, gf = C.point_row_fields_vec(
-                fids, pdf["ix"].to_numpy(), pdf["iy"].to_numpy())
-            col_blobs = [
-                _value_blobs_batch(_attr_convert_batch(
-                    pdf[k].to_numpy(), t)) for k, t in attr_items]
-            out = {
-                "zxy": pdf["zxy"].to_numpy(),
-                "_li": np.full(n, layer_index, dtype=np.int32),
-                "_sk": fids if key_field else np.zeros(n, dtype=np.int64),
-                "_fidf": ff if ff is not None else [None] * n,
-                "_gt": np.full(n, C.GEOM_POINT, dtype=np.int8),
-                "_geomf": gf,
-            }
-            _vals_columns(out, col_blobs, np.arange(n), nv)
-            yield pd.DataFrame(out)
+            if len(pdf):
+                yield pd.DataFrame(normalize(
+                    {c: pdf[c].to_numpy() for c in pdf.columns}))
 
     return features.mapInPandas(run, norm_schema(nv))
+
+
+def _point_tile_frame(features: DataFrame, spec) -> DataFrame:
+    """Shared prefix for an ASSIGNED point frame (z, x, y, px, py, ...):
+    project what the encode reads, ST_AsMVTGeom in Catalyst
+    (with_point_tile_coords), then the importance/keyless density-cap
+    window. Key-ordered caps skip the window: the grouped pass compacts
+    each (tile, layer) run to the cap (grouped_map_sorted layer_caps).
+    Only importance/keyless selections, whose
+    order differs from the encode sort, need the window (one window with
+    WindowGroupLimit pruning, see _capped_window). No Python stage."""
+    mvt_buffer = int(spec.extent * spec.buffer_px / 256)
+    feats = with_point_tile_coords(_project(features, spec, assigned=True),
+                                   spec.extent, mvt_buffer)
+    cap = spec.max_features_per_tile
+    if cap and _kernel_cap(spec) is None:
+        order = []
+        if spec.importance_col:
+            order.append(F.desc(spec.importance_col))
+        order.append(F.col(spec.key_field or _cap_tiebreak_col(spec)))
+        feats = _capped_window(feats, cap, order)
+    return feats
+
+
+def _project(features: DataFrame, spec, assigned: bool) -> DataFrame:
+    """Only the columns the encode reads, so callers cannot shuffle
+    e.g. `html`: z/x/y (assigned frames), geometry, attrs, key,
+    importance."""
+    geom = ["px", "py"] if spec.geometry_kind == "point" else ["geom"]
+    cols = (["z", "x", "y"] if assigned else []) + geom + list(spec.attr_fields)
+    for c in (spec.key_field, spec.importance_col):
+        if c and c not in cols:
+            cols.append(c)
+    return features.select(*dict.fromkeys(cols))
 
 
 def _normalize_point_fused(features: DataFrame, spec, minz: int, maxz: int,
@@ -571,7 +583,7 @@ def _normalize_point_fused(features: DataFrame, spec, minz: int, maxz: int,
     memory traffic drops ~10x on the layer kind that dominates real
     tilesets' row counts. Output rows are byte-identical to
     assign_point_tiles_multi -> with_point_tile_coords ->
-    _normalize_point_prepped (pytest row-level parity): every float op
+    _normalize_point_rows (pytest row-level parity): every float op
     below mirrors the Catalyst expression sequence exactly (same IEEE
     double op order, floor, round-half-even rint; reference tile-bbox
     semantics per openmaptiles-tools sqltomvt.py:197-242)."""
@@ -594,20 +606,9 @@ def _normalize_point_fused(features: DataFrame, spec, minz: int, maxz: int,
     cap = spec.max_features_per_tile
     add_imp = bool(cap and imp_col)
     kcap = _kernel_cap(spec)
-    # cap tie-break parity with the two-phase path's window ordering
-    # (`key_field or needed[-1]`, see normalize_layer_df): keyless
-    # capped layers carry the raw tie-break column as _ord
-    passthru = list(spec.attr_fields)
-    if imp_col and imp_col not in passthru:
-        passthru.append(imp_col)
-    ord_col = None
-    if cap and not key_field:
-        ord_col = passthru[-1] if passthru else "py"
+    ord_col = _cap_tiebreak_col(spec)
     nv = n_vals if n_vals is not None else len(attr_items)
-    out_schema = norm_schema(nv) + (", _imp double" if add_imp else "")
-    if ord_col:
-        out_schema += (", _ord "
-                       + features.schema[ord_col].dataType.simpleString())
+    out_schema = _norm_out_schema(features, nv, add_imp, ord_col)
 
     def run(batches):
         for pdf in batches:
@@ -712,60 +713,29 @@ def _normalize_point_fused(features: DataFrame, spec, minz: int, maxz: int,
 def normalize_layer_df(features: DataFrame, spec,
                        zoom_range: tuple[int, int] | None = None,
                        n_vals: int | None = None) -> DataFrame:
-    """One layer -> normalized rows (norm_schema), entirely MAP-SIDE (the density cap
-    is the one exception — it needs a per-tile window). This is the
-    per-layer half of the single-shuffle multi-layer spine: the caller
-    unions every layer's normalized frame and runs ONE (zxy) grouped
-    pass (assemble_normalized) doing per-layer dictionary encode +
-    ordered concat + gzip + md5.
+    """One layer -> normalized rows (norm_schema), entirely MAP-SIDE
+    (the density cap is the one exception — it needs a per-tile
+    window). This is the per-layer half of the single-shuffle spine:
+    the caller unions every layer's normalized frame and runs ONE (zxy)
+    grouped pass (assemble_normalized) doing per-layer dictionary
+    encode + ordered concat + gzip + md5.
 
     features: assigned rows (z,x,y present) for points / non-fused WKB,
     or the RAW feature frame with zoom_range for the fused paths
     (supercover WKB, in-kernel fan-out points).
     """
-    key_field = spec.key_field
-    fused = zoom_range is not None and spec.geometry_kind == "wkb"
-    fused_pt = zoom_range is not None and spec.geometry_kind == "point"
-    geom_cols = ["px", "py"] if spec.geometry_kind == "point" else ["geom"]
-    needed = (([] if (fused or fused_pt) else ["z", "x", "y"])
-              + geom_cols + list(spec.attr_fields))
-    if key_field and key_field not in needed:
-        needed.append(key_field)
-    if spec.importance_col and spec.importance_col not in needed:
-        needed.append(spec.importance_col)
-    features = features.select(*dict.fromkeys(needed))
-
-    cap = spec.max_features_per_tile
-    if fused_pt:
+    if spec.geometry_kind == "point" and zoom_range is None:
+        return _normalize_point_rows(_point_tile_frame(features, spec),
+                                     spec, n_vals)
+    features = _project(features, spec, assigned=zoom_range is None)
+    if zoom_range is None:
+        norm = with_wkb_encoded_fields(features, spec, n_vals=n_vals)
+    elif spec.geometry_kind == "point":
         norm = _normalize_point_fused(features, spec, zoom_range[0],
                                       zoom_range[1], n_vals)
-        return _normalized_cap(norm, spec)
-    if spec.geometry_kind == "point":
-        mvt_buffer = int(spec.extent * spec.buffer_px / 256)
-        feats = with_point_tile_coords(features, spec.extent, mvt_buffer)
-        if cap and _kernel_cap(spec) is None:
-            # identical window to _prep_layer_features (pre-normalize,
-            # so ordering columns are still raw). Key-ordered caps
-            # skip this entirely — the spine's grouped pass compacts
-            # per (tile, layer) run (grouped_map_sorted layer_caps) +
-            # kernel slice; only importance/keyless selections, whose
-            # order differs from the encode sort, need the window
-            # (single window + WindowGroupLimit pruning, see
-            # _capped_window)
-            order = []
-            if spec.importance_col:
-                order.append(F.desc(spec.importance_col))
-            order.append(F.col(key_field or needed[-1]))
-            feats = _capped_window(feats, cap, order)
-        return _normalize_point_prepped(feats, spec, n_vals)
-
-    if fused:
-        norm = with_wkb_supercover_encoded_fields(
-            features, spec, zoom_range[0], zoom_range[1], normalized=True,
-            n_vals=n_vals)
     else:
-        norm = with_wkb_encoded_fields(features, spec, normalized=True,
-                                       n_vals=n_vals)
+        norm = with_wkb_supercover_encoded_fields(
+            features, spec, zoom_range[0], zoom_range[1], n_vals=n_vals)
     return _normalized_cap(norm, spec)
 
 
@@ -796,8 +766,8 @@ def _normalized_cap(norm: DataFrame, spec) -> DataFrame:
 
     Key-ordered caps (keyed, no importance) are NOT windowed here at
     all: the spine's grouped pass applies them via per-(tile, layer)
-    batch compaction + kernel slice (assemble_normalized /
-    grouped_map_sorted layer_caps) — same selection, zero extra
+    batch compaction (assemble_normalized / grouped_map_sorted
+    layer_caps) — same selection, zero extra
     exchanges, hot-group memory bounded. Importance and keyless caps
     need a selection order different from the encode sort, so they
     keep the pre-exchange window: per-zxy row_number ordered by
@@ -811,7 +781,6 @@ def _normalized_cap(norm: DataFrame, spec) -> DataFrame:
             order.append(F.desc("_imp"))
         # keyed layers: _sk IS the key column; keyless: _sk is constant
         # 0, so order by the carried raw tie-break column instead
-        # (mirrors _prep_layer_features' `key_field or needed[-1]`)
         keyed = "_ord" not in norm.columns
         order.append(F.col("_sk" if keyed else "_ord"))
         norm = _capped_window(norm, cap, order)
@@ -821,38 +790,68 @@ def _normalized_cap(norm: DataFrame, spec) -> DataFrame:
     return norm
 
 
-def assemble_normalized(norm: DataFrame, specs,
-                        gzip_level: int | None = None) -> DataFrame:
-    """The single-shuffle multi-layer tile builder: input is the union
-    of normalize_layer_df frames (norm_schema width-aligned); ONE repartition on the
-    packed zxy key + within-partition sort (zxy, _li, _sk), then one
-    grouped pass per tile that dictionary-encodes each layer's values,
-    frames its features, concatenates layer messages in _li order,
-    gzips, and md5s — the multi-layer twin of
-    encode_and_assemble_single. Output: z,x,y,mvt,tile_id.
+def frame_layer(frame: tuple[bytes, bytes, bytes], fidf, gts, geomf,
+                vcols: list, s: int, e: int) -> bytes:
+    """One MVT layer message from rows [s, e) of per-row wire pieces —
+    the only place layer messages are framed. frame = the layer's
+    constant (header, keys trailer, extent field) (C.layer_frame_blobs);
+    fidf/geomf = pre-framed feature id / geometry fields (fid None ->
+    no id), gts = geometry type codes, vcols = one column of encoded
+    Value blobs (None = null) per declared key, in key order. Values are
+    dictionary-encoded first-seen by encoded bytes, so the output is
+    byte-identical to C.encode_layer_columnar over the raw values
+    (fuzz-asserted in tests/test_mvt.py)."""
+    header, keys_blob, extent_blob = frame
+    vc = C.varint_cached
+    key_bytes = [vc(ki) for ki in range(len(vcols))]
+    values: list[bytes] = []
+    value_idx: dict[bytes, int] = {}
+    parts: list[bytes] = []
+    for r in range(s, e):
+        tags = b""
+        for kb, col in zip(key_bytes, vcols):
+            ev = col[r]
+            if ev is None:
+                continue
+            vi = value_idx.get(ev)
+            if vi is None:
+                vi = value_idx[ev] = len(values)
+                values.append(ev)
+            tags += kb + vc(vi)
+        if tags:
+            tags = b"\x12" + vc(len(tags)) + tags
+        ff = fidf[r]
+        if ff is None:
+            ff = b""
+        gf = geomf[r]
+        tfield = C._GTYPE_FIELD[int(gts[r])]
+        body_len = len(ff) + len(tags) + 2 + len(gf)
+        parts.append(b"\x12" + vc(body_len) + ff + tags + tfield + gf)
+    body = header
+    body += b"".join(parts)
+    body += keys_blob
+    body += b"".join(b"\x22" + vc(len(v)) + v for v in values)
+    body += extent_blob
+    return C._len_field(3, body)
 
-    Byte parity with assemble_tiles(union(encode_layer_df(...)))
-    (pytest-asserted) with one deliberate nuance: value dictionaries
-    dedupe by ENCODED BYTES with a per-batch (type,value) memo, so
-    mixed +-0.0 within one tile-layer-column can differ from the
-    two-phase path's per-group raw-value memo — numerically equal
-    either way."""
-    frame_by_idx = {}
-    for spec in specs:
-        keys = list(spec.attr_fields)
-        frame_by_idx[spec.index] = (
-            C.layer_frame_blobs(spec.layer_id, keys, spec.extent),
-            [C.varint_cached(ki) for ki in range(len(keys))],
-            len(keys),
-            _kernel_cap(spec),
-        )
+
+def _assemble(df: DataFrame, specs, gzip_level: int | None,
+              sort_extra: list[str], prep=None) -> DataFrame:
+    """The grouped tile pass: ONE repartition on the packed zxy key +
+    within-partition sort (zxy, *sort_extra), then per tile: frame each
+    layer run (rows sorted by _li) with frame_layer, concatenate the
+    messages in _li order, gzip, md5. `prep` (a batch normalizer) fills
+    the normalized columns after the exchange when `df` carries raw
+    point rows instead."""
+    frame_by_idx = {
+        spec.index: (C.layer_frame_blobs(spec.layer_id,
+                                         list(spec.attr_fields), spec.extent),
+                     [f"_v{a}" for a in range(len(spec.attr_fields))])
+        for spec in specs}
 
     def tile(arrs: dict, s: int, e: int) -> list[tuple]:
         z, tx, ty = unpack_zxy(int(arrs["zxy"][s]))
         li = arrs["_li"]
-        fidf = arrs["_fidf"]
-        gts = arrs["_gt"]
-        geomf = arrs["_geomf"]
         pieces = []
         i = s
         while i < e:
@@ -860,61 +859,69 @@ def assemble_normalized(norm: DataFrame, specs,
             j = i
             while j < e and li[j] == lcur:
                 j += 1
-            (header, keys_blob, extent_blob), key_bytes, n_attr, kcap = \
-                frame_by_idx[lcur]
-            je = j if kcap is None else min(j, i + kcap)
-            vcols = [arrs[f"_v{a}"] for a in range(n_attr)]
-            values: list[bytes] = []
-            value_idx: dict[bytes, int] = {}
-            parts: list[bytes] = []
-            vc = C.varint_cached
-            for r in range(i, je):
-                tags = b""
-                for ki in range(n_attr):
-                    ev = vcols[ki][r]
-                    if ev is None:
-                        continue
-                    vi = value_idx.get(ev)
-                    if vi is None:
-                        vi = value_idx[ev] = len(values)
-                        values.append(ev)
-                    tags += key_bytes[ki] + vc(vi)
-                if tags:
-                    tags = b"\x12" + vc(len(tags)) + tags
-                ff = fidf[r]
-                if ff is None:
-                    ff = b""
-                gf = geomf[r]
-                tfield = C._GTYPE_FIELD[int(gts[r])]
-                body_len = len(ff) + len(tags) + 2 + len(gf)
-                parts.append(b"\x12" + vc(body_len) + ff + tags + tfield + gf)
-            body = header
-            body += b"".join(parts)
-            body += keys_blob
-            body += b"".join(b"\x22" + vc(len(v)) + v for v in values)
-            body += extent_blob
-            pieces.append(C._len_field(3, body))
+            frame, vnames = frame_by_idx[lcur]
+            pieces.append(frame_layer(
+                frame, arrs["_fidf"], arrs["_gt"], arrs["_geomf"],
+                [arrs[c] for c in vnames], i, j))
             i = j
         blob = b"".join(pieces)
         if gzip_level is not None:
             blob = C.gzip_blob(blob, gzip_level)
         return [(z, tx, ty, blob, hashlib.md5(blob).hexdigest())]
 
-    # key-ordered density caps run entirely in this pass: per-(tile,
-    # layer) batch compaction inside grouped_map_sorted bounds Arrow +
-    # held-group memory for hot tiles (the z0 group = the whole
-    # corpus), and the kernel's je slice above is the final authority.
-    # No cap window, no extra exchange — the build keeps ONE Exchange
-    # (plan-asserted) capped or not.
+    # key-ordered density caps run entirely in this pass: grouped_map_
+    # sorted compacts every (tile, layer) run to its cap before the
+    # batch hook and the kernel, which bounds Arrow + held-group memory
+    # for hot tiles (the z0 group = the whole corpus). No cap window,
+    # no extra exchange — the build keeps ONE Exchange (plan-asserted)
+    # capped or not.
     layer_caps = {spec.index: _kernel_cap(spec) for spec in specs
                   if _kernel_cap(spec) is not None}
     return grouped_map_sorted(
-        norm, ["zxy"], tile,
+        df, ["zxy"], tile,
         "z int, x long, y long, mvt binary, tile_id string",
-        sort_extra=["_li", "_sk"],
-        layer_caps=layer_caps or None,
+        sort_extra=sort_extra, prep=prep, layer_caps=layer_caps or None,
     )
 
+
+def assemble_normalized(norm: DataFrame, specs,
+                        gzip_level: int | None = None) -> DataFrame:
+    """The single-shuffle tile builder: input is the union of
+    normalize_layer_df frames (norm_schema width-aligned); ONE
+    repartition on the packed zxy key + within-partition sort (zxy,
+    _li, _sk), then one grouped pass per tile that dictionary-encodes
+    each layer's values, frames its features, concatenates layer
+    messages in _li order, gzips, and md5s. Output: z,x,y,mvt,tile_id.
+    Value dictionaries dedupe by ENCODED BYTES with a per-batch
+    (type, value) memo (_value_blobs_batch)."""
+    return _assemble(norm, specs, gzip_level, ["_li", "_sk"])
+
+
+def encode_and_assemble_single(features: DataFrame, spec,
+                               gzip_level: int | None = None,
+                               zoom_range: tuple[int, int] | None = None,
+                               ) -> DataFrame:
+    """One layer -> z,x,y,mvt,tile_id of every non-empty tile: ST_AsMVT
+    (A1) and the tile assembly STRING_AGG+gzip+md5 (A2/A3) in ONE (zxy)
+    grouped pass — assemble_normalized's pass over one layer.
+
+    An assigned point frame (z, x, y present) has no Python stage ahead
+    of the exchange: the tile transform, clip and any importance/keyless
+    cap window run in Catalyst (_point_tile_frame), and the point
+    normalizer runs as the grouped pass's batch hook after the exchange.
+    WKB frames, and raw frames with zoom_range (fused assignment), go
+    through normalize_layer_df's map-side stage, as in a multi-layer
+    build."""
+    if spec.geometry_kind == "point" and zoom_range is None:
+        # _li for the pass's per-layer cap compaction, which runs
+        # before the batch hook
+        feats = _point_tile_frame(features, spec).withColumn(
+            "_li", F.lit(spec.index))
+        return _assemble(feats, [spec], gzip_level,
+                         [spec.key_field] if spec.key_field else [],
+                         prep=_point_normalizer(spec))
+    return assemble_normalized(
+        normalize_layer_df(features, spec, zoom_range), [spec], gzip_level)
 
 
 # ------------------------------------------------------------- grouped map
@@ -926,7 +933,6 @@ def grouped_map_sorted(
     out_schema: str,
     sort_extra: list[str] | None = None,
     prep=None,
-    group_cap: int | None = None,
     layer_caps: dict[int, int] | None = None,
     partitioned: bool = False,
     on_end=None,
@@ -949,22 +955,15 @@ def grouped_map_sorted(
     batch-aligned arrays merged into `arrs` (group-independent per-row
     precompute; held-back rows are re-prepped with the next batch).
 
-    `group_cap`: keep only the first N rows of every group (rows are
-    sorted, so these are the cap's selection) BEFORE prep runs — the
-    kernel-level density cap's compaction step. Without it a capped hot
-    group (one z0 tile = the whole corpus) would pay Arrow + prep for
-    millions of rows it then slices away. The held-back partial group
-    is capped too (its continuation rows sort later, so the first N of
-    the partial prefix are final).
-
-    `layer_caps`: the multi-layer twin of group_cap — {_li value:
-    cap}. Rows are sorted (key, _li, _sk), so each (group, layer) run
-    is contiguous and its first `cap` rows ARE the key-ordered cap's
-    selection; runs of layers absent from the dict are kept whole.
-    Complete groups compact per-run before prep; the held partial
-    group is re-compacted after every appended batch, so a capped hot
-    group spanning B batches holds O(sum(caps)) rows, not O(rows).
-    Mutually exclusive with group_cap.
+    `layer_caps`: {_li value: cap} — the kernel-level density cap's
+    compaction step. Rows are sorted (key, _li, key order), so each
+    (group, layer) run is contiguous and its first `cap` rows ARE the
+    key-ordered cap's selection; runs of layers absent from the dict
+    are kept whole. Complete groups compact per-run BEFORE prep; the
+    held partial group is re-compacted after every appended batch, so
+    a capped hot group (one z0 tile = the whole corpus) spanning B
+    batches holds O(sum(caps)) rows and pays Arrow + prep only for
+    those, not for the millions of rows the kernel would slice away.
 
     `partitioned`: `df` is already hash-partitioned on the keys and
     sorted within partitions (e.g. a checkpointed frame several kernels
@@ -975,26 +974,9 @@ def grouped_map_sorted(
     """
     import pandas as pd
 
-    # Partition-count policy for this exchange (measured, BENCH.md
-    # round-5 "granularity" section): encode cost is CPU-per-row while
-    # AQE sizes by shuffle BYTES, and in the fused build the same
-    # tasks also write the partitioned store, where every extra
-    # partition costs ~35 ms of file/commit overhead. So the optimum
-    # depends on compute-per-task: a compute-heavy corpus wants >= 1
-    # wave per core (AQE's byte advisory starved an 8-core 988k-point
-    # encode down to 3-8 tasks -> idle_share 0.47), while a small
-    # corpus wants AQE's few-large-files choice (forcing 128
-    # partitions on the sf0.1 bench cost +70% wall, all in the
-    # write). Default: AQE-managed. Set
-    # `spark.sparktiles.encodePartitions` (e.g. 4x total cores) when
-    # encode compute, not file count, dominates — the scaling tools
-    # do.
-    n_enc = df.sparkSession.conf.get("spark.sparktiles.encodePartitions", None)
-    part_cols = [F.col(k) for k in keys]
-    part = df if partitioned else (
-        df.repartition(int(n_enc), *part_cols)
-        if n_enc
-        else df.repartition(*part_cols)
+    # AQE sizes this exchange
+    part = df if partitioned else df.repartition(
+        *[F.col(k) for k in keys]
     ).sortWithinPartitions(*(keys + (sort_extra or [])))
 
     out_cols = [s.strip().split()[0].strip("`") for s in out_schema.split(",")]
@@ -1006,21 +988,6 @@ def grouped_map_sorted(
             k = (k << 29) ^ arrs[extra].astype(np.int64)
         return k  # single pre-packed key column passes through unchanged
 
-    def _cap_groups(arrs, starts, ends, cap, cols):
-        """Compact every group to its first `cap` rows (sorted order =
-        the cap's selection); recompute boundaries for the compacted
-        arrays. O(total kept rows)."""
-        lens = np.minimum(ends - starts, cap)
-        if int(lens.sum()) == int(ends[-1] - starts[0]) and starts[0] == 0:
-            return arrs, starts, ends
-        sel = np.repeat(starts, lens) + _ragged_arange(lens)
-        arrs = {c: arrs[c][sel] for c in cols}
-        new_ends = np.cumsum(lens)
-        new_starts = np.concatenate([[0], new_ends[:-1]])
-        return arrs, new_starts, new_ends
-
-    if group_cap is not None and layer_caps is not None:
-        raise ValueError("group_cap and layer_caps are mutually exclusive")
     if layer_caps:
         # O(1) per-run cap lookup: _li values index a lut whose
         # sentinel tail (uncapped layers) is "infinite"
@@ -1085,8 +1052,6 @@ def grouped_map_sorted(
             else:
                 arrs = {c: np.concatenate([ch[c] for ch in held])
                         for c in in_cols}
-            if group_cap is not None:
-                arrs = {c: arrs[c][:group_cap] for c in in_cols}
             if prep is not None:
                 arrs = {**arrs, **prep(arrs)}
             return fn(arrs, 0, len(arrs[in_cols[0]]))
@@ -1114,11 +1079,9 @@ def grouped_map_sorted(
                                    for c in in_cols})
                         held = [_compact_single_group(merged)]
                         held_n = len(held[0][in_cols[0]])
-                    elif group_cap is None or held_n < group_cap:
-                        take = cut0 if group_cap is None else min(
-                            cut0, group_cap - held_n)
-                        held.append({c: arrs[c][:take] for c in in_cols})
-                        held_n += take
+                    else:
+                        held.append({c: arrs[c][:cut0] for c in in_cols})
+                        held_n += cut0
                     if cut0 == len(k):
                         continue  # whole batch continues the held group
                     start0 = cut0
@@ -1131,9 +1094,7 @@ def grouped_map_sorted(
             ends = np.concatenate([cuts, [len(k)]])
             # hold back the final group — it may continue in next batch
             hold = int(starts[-1])
-            he = min(int(ends[-1]), hold + group_cap) if group_cap \
-                else int(ends[-1])
-            tail = {c: arrs[c][hold:he] for c in in_cols}
+            tail = {c: arrs[c][hold:] for c in in_cols}
             if layer_caps:
                 tail = _compact_single_group(tail)
             held = [tail]
@@ -1141,10 +1102,7 @@ def grouped_map_sorted(
             held_key = int(k[hold])
             starts, ends = starts[:-1], ends[:-1]
             if len(starts):
-                if group_cap is not None:
-                    arrs, starts, ends = _cap_groups(
-                        arrs, starts, ends, group_cap, in_cols)
-                elif layer_caps:
+                if layer_caps:
                     arrs, starts, ends = _cap_layer_runs(
                         arrs, k, starts, ends, in_cols)
                 if prep is not None:
@@ -1169,7 +1127,7 @@ def grouped_map_sorted(
 
 @dataclass
 class LayerSpec:
-    """What encode_layer_df needs to know about one layer.
+    """What the encode needs to know about one layer.
 
     attr_fields: column name -> MVT logical type 'string'|'number'|'bool'
     (the reference's declared-field model, tileset.py:48-77 +
@@ -1286,10 +1244,10 @@ def _partial_cap_sel(zxy: np.ndarray, keys: np.ndarray,
 
 
 def _kernel_cap(spec) -> int | None:
-    """Density cap applied INSIDE the grouped encode kernel: when the
+    """Density cap applied INSIDE the grouped encode pass: when the
     cap ordering is the sort key alone (no importance column), the
     grouped pass's within-partition sort (zxy, key) already puts each
-    tile's K smallest keys first, so slicing the group to K rows is
+    tile's K smallest keys first, so cutting each run to K rows is
     byte-identical to the Window row_number() <= K path — with the
     window's whole extra shuffle+sort of the fan-out eliminated.
     Importance-ordered caps keep the window (selection order differs
@@ -1298,204 +1256,3 @@ def _kernel_cap(spec) -> int | None:
             and not spec.importance_col:
         return int(spec.max_features_per_tile)
     return None
-
-
-def _make_layer_encoder(spec: LayerSpec):
-    """Build the per-(z,x,y)-group encode kernel for one layer:
-    fn(cols, s, e) -> [(z, x, y, layer_index, blob)] or [] when every
-    feature clips away (empty layers are never emitted)."""
-    attr_items = list(spec.attr_fields.items())
-    extent, buffer_px = spec.extent, spec.buffer_px
-    # tile buffer in MVT extent units (sqltomvt.py:199):
-    mvt_buffer = int(extent * buffer_px / 256)
-    layer_id, layer_index = spec.layer_id, spec.index
-    key_field = spec.key_field
-    kind = spec.geometry_kind
-    frame_blobs = C.layer_frame_blobs(
-        layer_id, [k for k, _ in attr_items], extent)
-    kcap = _kernel_cap(spec)
-
-    del mvt_buffer  # applied map-side for both kinds
-
-    def encode(arrs: dict, s: int, e: int) -> list[tuple]:
-        # transform + clip already ran map-side (with_point_tile_coords
-        # for points, with_wkb_encoded_fields for lines/polygons); the
-        # fid/geometry wire pieces arrive varint-packed and attrs are
-        # pre-converted per batch (_attr_convert_batch in the prep
-        # hook); this kernel only dictionary-encodes attrs and joins
-        # cached pieces. Kernel-level density cap: rows are sorted by
-        # key within the group, so the first kcap rows ARE the capped
-        # selection (see _kernel_cap).
-        if kcap is not None and e - s > kcap:
-            e = s + kcap
-        z, tx, ty = unpack_zxy(int(arrs["zxy"][s]))
-        attr_cols = [(k, arrs["_ac_" + k][s:e]) for k, _t in attr_items]
-        blob = C.encode_layer_points_prepped(
-            layer_id, arrs["_fidf"] if key_field else None, arrs["_geomf"],
-            s, e, attr_cols, extent, frame_blobs=frame_blobs,
-            gtypes=None if kind == "point" else arrs["_gt"])
-        return [(z, tx, ty, layer_index, blob)]
-
-    return encode
-
-
-def _make_batch_prep(spec: LayerSpec):
-    """Batch-level prep (grouped_map_sorted hook): per-Arrow-batch
-    vectorized precompute of everything group-independent — attribute
-    value conversion for all kinds, plus fid/geometry wire pieces for
-    the point spine (the WKB spine pre-encodes those map-side)."""
-    attr_items = list(spec.attr_fields.items())
-    key_field = spec.key_field
-    is_point = spec.geometry_kind == "point"
-
-    def prep(arrs: dict) -> dict:
-        out = {}
-        if is_point:
-            fids = arrs[key_field] if key_field else None
-            ff, gf = C.point_row_fields_vec(fids, arrs["ix"], arrs["iy"])
-            out["_fidf"] = ff
-            out["_geomf"] = gf
-        for k, t in attr_items:
-            out["_ac_" + k] = _attr_convert_batch(arrs[k], t)
-        return out
-
-    return prep
-
-
-def _prep_layer_features(features: DataFrame, spec: LayerSpec,
-                         zoom_range: tuple[int, int] | None = None,
-                         ) -> tuple[DataFrame, list[str]]:
-    """Projection + map-side geometry transform/clip/encode (+ optional
-    density cap) ahead of the pyramid's (z,x,y) shuffle. Both kinds
-    shuffle on the single packed `zxy` key carrying only pre-encoded
-    wire pieces: points via Catalyst column math + the varint prep hook,
-    WKB lines/polygons via the batch-vectorized vecmvt pipeline.
-
-    zoom_range (WKB only): features are UNASSIGNED (no z/x/y columns);
-    supercover assignment and encode run fused in one Python stage."""
-    key_field = spec.key_field
-    fused = zoom_range is not None and spec.geometry_kind == "wkb"
-    # project: shuffle only what the encoder reads (drop url/tags/etc.)
-    geom_cols = ["px", "py"] if spec.geometry_kind == "point" else ["geom"]
-    needed = ([] if fused else ["z", "x", "y"]) + geom_cols + list(spec.attr_fields)
-    if key_field and key_field not in needed:
-        needed.append(key_field)
-    if spec.importance_col and spec.importance_col not in needed:
-        needed.append(spec.importance_col)
-    features = features.select(*dict.fromkeys(needed))
-
-    if spec.geometry_kind == "point":
-        mvt_buffer = int(spec.extent * spec.buffer_px / 256)
-        features = with_point_tile_coords(features, spec.extent, mvt_buffer)
-    elif fused:
-        features = with_wkb_supercover_encoded_fields(
-            features, spec, zoom_range[0], zoom_range[1])
-    else:
-        features = with_wkb_encoded_fields(features, spec)
-    group_keys = ["zxy"]
-
-    if spec.max_features_per_tile and _kernel_cap(spec) is None:
-        # density cap — the LabelGrid/rank pattern the reference uses to
-        # bound label density (sql/LabelGrid.sql:20-29): a hot tile
-        # (one city = one (z,x,y) key) keeps only the top-N features,
-        # bounding both encode time and tile bytes. Ordering is
-        # importance desc then key for determinism. The cap counts
-        # features that survive the clip (the map-side transform runs
-        # first for both kinds), so a capped tile carries exactly N.
-        # Key-ordered caps skip this window entirely — the encode
-        # kernel slices the sorted group instead (_kernel_cap).
-        from pyspark.sql.window import Window
-
-        order = []
-        if spec.importance_col:
-            order.append(F.desc(spec.importance_col))
-        order.append(F.col(key_field or needed[-1]))
-        w = Window.partitionBy(*group_keys).orderBy(*order)
-        features = (
-            features.withColumn("_dr", F.row_number().over(w))
-            .where(F.col("_dr") <= spec.max_features_per_tile)
-            .drop("_dr")
-        )
-    return features, group_keys
-
-
-def encode_layer_df(features: DataFrame, spec: LayerSpec,
-                    zoom_range: tuple[int, int] | None = None) -> DataFrame:
-    """features: z int, x long, y long, feature_id long, px/py double or
-    geom binary(WKB), + attr columns per spec. Output: one row per
-    (z,x,y): layer_index int, mvtl binary (possibly empty layer skipped).
-
-    zoom_range: WKB fused mode — pass the RAW feature frame (no z/x/y)
-    and the zoom span; supercover assignment runs inside the encode
-    stage (see with_wkb_supercover_encoded_fields).
-
-    This is the ST_AsMVT equivalent (A1): groupBy(z,x,y) ->
-    applyInPandas encoding one MVT layer message per tile.
-    """
-    encode = _make_layer_encoder(spec)
-    features, group_keys = _prep_layer_features(features, spec, zoom_range)
-    return grouped_map_sorted(
-        features, group_keys, encode,
-        "z int, x long, y long, layer_index int, mvtl binary",
-        sort_extra=[spec.key_field] if spec.key_field else None,
-        prep=_make_batch_prep(spec),
-        group_cap=_kernel_cap(spec),
-    )
-
-
-def encode_and_assemble_single(features: DataFrame, spec: LayerSpec,
-                               gzip_level: int | None = None,
-                               zoom_range: tuple[int, int] | None = None,
-                               ) -> DataFrame:
-    """Single-layer fast path: fuse ST_AsMVT (A1) and the tile assembly
-    STRING_AGG+gzip+md5 (A2/A3) into ONE (z,x,y) grouped pass.
-
-    The two-phase path shuffles twice on the same key — once to encode
-    layer blobs, once to concatenate them per tile. With one layer the
-    concatenation is the identity, so the second shuffle moves every
-    encoded blob for nothing; fusing halves the shuffled bytes and
-    removes a stage barrier. Output and bytes are identical to
-    assemble_tiles(encode_layer_df(...)).
-    """
-    encode = _make_layer_encoder(spec)
-    features, group_keys = _prep_layer_features(features, spec, zoom_range)
-
-    def tile(arrs: dict, s: int, e: int) -> list[tuple]:
-        rows = encode(arrs, s, e)
-        if not rows:
-            return []
-        z, tx, ty, _idx, blob = rows[0]
-        if gzip_level is not None:
-            blob = C.gzip_blob(blob, gzip_level)
-        return [(z, tx, ty, blob, hashlib.md5(blob).hexdigest())]
-
-    return grouped_map_sorted(
-        features, group_keys, tile,
-        "z int, x long, y long, mvt binary, tile_id string",
-        sort_extra=[spec.key_field] if spec.key_field else None,
-        prep=_make_batch_prep(spec),
-        group_cap=_kernel_cap(spec),
-    )
-
-
-# ------------------------------------------------------------- tile assembly
-
-def assemble_tiles(layer_blobs: DataFrame, gzip_level: int | None = None) -> DataFrame:
-    """STRING_AGG(mvtl, '' ORDER BY _layer_index) [+ GZIP] + md5 key
-    (reference sqltomvt.py:104-140). Input: z,x,y,layer_index,mvtl.
-    Output: z,x,y,mvt binary,tile_id string (md5 hex). Shuffles on the
-    packed zxy key (one bigint instead of three columns)."""
-
-    def concat(arrs: dict, s: int, e: int) -> list[tuple]:
-        z, tx, ty = unpack_zxy(int(arrs["zxy"][s]))
-        blob = b"".join(bytes(b) for b in arrs["mvtl"][s:e])
-        if gzip_level is not None:
-            blob = C.gzip_blob(blob, gzip_level)
-        return [(z, tx, ty, blob, hashlib.md5(blob).hexdigest())]
-
-    lb = layer_blobs.withColumn("zxy", pack_zxy_expr()).drop("z", "x", "y")
-    return grouped_map_sorted(
-        lb, ["zxy"], concat,
-        "z int, x long, y long, mvt binary, tile_id string",
-        sort_extra=["layer_index"],
-    )

@@ -1,10 +1,10 @@
-"""Statistics / reporting operators (SURVEY.md §2.4, A4-A13).
+"""Statistics / reporting operators (SURVEY.md §2.4, A5-A13).
 
 Reference counterparts:
-- layer_stats frequency/variance/toplength -> bin/layer-stats:101-131
+- layer_stats variance/toplength            -> bin/layer-stats:101-131
 - tile summary (decoded MVT per-layer stats) -> openmaptiles/utils.py:311-373
 - perf bucketing (ntile histogram)          -> openmaptiles/performance.py:216-252
-- min/max zoom + per-zoom tile ranges       -> mbtile_tools.py:219-233,353-356
+- per-zoom tile ranges                      -> mbtile_tools.py:219-233
 """
 
 from __future__ import annotations
@@ -15,11 +15,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-
-def frequency_stats(df: DataFrame, cols: list[str]) -> DataFrame:
-    """A4: SELECT cols, count(*) GROUP BY cols ORDER BY cols."""
-    return df.groupBy(*cols).agg(F.count("*").alias("cnt")).orderBy(*cols)
 
 
 def variance_stats(df: DataFrame, col: str, by: list[str] | None = None) -> DataFrame:
@@ -43,13 +38,6 @@ def toplength(df: DataFrame, col: str, n: int = 30) -> DataFrame:
         .select(F.col(col).alias("val"), F.length(col).alias("len"))
         .orderBy(F.desc("len"), "val")
         .limit(n)
-    )
-
-
-def min_max_zoom(tile_map: DataFrame) -> DataFrame:
-    """A7: auto-minmax metadata (mbtile_tools.py:353-356)."""
-    return tile_map.agg(
-        F.min("zoom_level").alias("minzoom"), F.max("zoom_level").alias("maxzoom")
     )
 
 
@@ -169,11 +157,6 @@ def tile_contents(tiles: DataFrame, attr: str = "name") -> DataFrame:
         decode,
         "z int, x long, y long, layer string, n_features long, names_md5 string",
     )
-
-
-def find_duplicate_ids(df: DataFrame, id_col: str) -> DataFrame:
-    """O7: ids appearing more than once (validation, utils.py:197-200)."""
-    return df.groupBy(id_col).agg(F.count("*").alias("cnt")).where(F.col("cnt") > 1)
 
 
 def exact_group_quantiles(df: DataFrame, group_col: str, value_col: str,

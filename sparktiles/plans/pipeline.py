@@ -234,18 +234,18 @@ class TileBuild:
         (multi-layer spine only) via the in-kernel fan-out — base rows
         cross Arrow exactly once. The single-layer point path stays
         JVM-assigned: there the fan-out feeds the exchange directly with
-        NO map-side Python at all, so fusing would add an Arrow crossing
-        instead of removing one."""
+        NO map-side Python at all (the point normalizer runs after the
+        exchange, in the grouped pass), so fusing would add an Arrow
+        crossing instead of removing one."""
         return spec.geometry_kind in kinds and spec.post_assign is None
 
     def _build_tiles(self, zr: tuple[int, int]) -> DataFrame:
         """All layers -> z,x,y,mvt,tile_id of every NON-EMPTY tile in
-        the zoom range, with ONE wide (zxy) shuffle: single-layer
-        builds fuse encode+assemble (encode_and_assemble_single);
-        multi-layer builds union per-layer NORM_SCHEMA frames map-side
-        and run the single-shuffle assembly (assemble_normalized) — the
-        per-layer encode shuffles + blob reshuffle of the old two-phase
-        path are gone."""
+        the zoom range, with ONE wide (zxy) shuffle into one grouped
+        encode pass (operators/mvt.py): a single layer goes through
+        encode_and_assemble_single; multi-layer builds union per-layer
+        normalized frames (normalize_layer_df) map-side and run
+        assemble_normalized over the union."""
         if len(self.layer_frames) == 1:
             spec, feats = self.layer_frames[0]
             if self._can_fuse(spec):

@@ -2215,8 +2215,8 @@ def tile_density_cap_q(spark, sf_dir):
     feature keys (LayerSpec.max_features_per_tile=4, key-ordered — the
     reference's bounded-label-density pattern, sql/LabelGrid.sql:20-29,
     applied per tile). The cap runs INSIDE the grouped encode pass
-    (grouped_map_sorted layer_caps per-(tile, layer) compaction + the
-    kernel slice — no cap window, single Exchange); every built tile is
+    (grouped_map_sorted layer_caps per-(tile, layer) compaction — no
+    cap window, single Exchange); every built tile is
     then decoded back out of its MVT bytes and DuckDB recomputes the
     capped selection with ROW_NUMBER() OVER (PARTITION BY tile ORDER BY
     key) <= 4 over pure-SQL tile math. feature_id here is doc_id (not
@@ -2288,8 +2288,8 @@ GROUP BY x, y
 def mvt_attr_types_roundtrip(spark, sf_dir):
     """Typed-attribute MVT round trip (A1 + the batch attribute
     conversion path): a z6 point layer with string/number-int/
-    number-double/bool declared fields is encoded to real MVT layer
-    blobs, decoded back out of the bytes, and per-tile aggregates of
+    number-double/bool declared fields is encoded to real MVT tiles,
+    decoded back out of the bytes, and per-tile aggregates of
     the DECODED values are hash-checked against DuckDB recomputing
     them from the key derivations — so dictionary encoding, the MVT
     value union (int vs double chosen by integrality, bool), and
@@ -2298,7 +2298,7 @@ def mvt_attr_types_roundtrip(spark, sf_dir):
     import pandas as pd
 
     from sparktiles.functions import mvtcodec as C
-    from sparktiles.operators.mvt import LayerSpec, encode_layer_df
+    from sparktiles.operators.mvt import LayerSpec, encode_and_assemble_single
     from sparktiles.operators.pyramid import assign_point_tiles
 
     c = _t(spark, sf_dir, "customer")
@@ -2317,13 +2317,13 @@ def mvt_attr_types_roundtrip(spark, sf_dir):
                      "ele": "number", "flag": "bool"},
         key_field="feature_id", buffer_px=0)
     assigned = assign_point_tiles(feats, 6, buffer_px=0)
-    lb = encode_layer_df(assigned, spec)
+    tiles = encode_and_assemble_single(assigned, spec, None)
 
     def dec(batches):
         for pdf in batches:
             rows = []
             for z_, x_, y_, blob in zip(pdf["z"], pdf["x"], pdf["y"],
-                                        pdf["mvtl"]):
+                                        pdf["mvt"]):
                 tile = C.decode_tile(bytes(blob))
                 for ft in tile["poi"]["features"]:
                     a = ft["attrs"]
@@ -2334,7 +2334,7 @@ def mvt_attr_types_roundtrip(spark, sf_dir):
                 yield pd.DataFrame(rows, columns=[
                     "z", "x", "y", "name", "pop", "ele", "flag"])
 
-    decoded = lb.mapInPandas(
+    decoded = tiles.mapInPandas(
         dec, "z int, x long, y long, name string, pop long, "
              "ele double, flag boolean")
     return decoded.groupBy("z", "x", "y").agg(

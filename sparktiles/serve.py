@@ -10,8 +10,7 @@ Mirrors the reference's postserve surface (openmaptiles/postserve.py:58-113):
 Plus If-None-Match -> 304 (the strong ETag exists exactly for this).
 
 Serving is read-only and Spark-free: the store's parquet is loaded once
-through DuckDB (DISTINCT collapses the bulk z=-1 dir and the per-zoom
-dirs, which hold identical rows) into an in-process dict — the sandbox
+through DuckDB into an in-process dict keyed by (z, x, y) — the sandbox
 stand-in for a tile CDN origin reading Iceberg. For stores larger than
 memory, point a real origin at tile_map/tile_images instead; the HTTP
 contract stays the same.
@@ -32,10 +31,13 @@ def load_store(store_dir: str):
 
     store = Path(store_dir)
     con = duckdb.connect()
+    # images need the DISTINCT (tile_images/all and a re-tile's dir can
+    # share ids, and a repeated id would repeat its map rows); map rows
+    # that repeat collapse in the (z, x, y) dict below
     rows = con.execute(
         f"""
-        SELECT DISTINCT m.zoom_level, m.tile_column, m.tile_row,
-                        m.tile_id, i.tile_data
+        SELECT m.zoom_level, m.tile_column, m.tile_row, m.tile_id,
+               i.tile_data
         FROM parquet_scan('{store}/tile_map/**/*.parquet',
                           hive_partitioning=1) m
         JOIN (SELECT DISTINCT tile_id, tile_data

@@ -47,10 +47,7 @@ def get_spark(
         # NOTE: the AQE byte advisory stays at its 64 MB default.
         # Globally lowering it to 8 MB was measured ~11% slower at 32
         # cores (it fragments every byte-bound exchange; grid in
-        # BENCH.md). For compute-heavy tile encodes where AQE's byte
-        # sizing starves wave coverage (3-8 tasks on 8 cores), set
-        # `spark.sparktiles.encodePartitions` — see grouped_map_sorted
-        # in operators/mvt.py for the measured tradeoff.
+        # BENCH.md).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
         .config("spark.sql.files.maxPartitionBytes", "134217728")

@@ -111,7 +111,14 @@ def run_incremental_retile(
     down) — a z14-granularity list propagated to ancestors misses
     cross-boundary buffered neighbors at lower zooms. expired_tiles /
     invalidation_list (T5/T8 reference parity) remain for the expired-
-    list surface; this path guarantees merged == full-rebuild.
+    list surface.
+
+    merged == full-rebuild holds only when no tile_id crosses
+    dup_threshold at a zoom >= the build's mid zoom between the two
+    snapshots. Dup sets are global per zoom (replay_impute) and the
+    merge replaces only the invalidated tiles, so an untouched tile
+    whose subtree flips between imputed and generated keeps its stale
+    rows (tests/test_streaming.py pins that case as a strict xfail).
 
     build_features_fn must yield either point features (px/py mercator
     columns) or WKB features (geom binary column); the invalidation

@@ -8,6 +8,8 @@ one-pass phase-2 walk is on the oracle's path."""
 import hashlib
 from collections import Counter
 
+from sparktiles.functions.tilemath import HALF_WORLD, WORLD_MERC_WIDTH
+from sparktiles.operators.mvt import LayerSpec
 from sparktiles.operators.pyramid import dup_threshold, tile_pyramid
 from sparktiles.plans.pipeline import empty_tile_blob
 
@@ -75,3 +77,36 @@ def assert_matches_oracle(b):
     for tid in used:
         assert imgs[tid] == want_imgs[tid]
     return rows, imgs
+
+
+# ----------------------------------------- identical-tile fixture
+# One keyless point per page, page u{i} in z3 tile (i % 8, i // 8), all
+# at the same spot inside their tile: the z3 tiles that hold a point
+# share one tile_id, so `n` pages make that id appear exactly n times at
+# z3. Built z0-z5 with mid 3, the id is a dup root when n >= the z3 dup
+# threshold (20): its z4/z5 descendants inherit it, while generating
+# them would give other ids (the point lands in one child of four).
+
+DUP_ZOOM = 3
+DUP_SPEC = LayerSpec(layer_id="dup", index=0, attr_fields={"name": "string"},
+                     key_field=None, buffer_px=0)
+
+
+def identical_point_pages(spark, urls):
+    return spark.createDataFrame(
+        [(u, None, bytearray(b"t"), "t", "en") for u in urls],
+        "url string, warc_ts timestamp, html binary, text string, lang string")
+
+
+def identical_point_features(pages):
+    """The feature frame (px, py, name) of identical_point_pages."""
+    from pyspark.sql import functions as F
+
+    n = 2 ** DUP_ZOOM
+    w = WORLD_MERC_WIDTH / n
+    i = F.regexp_extract("url", r"(\d+)$", 1).cast("long")
+    return pages.select(
+        (F.lit(-HALF_WORLD) + ((i % n).cast("double") + 0.3) * w).alias("px"),
+        (F.lit(HALF_WORLD) - ((i / n).cast("long").cast("double") + 0.3) * w)
+        .alias("py"),
+        F.lit("dup").alias("name"))

@@ -1,8 +1,8 @@
 """Single-shuffle multi-layer spine (assemble_normalized) parity.
 
-The two-phase multi-layer path (per-layer encode_layer_df shuffles +
-assemble_tiles blob reshuffle) is the byte-semantics reference; the
-fused path must emit identical tiles with ONE exchange in the plan.
+The plain-Python reference encode (tests/mvt_oracle.py) over the
+tile-assigned rows is the byte-semantics reference; the spine must emit
+identical tiles with ONE exchange in the plan.
 """
 
 import contextlib
@@ -11,11 +11,10 @@ import io
 import pytest
 from pyspark.sql import functions as F
 
+from mvt_oracle import oracle_tiles
 from sparktiles.operators.mvt import (
     LayerSpec,
     assemble_normalized,
-    assemble_tiles,
-    encode_layer_df,
     normalize_layer_df,
 )
 from sparktiles.operators.pyramid import (
@@ -48,17 +47,16 @@ def _three_layer_frames(spark):
     ]
 
 
-def _two_phase(spark, frames, gzip_level):
-    blobs = None
-    for spec, feats in frames:
-        if spec.geometry_kind == "wkb":
-            lb = encode_layer_df(feats, spec, zoom_range=(0, ZMAX))
-        else:
-            assigned = assign_point_tiles_multi(
-                feats, 0, ZMAX, buffer_px=spec.buffer_px)
-            lb = encode_layer_df(assigned, spec)
-        blobs = lb if blobs is None else blobs.unionByName(lb)
-    return assemble_tiles(blobs, gzip_level)
+def _assigned(spec, feats):
+    if spec.geometry_kind == "wkb":
+        return assign_supercover_tiles_multi(
+            feats, 0, ZMAX, buffer_px=spec.buffer_px)
+    return assign_point_tiles_multi(feats, 0, ZMAX, buffer_px=spec.buffer_px)
+
+
+def _oracle(frames, gzip_level):
+    return oracle_tiles([(spec, _assigned(spec, feats).collect())
+                         for spec, feats in frames], gzip_level)
 
 
 def _fused(spark, frames, gzip_level):
@@ -83,7 +81,7 @@ def _tiles_dict(df):
 @pytest.mark.parametrize("gzip_level", [None, 6])
 def test_fused_multilayer_byte_parity(spark, gzip_level):
     frames = _three_layer_frames(spark)
-    want = _tiles_dict(_two_phase(spark, frames, gzip_level))
+    want = _oracle(frames, gzip_level)
     got = _tiles_dict(_fused(spark, frames, gzip_level))
     assert got == want
     assert len(got) > 50
@@ -152,13 +150,6 @@ def test_fused_multilayer_attr_types_and_cap(spark):
     ]
     frames = [(specs[0], feats), (specs[1], lines)]
 
-    def two_phase():
-        assigned = assign_point_tiles_multi(feats, 0, ZMAX, buffer_px=8)
-        a = encode_layer_df(assigned, specs[0])
-        la = assign_supercover_tiles_multi(lines, 0, ZMAX, buffer_px=4)
-        b = encode_layer_df(la, specs[1])
-        return assemble_tiles(a.unionByName(b), 6)
-
     def fused():
         assigned = assign_point_tiles_multi(feats, 0, ZMAX, buffer_px=8)
         na = normalize_layer_df(assigned, specs[0], n_vals=3)
@@ -166,7 +157,7 @@ def test_fused_multilayer_attr_types_and_cap(spark):
                                 n_vals=3)
         return assemble_normalized(na.unionByName(nb), specs, 6)
 
-    want = _tiles_dict(two_phase())
+    want = _oracle(frames, 6)
     got = _tiles_dict(fused())
     assert got == want
     assert len(got) > 20
@@ -224,10 +215,9 @@ def test_kernel_cap_matches_window_cap(spark):
 def test_fused_keyless_capped_wkb_parity_and_determinism(spark):
     """Density cap on a KEYLESS WKB layer: the normalized frame's _sk
     is constant 0 there, so the cap window must order by the carried
-    raw tie-break column (_ord — same `key_field or needed[-1]` rule as
-    the two-phase window) for a deterministic selection and byte parity
-    with the two-phase path. rank_n is unique per feature so the cap
-    pick is tie-free."""
+    raw tie-break column (_ord, the last declared attr) for a
+    deterministic selection and byte parity with the reference encode.
+    rank_n is unique per feature so the cap pick is tie-free."""
     lines = generate_lines(spark, n=60).withColumn(
         "rank_n", F.col("line_id").cast("double")).drop("line_id")
     spec = LayerSpec(layer_id="roads", index=0,
@@ -235,16 +225,12 @@ def test_fused_keyless_capped_wkb_parity_and_determinism(spark):
                      key_field=None, buffer_px=4, geometry_kind="wkb",
                      max_features_per_tile=3)
 
-    def two_phase():
-        la = assign_supercover_tiles_multi(lines, 0, ZMAX, buffer_px=4)
-        return assemble_tiles(encode_layer_df(la, spec), None)
-
     def fused():
         nb = normalize_layer_df(lines, spec, zoom_range=(0, ZMAX), n_vals=2)
         assert "_ord" not in nb.columns  # dropped before the union
         return assemble_normalized(nb, [spec], None)
 
-    want = _tiles_dict(two_phase())
+    want = _oracle([(spec, lines)], None)
     got = _tiles_dict(fused())
     assert got == want
     assert got == _tiles_dict(fused())  # stable across runs
@@ -288,9 +274,9 @@ def test_fused_point_norm_rows_parity(spark):
 
 def test_fused_point_multilayer_byte_parity(spark):
     """3-layer build with the point layer ALSO fused (zoom_range) vs
-    the two-phase reference: identical tiles."""
+    the reference encode: identical tiles."""
     frames = _three_layer_frames(spark)
-    want = _tiles_dict(_two_phase(spark, frames, 6))
+    want = _oracle(frames, 6)
     n_vals = max(len(s.attr_fields) for s, _ in frames)
     norm = None
     for spec, feats in frames:
@@ -306,7 +292,7 @@ def test_fused_point_multilayer_byte_parity(spark):
 def test_fused_point_cap_importance_parity(spark):
     """Fused point path under the density cap: keyed + importance
     ordering, and keyless with a carried _ord tie-break — byte parity
-    with the two-phase window selection."""
+    with the reference encode's cap selection."""
     feats = build_features(generate_pages(spark, 400)).select(
         "feature_id", "px", "py", "name",
         (F.col("feature_id") % 100).cast("double").alias("imp"))
@@ -321,10 +307,7 @@ def test_fused_point_cap_importance_parity(spark):
                         buffer_px=8, max_features_per_tile=4,
                         importance_col="imp")
     for spec, f_ in ((keyed, feats), (keyless, uniq)):
-        assigned = assign_point_tiles_multi(f_, 0, ZMAX,
-                                            buffer_px=spec.buffer_px)
-        want = _tiles_dict(assemble_tiles(encode_layer_df(assigned, spec),
-                                          None))
+        want = _oracle([(spec, f_)], None)
         nf = normalize_layer_df(f_, spec, zoom_range=(0, ZMAX), n_vals=1)
         assert "_imp" not in nf.columns and "_ord" not in nf.columns
         got = _tiles_dict(assemble_normalized(nf, [spec], None))
@@ -451,8 +434,8 @@ def test_importance_cap_plan_windowgrouplimit(spark):
 def test_layer_caps_batch_spanning_parity(spark):
     """Per-layer kernel caps in the SPINE (grouped_map_sorted
     layer_caps): a capped 3-layer build must emit bytes identical to
-    (a) the same build with huge Arrow batches and (b) the two-phase
-    window path, including when the z0 hot group spans ~dozens of
+    (a) the same build with huge Arrow batches and (b) the reference
+    encode, including when the z0 hot group spans ~dozens of
     batches — the held-group re-compaction path."""
     frames = _three_layer_frames(spark)
     capped = [(LayerSpec(**{**spec.__dict__, "max_features_per_tile": c,
@@ -468,23 +451,6 @@ def test_layer_caps_batch_spanning_parity(spark):
         return _tiles_dict(assemble_normalized(
             u, [s for s, _ in capped], None))
 
-    def two_phase():
-        from pyspark.sql.window import Window
-
-        encs = []
-        for spec, df in capped:
-            if spec.geometry_kind == "point":
-                assigned = assign_point_tiles_multi(
-                    df, 0, ZMAX, buffer_px=spec.buffer_px)
-            else:
-                assigned = assign_supercover_tiles_multi(
-                    df, 0, ZMAX, buffer_px=spec.buffer_px)
-            encs.append(encode_layer_df(assigned, spec))
-        u = encs[0]
-        for e in encs[1:]:
-            u = u.unionByName(e)
-        return _tiles_dict(assemble_tiles(u, None))
-
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key, None)
     try:
@@ -493,7 +459,7 @@ def test_layer_caps_batch_spanning_parity(spark):
         spark.conf.set(key, "41")
         got = fused()
         assert got == want
-        assert got == two_phase()
+        assert got == _oracle(capped, None)
         assert (0, 0, 0) in got
         # caps bind: decode z0 and check per-layer feature counts
         from sparktiles.functions.mvtcodec import decode_tile

@@ -125,11 +125,11 @@ def test_as_mvt_geom_buffer():
     assert keep64.tolist() == [True]
 
 
-def test_fused_single_layer_equals_two_phase(spark):
+def test_single_layer_matches_oracle(spark):
     from pyspark.sql import functions as F
 
-    from sparktiles.operators.mvt import (
-        LayerSpec, assemble_tiles, encode_and_assemble_single, encode_layer_df)
+    from mvt_oracle import oracle_tiles
+    from sparktiles.operators.mvt import LayerSpec, encode_and_assemble_single
 
     feats = spark.range(3000).select(
         (F.col("id") % 3).cast("int").alias("z"),
@@ -142,39 +142,103 @@ def test_fused_single_layer_equals_two_phase(spark):
     )
     spec = LayerSpec(layer_id="place", index=0,
                      attr_fields={"name": "string"}, key_field="feature_id")
+    rows = feats.collect()
     for gz in (None, 6):
-        two = {(r.z, r.x, r.y): (r.tile_id, bytes(r.mvt)) for r in
-               assemble_tiles(encode_layer_df(feats, spec), gz).collect()}
-        one = {(r.z, r.x, r.y): (r.tile_id, bytes(r.mvt)) for r in
+        one = {(r.z, r.x, r.y): (bytes(r.mvt), r.tile_id) for r in
                encode_and_assemble_single(feats, spec, gz).collect()}
-        assert one == two and one
+        assert one == oracle_tiles([(spec, rows)], gz) and one
+
+
+def _python_stages_vs_exchange(df):
+    """(python nodes above the first Exchange, python nodes below it,
+    number of Exchanges) in df's formatted physical plan tree."""
+    import contextlib
+    import io
+    import re
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    plan = buf.getvalue()
+    tree = plan[:plan.index("\n\n(1)")]
+    lines = tree.splitlines()
+    py = re.compile(r"MapInPandas|MapInArrow|ArrowEvalPython|BatchEvalPython"
+                    r"|FlatMapGroupsInPandas")
+    ex = [i for i, ln in enumerate(lines) if "Exchange" in ln]
+    assert ex, plan
+    above = [ln for ln in lines[:ex[0]] if py.search(ln)]
+    below = [ln for ln in lines[ex[0]:] if py.search(ln)]
+    return above, below, len(ex)
+
+
+def test_single_point_layer_python_after_exchange(spark, tmp_path):
+    """A JVM-assigned point layer crosses into Python once, AFTER the
+    zxy exchange: encode_and_assemble_single runs the point normalizer
+    as the grouped pass's batch hook, and so does build_fast's phase 1
+    for a single point layer (TileBuild._build_tiles)."""
+    from pyspark.sql import functions as F
+
+    from sparktiles.operators.mvt import LayerSpec, encode_and_assemble_single
+    from sparktiles.operators.pyramid import assign_point_tiles_multi
+    from sparktiles.plans.pipeline import BuildConfig, TileBuild
+
+    feats = spark.range(500).select(
+        F.col("id").alias("feature_id"),
+        ((F.col("id") * 7919 % 10007) * 3000.0 - 1.5e7).alias("px"),
+        ((F.col("id") * 104729 % 10009) * 2000.0 - 1.0e7).alias("py"),
+        F.format_string("n%d", F.col("id")).alias("name"),
+        (F.col("id") % 13).cast("double").alias("imp"))
+    plain = LayerSpec(layer_id="place", index=0,
+                      attr_fields={"name": "string"}, buffer_px=8)
+    keycap = LayerSpec(layer_id="place", index=0,
+                       attr_fields={"name": "string"}, buffer_px=8,
+                       max_features_per_tile=3)
+    impcap = LayerSpec(layer_id="place", index=0,
+                       attr_fields={"name": "string"}, buffer_px=8,
+                       max_features_per_tile=3, importance_col="imp")
+    assigned = assign_point_tiles_multi(feats, 0, 4, buffer_px=8)
+    for spec in (plain, keycap, impcap):
+        tiles = encode_and_assemble_single(assigned, spec, 6)
+        above, below, n_ex = _python_stages_vs_exchange(tiles)
+        assert len(above) == 1 and not below and n_ex == 1, spec
+        assert tiles.count() > 50
+
+    b = TileBuild(spark, [(plain, feats)], BuildConfig(
+        store_dir=str(tmp_path / "s"), minzoom=0, maxzoom=4,
+        gzip_level=6))
+    above, below, n_ex = _python_stages_vs_exchange(b._build_tiles((0, 4)))
+    assert len(above) == 1 and not below and n_ex == 1
 
 
 def test_point_encoder_paths_byte_identical():
-    """The two point-layer encoders (scalar columnar, batch-prepped)
-    must produce identical bytes on randomized tiles incl. None attrs,
-    cross-type hash collisions (True vs 1), negative fids, and empty
-    strings."""
+    """frame_layer (the one function that frames MVT layer messages
+    from per-row wire pieces) must produce the bytes of the scalar
+    columnar encoder on randomized tiles incl. None attrs, cross-type
+    hash collisions (True vs 1), negative fids, empty strings, and a
+    row range [s, e) inside a larger batch."""
     import random
 
     import numpy as np
 
     from sparktiles.functions import mvtcodec as C
+    from sparktiles.operators.mvt import frame_layer
 
     rng = random.Random(1234)
     np_rng = np.random.RandomState(1234)
     for trial in range(80):
         n = rng.randint(1, 40)
-        ix = np_rng.randint(-130, 4230, n).astype(np.int64)
-        iy = np_rng.randint(-130, 4230, n).astype(np.int64)
-        fids = (np_rng.randint(-2**63, 2**63 - 1, n, dtype=np.int64)
+        pre, post = rng.randint(0, 5), rng.randint(0, 5)
+        m = pre + n + post
+        ix = np_rng.randint(-130, 4230, m).astype(np.int64)
+        iy = np_rng.randint(-130, 4230, m).astype(np.int64)
+        fids = (np_rng.randint(-2**63, 2**63 - 1, m, dtype=np.int64)
                 if rng.random() < 0.8 else None)
         A = rng.randint(0, 4)
         attr_cols = []
         for a in range(A):
             kind = rng.choice(["string", "number", "bool"])
             col = []
-            for _ in range(n):
+            for _ in range(m):
                 r = rng.random()
                 if r < 0.2:
                     col.append(None)
@@ -185,13 +249,20 @@ def test_point_encoder_paths_byte_identical():
                 else:
                     col.append(rng.choice([True, False]))
             attr_cols.append((f"k{a}", col))
-        geoms = C.encode_point_geoms(ix, iy)
+        sl = slice(pre, pre + n)
         want = C.encode_layer_columnar(
-            "L", fids.tolist() if fids is not None else None,
-            C.GEOM_POINT, geoms, attr_cols, 4096)
+            "L", fids[sl].tolist() if fids is not None else None,
+            C.GEOM_POINT, C.encode_point_geoms(ix[sl], iy[sl]),
+            [(k, col[sl]) for k, col in attr_cols], 4096)
         ff, gf = C.point_row_fields_vec(fids, ix, iy)
-        prepped = C.encode_layer_points_prepped("L", ff, gf, 0, n, attr_cols, 4096)
-        assert want == prepped, f"prepped path diverged (trial {trial})"
+        vcols = [[None if v is None else C.encode_value(v) for v in col]
+                 for _k, col in attr_cols]
+        got = frame_layer(
+            C.layer_frame_blobs("L", [k for k, _ in attr_cols], 4096),
+            ff if ff is not None else [None] * m,
+            np.full(m, C.GEOM_POINT, dtype=np.int8), gf, vcols,
+            pre, pre + n)
+        assert want == got, f"frame_layer diverged (trial {trial})"
     # decode sanity on the last tile
     dec = C.decode_tile(want)
     assert len(dec["L"]["features"]) == n
@@ -260,48 +331,3 @@ def test_attr_convert_batch_fuzz_parity():
                  dtype=object)
     check(s, "string")
     check(rng.randint(0, 100, size=20), "string")
-
-
-def test_encode_partitions_conf_pins_exchange(spark):
-    """`spark.sparktiles.encodePartitions` must pin the grouped-encode
-    exchange to an explicit partition count (exempt from AQE's byte
-    sizing — AQE starved an 8-core encode to 3-8 tasks, BENCH.md
-    round-5 granularity section) WITHOUT changing output bytes."""
-    from pyspark.sql import functions as F
-
-    from sparktiles.operators.mvt import LayerSpec, encode_and_assemble_single
-
-    feats = spark.range(2000).select(
-        (F.col("id") % 3).cast("int").alias("z"),
-        (F.col("id") % 4).cast("long").alias("x"),
-        (F.col("id") % 5).cast("long").alias("y"),
-        F.col("id").alias("feature_id"),
-        (F.col("id") % 4096).cast("double").alias("px"),
-        (F.col("id") * 13 % 4096).cast("double").alias("py"),
-        F.format_string("n%d", F.col("id")).alias("name"),
-    )
-    spec = LayerSpec(layer_id="place", index=0,
-                     attr_fields={"name": "string"}, key_field="feature_id")
-
-    def tiles():
-        return {(r.z, r.x, r.y): (r.tile_id, bytes(r.mvt)) for r in
-                encode_and_assemble_single(feats, spec, None).collect()}
-
-    base = tiles()
-    assert base
-    try:
-        spark.conf.set("spark.sparktiles.encodePartitions", "7")
-        pinned_df = encode_and_assemble_single(feats, spec, None)
-        plan = pinned_df._jdf.queryExecution().analyzed().toString()
-        # RepartitionByExpression with an explicit numPartitions
-        assert "RepartitionByExpression" in plan and ", 7" in plan
-        pinned = {(r.z, r.x, r.y): (r.tile_id, bytes(r.mvt)) for r in
-                  pinned_df.collect()}
-        assert pinned == base
-    finally:
-        spark.conf.unset("spark.sparktiles.encodePartitions")
-    # unset again -> no explicit count in the plan
-    plan = encode_and_assemble_single(feats, spec, None) \
-        ._jdf.queryExecution().analyzed().toString()
-    assert "RepartitionByExpression" in plan
-    assert ", 7" not in plan

@@ -448,3 +448,41 @@ def test_fast_build_many_tasks_and_lineage(spark, pages, tileset, tmp_path,
         spark.conf.unset("spark.sql.files.maxRecordsPerFile")
     assert store_contents(split)[0] == rows
     _check_lineage_files(split, empty_id)
+
+
+def test_fast_build_dup_root_exactly_at_threshold(spark, tmp_path):
+    """The walk's dup decision at its edge: one tile_id appears exactly
+    20 times at z3 (= mid, threshold 20), and generating its children
+    would give other ids. The 20 roots must impute their whole z4/z5
+    subtrees; a walk with the threshold doubled, or one that never
+    imputes, generates them instead."""
+    from build_oracle import (DUP_SPEC, DUP_ZOOM, identical_point_features,
+                              identical_point_pages)
+
+    n = 20  # the reference's dup threshold below z13 (mbtile_tools.py)
+    urls = [f"u{i}" for i in range(0, 2 * n, 2)]
+    feats = identical_point_features(identical_point_pages(spark, urls))
+    b = TileBuild(spark, [(DUP_SPEC, feats)], BuildConfig(
+        store_dir=str(tmp_path / "s"), minzoom=0, maxzoom=5,
+        mid_zoom=DUP_ZOOM))
+    b.build_fast()
+    rows, _ = assert_matches_oracle(b)
+    by_zoom = {}
+    for z, x, y, t in rows:
+        by_zoom.setdefault(z, {})[(x, y)] = t
+    roots = {(i % 8, i // 8) for i in range(0, 2 * n, 2)}
+    root_ids = {by_zoom[DUP_ZOOM][p] for p in roots}
+    assert len(root_ids) == 1
+    (root_id,) = root_ids
+    assert Counter(by_zoom[DUP_ZOOM].values())[root_id] == n
+    # every descendant of a root carries the root's id ...
+    for z in (4, 5):
+        s = 2 ** (z - DUP_ZOOM)
+        got = {by_zoom[z][(x * s + dx, y * s + dy)]
+               for x, y in roots for dx in range(s) for dy in range(s)}
+        assert got == {root_id}, z
+    # ... where direct generation gives children that differ from it
+    gen = {(r.x, r.y): r.tile_id
+           for r in b._build_tiles((4, 4)).select("x", "y", "tile_id").collect()}
+    assert gen and root_id not in gen.values()
+    assert {(x // 2, y // 2) for x, y in gen} == roots

@@ -30,7 +30,8 @@ def test_hot_keys(spark):
 
 
 def test_density_cap(spark):
-    from sparktiles.operators.mvt import LayerSpec, encode_layer_df
+    from mvt_oracle import oracle_tiles
+    from sparktiles.operators.mvt import LayerSpec, encode_and_assemble_single
     from sparktiles.functions import mvtcodec as C
 
     # 500 features all in one z0 tile, importance = id
@@ -46,9 +47,11 @@ def test_density_cap(spark):
         layer_id="place", index=0, attr_fields={"name": "string"},
         max_features_per_tile=25, importance_col="imp",
     )
-    out = encode_layer_df(feats, spec).collect()
+    out = encode_and_assemble_single(feats, spec, None).collect()
     assert len(out) == 1
-    tile = C.decode_tile(bytes(out[0].mvtl))
+    assert {(r.z, r.x, r.y): (bytes(r.mvt), r.tile_id) for r in out} == \
+        oracle_tiles([(spec, feats.collect())])
+    tile = C.decode_tile(bytes(out[0].mvt))
     kept = tile["place"]["features"]
     assert len(kept) == 25
     # highest importance kept (ids 475..499)

@@ -299,3 +299,63 @@ def test_streaming_bloom_dedup(spark, page_dir, tmp_path):
     got = spark.sql("SELECT url, text FROM sbloom")
     assert got.count() == 100
     assert got.where(~F.col("text").startswith("NEW ")).count() == 0
+
+
+@pytest.mark.xfail(strict=True, reason=(
+    "known re-tile gap (ROADMAP direction 1): the merge replaces only the "
+    "invalidated tiles, while dup sets are global per zoom"))
+def test_incremental_retile_dup_threshold_crossing(spark, tmp_path):
+    """21 z3 tiles share one tile_id (a dup root at mid 3); the
+    changefeed removes 2 of their points, so the other 19 fall below
+    the threshold of 20 and a rebuild generates their z4/z5 subtrees.
+    run_incremental_retile regenerates only the invalidated tiles, so
+    the untouched subtrees keep the imputed root id and the merged map
+    differs from build_fast on snapshot 2."""
+    import hashlib
+
+    from build_oracle import (DUP_SPEC, DUP_ZOOM, identical_point_features,
+                              identical_point_pages)
+
+    from sparktiles.operators.mvt import encode_and_assemble_single
+    from sparktiles.operators.pyramid import assign_point_tiles_multi
+    from sparktiles.plans.pipeline import (BuildConfig, TileBuild,
+                                           empty_tile_blob)
+    from sparktiles.streaming.incremental import run_incremental_retile
+
+    MAXZ = 5
+    empty_id = hashlib.md5(empty_tile_blob(None)).hexdigest()
+    p1 = identical_point_pages(spark, [f"u{i}" for i in range(21)])
+    p2 = identical_point_pages(spark, [f"u{i}" for i in range(2, 21)])
+
+    def build(pages, name):
+        b = TileBuild(spark, [(DUP_SPEC, identical_point_features(pages))],
+                      BuildConfig(store_dir=str(tmp_path / name), minzoom=0,
+                                  maxzoom=MAXZ, mid_zoom=DUP_ZOOM))
+        b.build_fast()
+        return b.read_tile_map()
+
+    def as_map(tiles):
+        return tiles.select(
+            F.col("z").alias("zoom_level"), F.col("x").alias("tile_column"),
+            F.col("y").alias("tile_row"), "tile_id")
+
+    def regenerate(inv):
+        assigned = assign_point_tiles_multi(
+            identical_point_features(p2), 0, MAXZ,
+            buffer_px=DUP_SPEC.buffer_px).join(inv, ["z", "x", "y"],
+                                               "left_semi")
+        tiles = encode_and_assemble_single(assigned, DUP_SPEC, None)
+        empties = inv.join(tiles.select("z", "x", "y"), ["z", "x", "y"],
+                           "left_anti").withColumn("tile_id",
+                                                   F.lit(empty_id))
+        return as_map(tiles).unionByName(as_map(empties))
+
+    merged = run_incremental_retile(
+        spark, p1, p2, identical_point_features, build(p1, "s1"), 0, MAXZ,
+        regenerate, buffer_px=DUP_SPEC.buffer_px)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(
+            "zoom_level", "tile_column", "tile_row", "tile_id").collect())
+
+    assert rows(merged) == rows(build(p2, "s2"))

@@ -178,13 +178,13 @@ def test_supercover_polygon_interior_and_hole_fill():
 
 def test_supercover_build_byte_parity_with_bbox(spark):
     """End-to-end equivalence: encoding a WKB layer from supercover
-    candidates produces byte-identical layer blobs to the bbox-explode
+    candidates produces byte-identical tiles to the bbox-explode
     candidates (both are supersets of the survivor set; the exact clip
     makes the outputs equal). Lines + polygons, z0-5, 4px buffer."""
     from pyspark.sql import functions as F
 
     from sparktiles.operators.joins import polygons_with_bounds
-    from sparktiles.operators.mvt import LayerSpec, encode_layer_df
+    from sparktiles.operators.mvt import LayerSpec, encode_and_assemble_single
     from sparktiles.operators.pyramid import (
         assign_bbox_tiles_multi,
         assign_supercover_tiles_multi,
@@ -206,10 +206,10 @@ def test_supercover_build_byte_parity_with_bbox(spark):
         sc = assign_supercover_tiles_multi(feats, 0, 5, buffer_px=4)
         bb = assign_bbox_tiles_multi(
             polygons_with_bounds(feats, "geom"), 0, 5, buffer_px=4)
-        out_sc = {(r.z, r.x, r.y): bytes(r.mvtl) for r in
-                  encode_layer_df(sc, spec).collect()}
-        out_bb = {(r.z, r.x, r.y): bytes(r.mvtl) for r in
-                  encode_layer_df(bb, spec).collect()}
+        out_sc = {(r.z, r.x, r.y): bytes(r.mvt) for r in
+                  encode_and_assemble_single(sc, spec, None).collect()}
+        out_bb = {(r.z, r.x, r.y): bytes(r.mvt) for r in
+                  encode_and_assemble_single(bb, spec, None).collect()}
         assert out_sc == out_bb, layer_id
         assert out_sc, layer_id
         # candidate economy: supercover emits no more rows than bbox
@@ -267,9 +267,9 @@ def test_supercover_deep_zoom_superset(z):
 
 def test_fused_supercover_encode_byte_parity(spark):
     """The fused one-stage supercover-assign+encode must emit exactly
-    the per-tile layer blobs of the two-stage path (assign DataFrame ->
-    encode stage) for lines and polygons."""
-    from sparktiles.operators.mvt import LayerSpec, encode_layer_df
+    the tiles of the two-stage path (assign DataFrame -> encode stage)
+    for lines and polygons."""
+    from sparktiles.operators.mvt import LayerSpec, encode_and_assemble_single
     from sparktiles.operators.pyramid import assign_supercover_tiles_multi
     from sparktiles.sources.lines import generate_lines
     from sparktiles.sources.polygons import generate_polygons
@@ -285,11 +285,12 @@ def test_fused_supercover_encode_byte_parity(spark):
         spec = LayerSpec(layer_id=layer_id, index=0, attr_fields=attrs,
                          key_field="feature_id", buffer_px=4,
                          geometry_kind="wkb")
-        fused = {(r.z, r.x, r.y): bytes(r.mvtl) for r in
-                 encode_layer_df(feats, spec, zoom_range=(0, 5)).collect()}
+        fused = {(r.z, r.x, r.y): bytes(r.mvt) for r in
+                 encode_and_assemble_single(
+                     feats, spec, None, zoom_range=(0, 5)).collect()}
         asg = assign_supercover_tiles_multi(feats, 0, 5, buffer_px=4)
-        two = {(r.z, r.x, r.y): bytes(r.mvtl) for r in
-               encode_layer_df(asg, spec).collect()}
+        two = {(r.z, r.x, r.y): bytes(r.mvt) for r in
+               encode_and_assemble_single(asg, spec, None).collect()}
         assert fused == two, layer_id
         assert fused, layer_id
 
@@ -314,7 +315,7 @@ def test_fused_supercover_chunked_cap_parity(spark):
         df = with_wkb_supercover_encoded_fields(
             lines, spec, 0, 7, candidate_cap=cap)
         return sorted(
-            (r.zxy, r.feature_id, bytes(r._fidf), int(r._gt), bytes(r._geomf))
+            (r.zxy, r._sk, bytes(r._fidf), int(r._gt), bytes(r._geomf))
             for r in df.collect())
 
     base = rows(None)
