@@ -216,118 +216,6 @@ def decode_geometry(gtype: int, data: bytes) -> list[np.ndarray]:
     return parts
 
 
-# ------------------------------------------------------------ layer / tile
-
-def encode_feature(fid: int | None, tag_idx: list[int], gtype: int, geom: bytes) -> bytes:
-    # field tags inlined (0x08/0x12/0x18/0x22 = fields 1,2,3,4) and
-    # small varints served from the cache — the framing half of the
-    # WKB-layer encode hot loop
-    body = b""
-    if fid is not None:
-        body += b"\x08" + _varint(int(fid))
-    if tag_idx:
-        packed = b"".join(varint_cached(t) for t in tag_idx)
-        body += b"\x12" + varint_cached(len(packed)) + packed
-    body += b"\x18" + varint_cached(gtype)
-    body += b"\x22" + varint_cached(len(geom)) + geom
-    return body
-
-
-def encode_layer(
-    name: str,
-    features: list[tuple[int | None, dict, int, bytes]],
-    extent: int = DEFAULT_EXTENT,
-) -> bytes:
-    """features: (feature_id, attrs dict, geom_type, encoded geometry).
-    Keys/values dictionary-encoded in first-seen order (A1)."""
-    keys: list[str] = []
-    key_idx: dict[str, int] = {}
-    values: list[bytes] = []
-    value_idx: dict[bytes, int] = {}
-    feat_blobs = []
-    for fid, attrs, gtype, geom in features:
-        tag_idx = []
-        for k, v in attrs.items():
-            if v is None:
-                continue
-            ki = key_idx.get(k)
-            if ki is None:
-                ki = key_idx[k] = len(keys)
-                keys.append(k)
-            ev = encode_value(v)
-            vi = value_idx.get(ev)
-            if vi is None:
-                vi = value_idx[ev] = len(values)
-                values.append(ev)
-            tag_idx.extend((ki, vi))
-        feat_blobs.append(_len_field(2, encode_feature(fid, tag_idx, gtype, geom)))
-    body = _varint_field(15, 2)
-    body += _len_field(1, name.encode("utf-8"))
-    body += b"".join(feat_blobs)
-    body += b"".join(_len_field(3, k.encode("utf-8")) for k in keys)
-    body += b"".join(_len_field(4, v) for v in values)
-    body += _varint_field(5, extent)
-    return _len_field(3, body)
-
-
-def encode_layer_columnar(
-    name: str,
-    fids,
-    gtypes,
-    geoms: list[bytes],
-    attr_cols: list[tuple[str, list]],
-    extent: int = DEFAULT_EXTENT,
-) -> bytes:
-    """Columnar fast path for encode_layer: attributes arrive as
-    parallel columns instead of per-feature dicts. Keys are dictionary-
-    encoded in column order (stable), values first-seen in feature
-    order; Nones skipped. ~3x less per-feature Python than the dict
-    path — used by the point-layer MVT encoder hot loop."""
-    n = len(geoms)
-    keys = [k for k, _ in attr_cols]
-    values: list[bytes] = []
-    value_idx: dict[bytes, int] = {}
-    # memoize raw->index per column (values repeat heavily per tile)
-    memos: list[dict] = [dict() for _ in attr_cols]
-    feat_blobs = []
-    for i in range(n):
-        tag_idx: list[int] = []
-        for ki, (kname, col) in enumerate(attr_cols):
-            v = col[i]
-            if v is None:
-                continue
-            memo = memos[ki]
-            vi = memo.get(v)
-            if vi is None:
-                ev = encode_value(v)
-                vi = value_idx.get(ev)
-                if vi is None:
-                    vi = value_idx[ev] = len(values)
-                    values.append(ev)
-                memo[v] = vi
-            tag_idx.append(ki)
-            tag_idx.append(vi)
-        fid = fids[i] if fids is not None else None
-        gt = gtypes if isinstance(gtypes, int) else gtypes[i]
-        feat_blobs.append(_len_field(2, encode_feature(fid, tag_idx, gt, geoms[i])))
-    body = _varint_field(15, 2)
-    body += _len_field(1, name.encode("utf-8"))
-    body += b"".join(feat_blobs)
-    body += b"".join(_len_field(3, k.encode("utf-8")) for k in keys)
-    body += b"".join(_len_field(4, v) for v in values)
-    body += _varint_field(5, extent)
-    return _len_field(3, body)
-
-
-def encode_point_geoms(ix, iy) -> list[bytes]:
-    """Geometry command streams for N single-point features:
-    [MoveTo|1<<3, zigzag(x), zigzag(y)] each. ix/iy int arrays."""
-    out = []
-    for x, y in zip(ix.tolist(), iy.tolist()):
-        out.append(b"\x09" + _varint((x << 1) ^ (x >> 63)) + _varint((y << 1) ^ (y >> 63)))
-    return out
-
-
 # --------------------------------------------- vectorized point layer
 
 # small-varint cache: every length/index/zigzag the tile encoder emits
@@ -342,12 +230,12 @@ def varint_cached(n: int) -> bytes:
     return _VARINT_CACHE[n] if 0 <= n < 16384 else _varint(n)
 
 
-def point_row_fields_vec(fids, ix: np.ndarray, iy: np.ndarray):
-    """Batch-vectorized per-row wire pieces for single-point features:
-    (fid_fields, geom_fields) lists of bytes — fid_fields[i] =
-    0x08 varint(fid), geom_fields[i] = 0x22 varint(len) 0x09 zz(x) zz(y).
-    Group-independent, so one numpy pass serves every tile in the Arrow
-    batch; the per-group kernel just concatenates cached pieces."""
+def point_row_fields_vec(ix: np.ndarray, iy: np.ndarray) -> list:
+    """Batch-vectorized geometry fields for single-point features:
+    geom_fields[i] = 0x22 varint(len) 0x09 zz(x) zz(y). Group-
+    independent, so one numpy pass serves every tile in the Arrow
+    batch; the per-group kernel just concatenates cached pieces (feature
+    ids: vecmvt.fid_fields_vec)."""
     n = len(ix)
     zzx = ((ix.astype(np.int64) << 1) ^ (ix.astype(np.int64) >> 63)).view(np.uint64)
     zzy = ((iy.astype(np.int64) << 1) ^ (iy.astype(np.int64) >> 63)).view(np.uint64)
@@ -366,26 +254,7 @@ def point_row_fields_vec(fids, ix: np.ndarray, iy: np.ndarray):
     _write_varints(buf, o + 1, zzx, nb_zzx)
     _write_varints(buf, o + 1 + nb_zzx, zzy, nb_zzy)
     blob = buf.tobytes()
-    ends = (offs + total).tolist()
-    starts = offs.tolist()
-    geom_fields = [blob[a:b] for a, b in zip(starts, ends)]
-
-    if fids is None:
-        return None, geom_fields
-    fid_arr = np.asarray(fids, dtype=np.int64).view(np.uint64)
-    nb_fid = _varint_nbytes(fid_arr)
-    ftotal = 1 + nb_fid
-    foffs = np.zeros(n, dtype=np.int64)
-    if n > 1:
-        foffs[1:] = np.cumsum(ftotal[:-1])
-    fbuf = np.zeros(int(ftotal.sum()), dtype=np.uint8)
-    fbuf[foffs] = 0x08
-    _write_varints(fbuf, foffs + 1, fid_arr, nb_fid)
-    fblob = fbuf.tobytes()
-    fe = (foffs + ftotal).tolist()
-    fs = foffs.tolist()
-    fid_fields = [fblob[a:b] for a, b in zip(fs, fe)]
-    return fid_fields, geom_fields
+    return [blob[a:b] for a, b in zip(offs.tolist(), (offs + total).tolist())]
 
 
 _GTYPE_FIELD = {g: b"\x18" + bytes([g]) for g in (1, 2, 3)}

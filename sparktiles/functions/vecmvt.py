@@ -1160,7 +1160,7 @@ def wkb_row_fields_vec(blobs, z, x, y, extent: int, mvt_buffer: int):
 
 def fid_fields_vec(fids) -> list:
     """Framed feature-id fields (0x08 varint(fid)) for a batch — the
-    fid half of mvtcodec.point_row_fields_vec, reused by the WKB path."""
+    feature-id wire pieces of every layer kind (mvt._row_builder)."""
     n = len(fids)
     fid_arr = np.asarray(fids, dtype=np.int64).view(np.uint64)
     nb = _varint_nbytes(fid_arr)

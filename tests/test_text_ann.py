@@ -301,6 +301,50 @@ def test_semdedup_blocks_on_cluster(spark):
     assert m == {1: (0, 1), 2: (0, 1), 3: (1, 3), 4: (1, 4), 5: (2, 5)}
 
 
+def test_semdedup_nan_and_zero_norm_match_sql(spark):
+    """Edge inputs in one cluster: a zero-norm vector makes every
+    cosine's divisor 0, which SQL evaluates to NULL (never a pair); a
+    NaN component makes the cosine NaN, which SQL compares above every
+    threshold (always a pair). semdedup must match its declared DuckDB
+    oracle (queries._SEMDEDUP_SQL, threshold 0.35) on both, and Spark's
+    exact cosine_dedup_mapping where Spark defines the cosine (ANSI
+    division by zero raises, so without the zero-norm rows)."""
+    import duckdb
+    import pandas as pd
+
+    from sparktiles.queries import _SEMDEDUP_SQL
+
+    def vec(*head):
+        return [float(v) for v in head] + [0.0] * (64 - len(head))
+
+    rows = [
+        (1, vec(1, 2), 0), (2, vec(1, 2), 0),       # duplicates
+        (3, vec(0), 0), (4, vec(0), 0),             # zero-norm
+        (5, vec(2, -1), 0),                         # orthogonal to 1, 2
+        (6, vec(float("nan"), 1), 0),               # NaN component
+        (7, vec(-1, 3), 0),
+    ]
+    schema = "vec_id long, embedding array<float>, label int"
+    d = spark.createDataFrame(rows, schema)
+    got = {r.id: r.canonical_id for r in A.semdedup(d, 0.35, "label").collect()}
+
+    embeddings = pd.DataFrame(rows, columns=["vec_id", "embedding", "label"])
+    con = duckdb.connect()
+    con.register("embeddings", embeddings)
+    want = {i: c for i, _cl, c in con.execute(_SEMDEDUP_SQL).fetchall()}
+    assert got == want
+    # 6 (NaN) pairs with every non-zero-norm vector, 3 and 4 with none
+    assert want == {1: 1, 2: 1, 3: 3, 4: 4, 5: 5, 6: 1, 7: 1}
+
+    finite = spark.createDataFrame(
+        [r for r in rows if r[0] not in (3, 4)], schema)
+    sem = {r.id: r.canonical_id
+           for r in A.semdedup(finite, 0.35, "label").collect()}
+    exact = {r.id: r.canonical_id for r in A.cosine_dedup_mapping(
+        finite, 0.35, exact=True).collect()}
+    assert sem == exact
+
+
 def test_kmeans_lloyd_separated_blobs(spark):
     """Three well-separated blobs with k=3: members of one blob share
     a cluster, different blobs never do; the run is deterministic.

@@ -295,14 +295,13 @@ def test_fused_supercover_encode_byte_parity(spark):
         assert fused, layer_id
 
 
-def test_fused_supercover_chunked_cap_parity(spark):
-    """A tiny candidate_cap forces many mid-zoom flushes; the emitted
-    rows must be identical to the unchunked stage (memory cap changes
-    batching only, never bytes — ADVICE r4 deep-zoom fan-out bound)."""
-    from sparktiles.operators.mvt import (
-        LayerSpec,
-        with_wkb_supercover_encoded_fields,
-    )
+def test_fused_supercover_chunked_cap_parity(spark, monkeypatch):
+    """A tiny FUSED_CANDIDATE_CAP forces many mid-zoom chunks; the
+    normalized rows must be identical to the unchunked stage (memory cap
+    changes batching only, never bytes — ADVICE r4 deep-zoom fan-out
+    bound)."""
+    from sparktiles.operators import mvt
+    from sparktiles.operators.mvt import LayerSpec, normalize_layer_df
     from sparktiles.sources.lines import generate_lines
 
     lines = generate_lines(spark, n=24).withColumnRenamed(
@@ -312,8 +311,9 @@ def test_fused_supercover_chunked_cap_parity(spark):
                      buffer_px=4, geometry_kind="wkb")
 
     def rows(cap):
-        df = with_wkb_supercover_encoded_fields(
-            lines, spec, 0, 7, candidate_cap=cap)
+        if cap is not None:
+            monkeypatch.setattr(mvt, "FUSED_CANDIDATE_CAP", cap)
+        df = normalize_layer_df(lines, spec, zoom_range=(0, 7))
         return sorted(
             (r.zxy, r._sk, bytes(r._fidf), int(r._gt), bytes(r._geomf))
             for r in df.collect())
