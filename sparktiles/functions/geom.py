@@ -20,8 +20,11 @@ Semantics match the reference's PostGIS helpers where golden-tested:
 - simplify       -> Douglas-Peucker, non-topology-preserving
                     (ST_Simplify used by generalized tables,
                     reference openmaptiles/imposm.py:34-45)
-- clip_*_rect    -> Sutherland-Hodgman / Liang-Barsky used by the MVT
-                    geometry step (ST_AsMVTGeom clip, sqltomvt.py:202-207)
+
+The MVT geometry step's rect clip (ST_AsMVTGeom, sqltomvt.py:202-207)
+runs batch-vectorized in functions/vecmvt.py; its scalar reference
+(clip_line_rect / clip_ring_rect / clip_to_rect) lives with the tests in
+tests/mvt_oracle.py.
 
 WKB codec supports the PostGIS EWKB SRID flag so the ToPoint golden hex
 strings (SRID=900913) round-trip exactly.
@@ -673,141 +676,6 @@ def simplify(geom, tolerance: float):
                 polys.append(p[1])
         return ("MultiPolygon", polys)
     return geom
-
-
-# ------------------------------------------------------- clipping
-
-def clip_ring_rect(ring, xmin, ymin, xmax, ymax):
-    """Sutherland-Hodgman polygon-ring clip to an axis-aligned rect."""
-    pts = [tuple(p) for p in np.asarray(ring, dtype=float)]
-    if pts and pts[0] == pts[-1]:
-        pts = pts[:-1]
-
-    def clip_edge(poly, inside, intersect):
-        out = []
-        n = len(poly)
-        for i in range(n):
-            cur, prev = poly[i], poly[i - 1]
-            cin, pin = inside(cur), inside(prev)
-            if cin:
-                if not pin:
-                    out.append(intersect(prev, cur))
-                out.append(cur)
-            elif pin:
-                out.append(intersect(prev, cur))
-        return out
-
-    def ix(p, q, x):
-        t = (x - p[0]) / (q[0] - p[0])
-        return (x, p[1] + t * (q[1] - p[1]))
-
-    def iy(p, q, y):
-        t = (y - p[1]) / (q[1] - p[1])
-        return (p[0] + t * (q[0] - p[0]), y)
-
-    pts = clip_edge(pts, lambda p: p[0] >= xmin, lambda p, q: ix(p, q, xmin))
-    if pts:
-        pts = clip_edge(pts, lambda p: p[0] <= xmax, lambda p, q: ix(p, q, xmax))
-    if pts:
-        pts = clip_edge(pts, lambda p: p[1] >= ymin, lambda p, q: iy(p, q, ymin))
-    if pts:
-        pts = clip_edge(pts, lambda p: p[1] <= ymax, lambda p, q: iy(p, q, ymax))
-    if len(pts) < 3:
-        return None
-    pts.append(pts[0])
-    arr = np.array(pts, dtype=float)
-    if abs(ring_area(arr)) == 0:
-        return None
-    return arr
-
-
-def clip_line_rect(line, xmin, ymin, xmax, ymax):
-    """Liang-Barsky per segment; returns list of line parts."""
-    pts = np.asarray(line, dtype=float)
-    parts, cur = [], []
-    for i in range(len(pts) - 1):
-        p, q = pts[i], pts[i + 1]
-        t0, t1 = 0.0, 1.0
-        d = q - p
-        ok = True
-        for coord, lo, hi in ((0, xmin, xmax), (1, ymin, ymax)):
-            if d[coord] == 0:
-                if p[coord] < lo or p[coord] > hi:
-                    ok = False
-                    break
-            else:
-                ta = (lo - p[coord]) / d[coord]
-                tb = (hi - p[coord]) / d[coord]
-                if ta > tb:
-                    ta, tb = tb, ta
-                t0, t1 = max(t0, ta), min(t1, tb)
-                if t0 > t1:
-                    ok = False
-                    break
-        if not ok:
-            if len(cur) > 1:
-                parts.append(np.array(cur))
-            cur = []
-            continue
-        a = p + t0 * d
-        b = p + t1 * d
-        if not cur or not np.allclose(cur[-1], a):
-            if len(cur) > 1:
-                parts.append(np.array(cur))
-            cur = [a]
-        cur.append(b)
-    if len(cur) > 1:
-        parts.append(np.array(cur))
-    return parts
-
-
-def clip_to_rect(geom, xmin, ymin, xmax, ymax):
-    """ST_ClipByBox2D-style clip; returns geom or None when nothing left."""
-    gtype, coords = geom
-    if is_empty(geom):
-        return None
-    if gtype == "Point":
-        x, y = coords
-        return geom if (xmin <= x <= xmax and ymin <= y <= ymax) else None
-    if gtype == "MultiPoint":
-        arr = np.asarray(coords, dtype=float)
-        m = (arr[:, 0] >= xmin) & (arr[:, 0] <= xmax) & (arr[:, 1] >= ymin) & (arr[:, 1] <= ymax)
-        if not m.any():
-            return None
-        kept = arr[m]
-        return ("Point", tuple(kept[0])) if len(kept) == 1 else ("MultiPoint", kept)
-    if gtype == "LineString":
-        parts = clip_line_rect(coords, xmin, ymin, xmax, ymax)
-        if not parts:
-            return None
-        return ("LineString", parts[0]) if len(parts) == 1 else ("MultiLineString", parts)
-    if gtype == "MultiLineString":
-        parts = []
-        for ls in coords:
-            parts.extend(clip_line_rect(ls, xmin, ymin, xmax, ymax))
-        if not parts:
-            return None
-        return ("LineString", parts[0]) if len(parts) == 1 else ("MultiLineString", parts)
-    if gtype == "Polygon":
-        shell = clip_ring_rect(coords[0], xmin, ymin, xmax, ymax)
-        if shell is None:
-            return None
-        rings = [shell]
-        for hole in coords[1:]:
-            h = clip_ring_rect(hole, xmin, ymin, xmax, ymax)
-            if h is not None:
-                rings.append(h)
-        return ("Polygon", rings)
-    if gtype == "MultiPolygon":
-        polys = []
-        for rings in coords:
-            p = clip_to_rect(("Polygon", rings), xmin, ymin, xmax, ymax)
-            if p is not None:
-                polys.append(p[1])
-        if not polys:
-            return None
-        return ("Polygon", polys[0]) if len(polys) == 1 else ("MultiPolygon", polys)
-    return None
 
 
 # ------------------------------------------------------- point in polygon

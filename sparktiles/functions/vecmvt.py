@@ -1,11 +1,11 @@
 """Batch-vectorized WKB -> MVT geometry pipeline (lines/polygons/points).
 
-The scalar path (`operators/mvt.as_mvt_geom` + `mvtcodec.encode_geometry`)
-runs per-geometry Python: WKB parse, per-segment Liang-Barsky, per-vertex
-Sutherland-Hodgman, per-vertex varint packing. This module reproduces the
-SAME float sequence over whole Arrow batches with numpy passes, so a
-batch of N (feature, tile) rows costs O(numpy passes) instead of O(total
-vertices) of Python — the line/polygon analog of
+One per-row WKB structure walk (decode_wkb_batch) flattens a batch of
+blobs into coordinate arrays; every later stage (tile transform,
+Liang-Barsky line clip, Sutherland-Hodgman ring clip, snap, winding
+fix, varint packing) is a numpy pass over the whole Arrow batch, so a
+batch of N (feature, tile) rows costs O(numpy passes) instead of
+O(total vertices) of Python — the line/polygon analog of
 `mvtcodec.point_row_fields_vec` (the point spine's vectorized kernel).
 
 Semantics mirror the reference's per-tile geometry step
@@ -14,9 +14,11 @@ extent, buffer, true)): transform to tile-local y-down integer coords,
 clip to extent+buffer, drop degenerates, fix polygon winding.
 
 Parity contract (pytest-asserted, tests/test_vecmvt.py): for every row,
-the encoded geometry command stream is byte-identical to
-`C.encode_geometry(*as_mvt_geom(wkb_loads(geom), z, x, y, ...))`, and a
-row drops (returns None) exactly when as_mvt_geom returns None.
+the encoded geometry command stream is byte-identical to the scalar
+reference kept with the tests —
+`C.encode_geometry(*as_mvt_geom(wkb_loads(geom), z, x, y, ...))` from
+tests/mvt_oracle.py — and a row drops (returns None) exactly when
+as_mvt_geom returns None. "Scalar" below names that reference.
 
 Flat batch layout: geometries are exploded into `coords` (float64 [P,2])
 plus offset arrays — per-part `off` ([nparts+1] into coords) and
@@ -41,7 +43,8 @@ from sparktiles.functions.tilemath import TILEBBOX_MAX
 
 _SRID_FLAG = 0x20000000
 
-# allclose constants used by the scalar clip_line_rect continuity check
+# np.allclose defaults: the line-clip continuity tolerance of the scalar
+# reference (tests/mvt_oracle.py clip_line_rect)
 _RTOL, _ATOL = 1.0e-5, 1.0e-8
 
 
@@ -74,401 +77,17 @@ def _ragged_arange(counts: np.ndarray) -> np.ndarray:
     return np.arange(total, dtype=np.int64) - np.repeat(starts, counts)
 
 
-_LE_W = np.array([1, 1 << 8, 1 << 16, 1 << 24], dtype=np.int64)
-_BE_W = _LE_W[::-1].copy()
-
-
-def _u32_at(a8: np.ndarray, off: np.ndarray, le: bool) -> np.ndarray:
-    """uint32 values at arbitrary byte offsets (vectorized gather)."""
-    if len(off) == 0:
-        return np.zeros(0, dtype=np.int64)
-    g = a8[off[:, None] + np.arange(4)].astype(np.int64)
-    return g @ (_LE_W if le else _BE_W)
-
-
-def _cumsum0(counts: np.ndarray) -> np.ndarray:
-    out = np.zeros(len(counts) + 1, dtype=np.int64)
-    np.cumsum(counts, out=out[1:])
-    return out
-
-
-def _decode_wkb_batch_vec(blobs):
-    """Vectorized decode_wkb_batch fast path; returns None when the
-    batch needs the scalar walk (mixed endianness, SRID flags, or
-    multi-geometry children whose headers differ from the parent).
-
-    Level-wise traversal: every variable-length structure level (parts
-    of a MultiLineString, polygons of a MultiPolygon, rings of each
-    polygon) advances a cursor ARRAY over all active representatives at
-    once — O(max nesting) numpy passes instead of O(rows x parts)
-    Python. Adjacent-duplicate blobs (the supercover candidate layout)
-    collapse to one representative before any parsing; rows are
-    re-expanded by index arithmetic afterwards, and all coordinates are
-    materialized by one byte gather per family (the scalar path's
-    np.concatenate over per-part views copies everything anyway)."""
-    n = len(blobs)
-
-    def empty():
-        pt, ln, pg = _Flat(), _Flat(), _Flat()
-        for f in (pt, ln, pg):
-            f.coords = np.empty((0, 2))
-            f.off = np.zeros(1, dtype=np.int64)
-            f.part_row = np.empty(0, dtype=np.int64)
-        pg.part_poly = pg.part_row
-        pg.part_row = None
-        pg.poly_row = np.empty(0, dtype=np.int64)
-        pg.ring_is_shell = np.empty(0, dtype=bool)
-        return pt, ln, pg
-
-    # ---- adjacent-run representative dedupe (identity check first:
-    # candidate fan-outs repeat the same bytes OBJECT)
-    rep_of_row = np.full(n, -1, dtype=np.int64)
-    reps: list[bytes] = []
-    prev = None
-    cur_rep = -1
-    for row in range(n):
-        b = blobs[row]
-        if b is None:
-            prev = None
-            continue
-        if prev is not None and (b is prev or b == prev):
-            rep_of_row[row] = cur_rep
-            continue
-        cur_rep = len(reps)
-        reps.append(bytes(b))
-        rep_of_row[row] = cur_rep
-        prev = b
-    R = len(reps)
-    if R == 0:
-        return empty()
-    lens = np.fromiter((len(b) for b in reps), dtype=np.int64, count=R)
-    if (lens < 9).any():
-        return None
-    big = b"".join(reps)
-    a8 = np.frombuffer(big, dtype=np.uint8)
-    starts = _cumsum0(lens)[:-1]
-    # per-rep end offsets: every count/span read below is bounds-checked
-    # against the OWNING rep's end (not just the concatenated buffer),
-    # so a truncated/corrupt blob falls back to the scalar walk (which
-    # raises) instead of silently gathering the next blob's bytes
-    ends = starts + lens
-    eb = a8[starts]
-    if not (eb == eb[0]).all():
-        return None
-    le = bool(eb[0] == 1)
-    fmt = "<" if le else ">"
-    code = _u32_at(a8, starts + 1, le)
-    if (code & _SRID_FLAG).any():
-        return None
-    t = code & 0xFF
-    doff = starts + 5
-
-    def child_hdr(tcode: int) -> np.ndarray:
-        return (np.array([1, tcode, 0, 0, 0], dtype=np.uint8) if le
-                else np.array([0, 0, 0, 0, tcode], dtype=np.uint8))
-
-    # family part tables at REP level.
-    # points: immediate coords + (rep, seq, vstart into P, vlen)
-    p_coord_chunks: list[np.ndarray] = []
-    p_rep: list[np.ndarray] = []
-    p_seq: list[np.ndarray] = []
-    p_vlen: list[np.ndarray] = []
-    # lines / rings: contiguous byte spans (rep, seq..., start, len)
-    l_rep: list[np.ndarray] = []
-    l_seq: list[np.ndarray] = []
-    l_start: list[np.ndarray] = []
-    l_len: list[np.ndarray] = []
-    g_rep: list[np.ndarray] = []
-    g_pseq: list[np.ndarray] = []
-    g_rseq: list[np.ndarray] = []
-    g_start: list[np.ndarray] = []
-    g_len: list[np.ndarray] = []
-
-    def gather_f8(idx: np.ndarray) -> np.ndarray:
-        raw = a8[idx]
-        return raw.view(fmt + "f8").astype(np.float64, copy=False)
-
-    # ---------------- Point
-    g1 = np.flatnonzero(t == 1)
-    if len(g1):
-        if (lens[g1] < 21).any():
-            return None
-        idx = doff[g1][:, None] + np.arange(16)
-        xy = gather_f8(idx.ravel()).reshape(-1, 2)
-        keep = (xy[:, 0] == xy[:, 0]) | (xy[:, 1] == xy[:, 1])
-        if keep.any():
-            p_coord_chunks.append(xy[keep])
-            kk = np.flatnonzero(keep)
-            p_rep.append(g1[kk])
-            p_seq.append(np.zeros(len(kk), dtype=np.int64))
-            p_vlen.append(np.ones(len(kk), dtype=np.int64))
-
-    # ---------------- MultiPoint
-    g4 = np.flatnonzero(t == 4)
-    if len(g4):
-        npts = _u32_at(a8, doff[g4], le)
-        if (doff[g4] + 4 + 21 * npts.astype(np.int64) > ends[g4]).any():
-            return None
-        C = int(npts.sum())
-        if C:
-            hdr_pos = (np.repeat(doff[g4] + 4, npts)
-                       + 21 * _ragged_arange(npts))
-            hdr = a8[hdr_pos[:, None] + np.arange(5)]
-            if (hdr != child_hdr(1)).any():
-                return None
-            xy = gather_f8(
-                (hdr_pos[:, None] + np.arange(5, 21)).ravel()).reshape(-1, 2)
-            nz = np.flatnonzero(npts > 0)
-            p_coord_chunks.append(xy)
-            p_rep.append(g4[nz])
-            p_seq.append(np.zeros(len(nz), dtype=np.int64))
-            p_vlen.append(npts[nz])
-
-    # ---------------- LineString
-    g2 = np.flatnonzero(t == 2)
-    if len(g2):
-        cnt = _u32_at(a8, doff[g2], le)
-        if (doff[g2] + 4 + 16 * cnt.astype(np.int64) > ends[g2]).any():
-            return None
-        nz = np.flatnonzero(cnt > 0)
-        if len(nz):
-            l_rep.append(g2[nz])
-            l_seq.append(np.zeros(len(nz), dtype=np.int64))
-            l_start.append(doff[g2[nz]] + 4)
-            l_len.append(cnt[nz])
-
-    # ---------------- MultiLineString (level loop over part index)
-    g5 = np.flatnonzero(t == 5)
-    if len(g5):
-        nparts = _u32_at(a8, doff[g5], le)
-        cur = doff[g5] + 4
-        remaining = nparts.copy()
-        k = 0
-        want2 = child_hdr(2)
-        while True:
-            a = np.flatnonzero(remaining > 0)
-            if not len(a):
-                break
-            if (cur[a] + 9 > ends[g5[a]]).any():
-                return None
-            hdr = a8[cur[a][:, None] + np.arange(5)]
-            if (hdr != want2).any():
-                return None
-            m = _u32_at(a8, cur[a] + 5, le)
-            if (cur[a] + 9 + 16 * m.astype(np.int64) > ends[g5[a]]).any():
-                return None
-            nz = np.flatnonzero(m > 0)
-            if len(nz):
-                l_rep.append(g5[a[nz]])
-                l_seq.append(np.full(len(nz), k, dtype=np.int64))
-                l_start.append(cur[a[nz]] + 9)
-                l_len.append(m[nz])
-            cur[a] += 9 + 16 * m
-            remaining[a] -= 1
-            k += 1
-
-    # ---------------- Polygon (level loop over ring index)
-    g3 = np.flatnonzero(t == 3)
-    if len(g3):
-        nr = _u32_at(a8, doff[g3], le)
-        cur = doff[g3] + 4
-        remaining = nr.copy()
-        k = 0
-        shell_ok = np.zeros(len(g3), dtype=bool)
-        r_acc = []
-        while True:
-            a = np.flatnonzero(remaining > 0)
-            if not len(a):
-                break
-            if (cur[a] + 4 > ends[g3[a]]).any():
-                return None
-            cnt = _u32_at(a8, cur[a], le)
-            if (cur[a] + 4 + 16 * cnt.astype(np.int64) > ends[g3[a]]).any():
-                return None
-            if k == 0:
-                shell_ok[a] = cnt > 0
-            r_acc.append((a, np.full(len(a), k, dtype=np.int64),
-                          cur[a] + 4, cnt))
-            cur[a] += 4 + 16 * cnt
-            remaining[a] -= 1
-            k += 1
-        for a, ks, st, cnt in r_acc:
-            # commit rule: shell non-empty; empty holes skipped
-            keep = shell_ok[a] & (cnt > 0)
-            kk = np.flatnonzero(keep)
-            if len(kk):
-                g_rep.append(g3[a[kk]])
-                g_pseq.append(np.zeros(len(kk), dtype=np.int64))
-                g_rseq.append(ks[kk])
-                g_start.append(st[kk])
-                g_len.append(cnt[kk])
-
-    # ---------------- MultiPolygon (poly level x ring level)
-    g6 = np.flatnonzero(t == 6)
-    if len(g6):
-        npoly = _u32_at(a8, doff[g6], le)
-        cur = doff[g6] + 4
-        poly_remaining = npoly.copy()
-        pk = 0
-        want3 = child_hdr(3)
-        while True:
-            a = np.flatnonzero(poly_remaining > 0)
-            if not len(a):
-                break
-            if (cur[a] + 9 > ends[g6[a]]).any():
-                return None
-            hdr = a8[cur[a][:, None] + np.arange(5)]
-            if (hdr != want3).any():
-                return None
-            nr = _u32_at(a8, cur[a] + 5, le)
-            cur[a] += 9
-            rem_r = nr.copy()
-            rk = 0
-            shell_ok = np.zeros(len(a), dtype=bool)
-            r_acc = []
-            while True:
-                aa = np.flatnonzero(rem_r > 0)
-                if not len(aa):
-                    break
-                if (cur[a[aa]] + 4 > ends[g6[a[aa]]]).any():
-                    return None
-                cnt = _u32_at(a8, cur[a[aa]], le)
-                if (cur[a[aa]] + 4 + 16 * cnt.astype(np.int64)
-                        > ends[g6[a[aa]]]).any():
-                    return None
-                if rk == 0:
-                    shell_ok[aa] = cnt > 0
-                r_acc.append((aa, np.full(len(aa), rk, dtype=np.int64),
-                              cur[a[aa]] + 4, cnt))
-                cur[a[aa]] += 4 + 16 * cnt
-                rem_r[aa] -= 1
-                rk += 1
-            for aa, ks, st, cnt in r_acc:
-                keep = shell_ok[aa] & (cnt > 0)
-                kk = np.flatnonzero(keep)
-                if len(kk):
-                    g_rep.append(g6[a[aa[kk]]])
-                    g_pseq.append(np.full(len(kk), pk, dtype=np.int64))
-                    g_rseq.append(ks[kk])
-                    g_start.append(st[kk])
-                    g_len.append(cnt[kk])
-            poly_remaining[a] -= 1
-            pk += 1
-
-    pt, ln, pg = empty()
-
-    def expand_parts(prep, porder_key, pextra=()):
-        """Sort rep-level parts by (rep, *order), expand to rows.
-        Returns (src_sorted_index_order, exp_src, part_row)."""
-        order = np.lexsort(porder_key[::-1] + (prep,)) \
-            if porder_key else np.argsort(prep, kind="stable")
-        rs = prep[order]
-        pcount = np.bincount(rs, minlength=R)
-        pbase = _cumsum0(pcount)[:-1]
-        valid = rep_of_row >= 0
-        rcount = np.zeros(n, dtype=np.int64)
-        rcount[valid] = pcount[rep_of_row[valid]]
-        rowbase = np.zeros(n, dtype=np.int64)
-        rowbase[valid] = pbase[rep_of_row[valid]]
-        exp_src = np.repeat(rowbase, rcount) + _ragged_arange(rcount)
-        part_row = np.repeat(np.arange(n, dtype=np.int64), rcount)
-        return order, exp_src, part_row
-
-    # ---- points family
-    if p_rep:
-        prep = np.concatenate(p_rep)
-        pseq = np.concatenate(p_seq)
-        pvlen = np.concatenate(p_vlen)
-        pcoords = (np.concatenate(p_coord_chunks)
-                   if p_coord_chunks else np.empty((0, 2)))
-        # vstart into pcoords follows chunk append order == table order
-        pvstart = _cumsum0(pvlen)[:-1]
-        order, exp_src, part_row = expand_parts(prep, (pseq,))
-        vs = pvstart[order][exp_src]
-        vl = pvlen[order][exp_src]
-        vidx = np.repeat(vs, vl) + _ragged_arange(vl)
-        pt.coords = pcoords[vidx]
-        pt.off = _cumsum0(vl)
-        pt.part_row = part_row
-    # ---- lines family
-    if l_rep:
-        lrep = np.concatenate(l_rep)
-        lseq = np.concatenate(l_seq)
-        lstart = np.concatenate(l_start)
-        llen = np.concatenate(l_len)
-        order, exp_src, part_row = expand_parts(lrep, (lseq,))
-        st = lstart[order][exp_src]
-        lg = llen[order][exp_src]
-        vbytes = 16 * lg
-        bidx = np.repeat(st, vbytes) + _ragged_arange(vbytes)
-        ln.coords = np.ascontiguousarray(
-            gather_f8(bidx).reshape(-1, 2))
-        ln.off = _cumsum0(lg)
-        ln.part_row = part_row
-    # ---- polygons family (two-level expansion)
-    if g_rep:
-        grep = np.concatenate(g_rep)
-        gpseq = np.concatenate(g_pseq)
-        grseq = np.concatenate(g_rseq)
-        gstart = np.concatenate(g_start)
-        glen = np.concatenate(g_len)
-        # rep-level poly table: distinct (rep, pseq) in sorted order
-        rorder = np.lexsort((grseq, gpseq, grep))
-        grep, gpseq, grseq = grep[rorder], gpseq[rorder], grseq[rorder]
-        gstart, glen = gstart[rorder], glen[rorder]
-        newpoly = np.ones(len(grep), dtype=bool)
-        newpoly[1:] = (grep[1:] != grep[:-1]) | (gpseq[1:] != gpseq[:-1])
-        poly_id_of_ring = np.cumsum(newpoly) - 1        # rep-level poly ids
-        poly_rep = grep[newpoly]                        # per rep-level poly
-        rings_per_poly = np.bincount(
-            poly_id_of_ring, minlength=int(newpoly.sum()))
-        # expand POLYS to rows
-        porder, pexp_src, poly_row = expand_parts(poly_rep, ())
-        # porder is stable-sort of poly_rep which is already sorted
-        rpp = rings_per_poly[porder][pexp_src]
-        rbase = _cumsum0(rings_per_poly[porder])[:-1]
-        ring_src = np.repeat(rbase[pexp_src], rpp) + _ragged_arange(rpp)
-        part_poly = np.repeat(
-            np.arange(len(pexp_src), dtype=np.int64), rpp)
-        st = gstart[ring_src]
-        lg2 = glen[ring_src]
-        vbytes = 16 * lg2
-        bidx = np.repeat(st, vbytes) + _ragged_arange(vbytes)
-        pg.coords = np.ascontiguousarray(gather_f8(bidx).reshape(-1, 2))
-        pg.off = _cumsum0(lg2)
-        pg.part_poly = part_poly
-        pg.poly_row = poly_row
-        pg.ring_is_shell = grseq[ring_src] == 0
-        pg.part_row = None
-    return pt, ln, pg
-
-
 def decode_wkb_batch(blobs) -> tuple[_Flat, _Flat, _Flat]:
     """Parse a batch of WKB blobs (object array of bytes/None) into
     three family structures (points, lines, polygons).
 
-    Fast path (_decode_wkb_batch_vec): when every blob in the batch is
-    uniform-endian with plain headers (no SRID, multi-children matching
-    the parent), the structure walk is vectorized — adjacent-duplicate
-    runs collapse to one representative each, headers are read with
-    numpy gathers per STRUCTURE LEVEL (not per row), and all
-    coordinates land in the final concatenated array via one byte
-    gather. Mixed-endian / SRID batches fall back to the per-row walk
-    (_decode_wkb_batch_scalar), which handles every per-child header
-    variation. Output of the two paths is identical (fuzz-asserted).
-    """
-    out = _decode_wkb_batch_vec(blobs)
-    if out is not None:
-        return out
-    return _decode_wkb_batch_scalar(blobs)
-
-
-def _decode_wkb_batch_scalar(blobs) -> tuple[_Flat, _Flat, _Flat]:
-    """Per-row WKB structure walk — the reference semantics (and the
-    fallback for header variations the vectorized path rejects).
-    Unsupported / empty geometries are simply absent from every family
-    (the scalar MVT path also drops them: as_mvt_geom returns None for
-    empties and GeometryCollections).
+    One per-row structure walk: each blob's header (byte order, EWKB
+    SRID flag) is read with struct, and every child of a Multi* honors
+    its own byte order and SRID flag, as geom.wkb_loads does. Raises on
+    a truncated or corrupt blob. Unsupported / empty geometries are
+    simply absent from every family: a NaN point, a polygon whose shell
+    is empty and a GeometryCollection drop; an empty hole is skipped
+    (ST_AsMVTGeom returns nothing for them either).
     """
     pt, ln, pg = _Flat(), _Flat(), _Flat()
     pt_chunks, pt_lens, pt_rows = [], [], []
@@ -544,8 +163,7 @@ def _decode_wkb_batch_scalar(blobs) -> tuple[_Flat, _Flat, _Flat]:
                         fmt + "f8").reshape(n, 2).astype(np.float64)
                 else:
                     # mixed/child-specific headers: honor each child's
-                    # own endianness + SRID flag (scalar _wkb_read
-                    # parity, ADVICE round-3)
+                    # own endianness + SRID flag (as geom.wkb_loads)
                     pts = np.empty((n, 2))
                     o = off
                     for k in range(n):
@@ -567,7 +185,7 @@ def _decode_wkb_batch_scalar(blobs) -> tuple[_Flat, _Flat, _Flat]:
                 ln_lens.append(n)
                 ln_rows.append(row)
         elif t == 5:  # MultiLineString (each child honors its own
-            # endianness byte + SRID flag — scalar _wkb_read parity)
+            # endianness byte + SRID flag, as geom.wkb_loads)
             n = up(fmt + "I", mv, off)[0]
             off += 4
             for _ in range(n):
@@ -588,8 +206,8 @@ def _decode_wkb_batch_scalar(blobs) -> tuple[_Flat, _Flat, _Flat]:
             def read_poly(o, pfmt, row=row):
                 """Parse one polygon's rings at offset o (byte order
                 pfmt); commit only if the shell is non-empty (an empty
-                shell kills the whole polygon in the scalar path: clip
-                of [] -> None)."""
+                shell kills the whole polygon: its clip is None in
+                ST_AsMVTGeom)."""
                 nonlocal n_poly
                 nr = up(pfmt + "I", mv, o)[0]
                 o += 4
@@ -603,7 +221,7 @@ def _decode_wkb_batch_scalar(blobs) -> tuple[_Flat, _Flat, _Flat]:
                 if rings and len(rings[0]):
                     for k, r in enumerate(rings):
                         if len(r) == 0 and k > 0:
-                            continue  # empty hole: scalar clip -> None, skip
+                            continue  # empty hole: its clip is None, skip
                         pg_chunks.append(r)
                         pg_lens.append(len(r))
                         pg_ring_poly.append(n_poly)
@@ -624,7 +242,7 @@ def _decode_wkb_batch_scalar(blobs) -> tuple[_Flat, _Flat, _Flat]:
                     if ccode & _SRID_FLAG:
                         off += 4
                     off = read_poly(off, cf)
-        # else: GeometryCollection / unknown -> dropped (scalar parity)
+        # else: GeometryCollection / unknown -> dropped
 
         # record this blob's appended chunks for adjacent-dup replay
         n_new_polys = len(pg_poly_rows) - g0p

@@ -37,6 +37,12 @@ def _norm(a):
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
+def _cosine(a, b):
+    """Cosine similarity of two double-array columns; NULL when either
+    norm is 0 (SQL's division by zero) instead of an ANSI-mode error."""
+    return F.try_divide(_dot(a, b), _norm(a) * _norm(b))
+
+
 def brute_force_topk(
     queries: DataFrame, base: DataFrame, k: int,
     qid: str = "qid", bid: str = "bid",
@@ -46,7 +52,7 @@ def brute_force_topk(
     against a huge base — the base never shuffles, one scan)."""
     pairs = base.crossJoin(F.broadcast(queries)).where(F.col(qid) != F.col(bid))
     qv, bv = _as_double(F.col(qvec)), _as_double(F.col(bvec))
-    cos = _dot(qv, bv) / (_norm(qv) * _norm(bv))
+    cos = _cosine(qv, bv)
     w = Window.partitionBy(qid).orderBy(F.desc("cos_sim"), F.col(bid))
     return (
         pairs.withColumn("cos_sim", cos)
@@ -102,8 +108,7 @@ def lsh_topk(
         j = qb.join(bb, ["band", "sig"]).drop("band", "sig")
         cand = j if cand is None else cand.unionByName(j)
     cand = cand.dropDuplicates([qid, bid]).where(F.col(qid) != F.col(bid))
-    cos = _dot(_as_double(F.col(qvec)), _as_double(F.col(bvec))) / (
-        _norm(_as_double(F.col(qvec))) * _norm(_as_double(F.col(bvec))))
+    cos = _cosine(_as_double(F.col(qvec)), _as_double(F.col(bvec)))
     w = Window.partitionBy(qid).orderBy(F.desc("cos_sim"), F.col(bid))
     return (
         cand.withColumn("cos_sim", cos)
@@ -152,7 +157,7 @@ def cosine_near_dups(
             )
             cand = j if cand is None else cand.unionByName(j)
         cand = cand.dropDuplicates(["id_a", "id_b"])
-    cos = _dot(F.col("_va"), F.col("_vb")) / (_norm(F.col("_va")) * _norm(F.col("_vb")))
+    cos = _cosine(F.col("_va"), F.col("_vb"))
     return (
         cand.withColumn("cos_sim", cos)
         .where(F.col("cos_sim") >= threshold)
@@ -193,7 +198,7 @@ def ivf_topk(
     )
     bv = _as_double(F.col(bvec))
     cv = _as_double(F.col("cv"))
-    cos_bc = _dot(bv, cv) / (_norm(bv) * _norm(cv))
+    cos_bc = _cosine(bv, cv)
     w_assign = Window.partitionBy(bid).orderBy(F.desc("_sim"), F.col("cid"))
     assigned = (
         base.crossJoin(F.broadcast(cents))
@@ -203,7 +208,7 @@ def ivf_topk(
         .select(bid, bvec, "cid")
     )
     qv = _as_double(F.col(qvec))
-    cos_qc = _dot(qv, cv) / (_norm(qv) * _norm(cv))
+    cos_qc = _cosine(qv, cv)
     w_probe = Window.partitionBy(qid).orderBy(F.desc("_sim"), F.col("cid"))
     probes = (
         queries.crossJoin(F.broadcast(cents))
@@ -213,8 +218,7 @@ def ivf_topk(
         .select(qid, qvec, "cid")
     )
     cand = probes.join(assigned, "cid").where(F.col(qid) != F.col(bid))
-    cos = _dot(_as_double(F.col(qvec)), _as_double(F.col(bvec))) / (
-        _norm(_as_double(F.col(qvec))) * _norm(_as_double(F.col(bvec))))
+    cos = _cosine(_as_double(F.col(qvec)), _as_double(F.col(bvec)))
     w = Window.partitionBy(qid).orderBy(F.desc("cos_sim"), F.col(bid))
     return (
         cand.withColumn("cos_sim", cos)

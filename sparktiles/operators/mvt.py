@@ -39,14 +39,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from sparktiles.functions import geom as G
 from sparktiles.functions import mvtcodec as C
 from sparktiles.functions.tilecover import cover_cells_zoom
 from sparktiles.functions.tilemath import (
     HALF_WORLD,
     TILEBBOX_MAX,
     WORLD_MERC_WIDTH,
-    tile_bbox,
 )
 from sparktiles.functions.vecmvt import (
     _ragged_arange,
@@ -57,122 +55,6 @@ from sparktiles.functions.vecmvt import (
 
 DEFAULT_EXTENT = 4096
 _MASK29 = (1 << 29) - 1
-
-
-# ------------------------------------------------------------- asmvtgeom
-
-def as_mvt_geom_points(
-    mx: np.ndarray, my: np.ndarray, z: int, tx: int, ty: int,
-    extent: int = DEFAULT_EXTENT, buffer_px: int = 0,
-):
-    """Vectorized point transform: mercator -> integer tile-local coords
-    (y-down), keep mask for points within extent+buffer.
-    Returns (ix, iy, keep)."""
-    xmin, ymin, xmax, ymax = tile_bbox(z, tx, ty)
-    scale = extent / (xmax - xmin)
-    ix = np.rint((mx - xmin) * scale)
-    iy = np.rint((ymax - my) * scale)
-    keep = (ix >= -buffer_px) & (ix <= extent + buffer_px) & \
-           (iy >= -buffer_px) & (iy <= extent + buffer_px)
-    return ix.astype(np.int64), iy.astype(np.int64), keep
-
-
-def _dedupe_consecutive(arr: np.ndarray) -> np.ndarray:
-    if len(arr) < 2:
-        return arr
-    keep = np.ones(len(arr), dtype=bool)
-    keep[1:] = (arr[1:] != arr[:-1]).any(axis=1)
-    return arr[keep]
-
-
-def as_mvt_geom(
-    geom, z: int, tx: int, ty: int,
-    extent: int = DEFAULT_EXTENT, buffer_px: int = 0, clip: bool = True,
-):
-    """ST_AsMVTGeom analog for one geometry (reference use:
-    sqltomvt.py:202-207). Transform to tile-local y-down coords scaled
-    to `extent`, clip to extent+buffer, snap to integers, drop
-    degenerate output (-> None). Returns (mvt_gtype, parts)."""
-    if geom is None or G.is_empty(geom):
-        return None
-    xmin, ymin, xmax, ymax = tile_bbox(z, tx, ty)
-    scale = extent / (xmax - xmin)
-
-    def tf(arr):
-        arr = np.asarray(arr, dtype=float)
-        out = np.empty_like(arr)
-        out[:, 0] = (arr[:, 0] - xmin) * scale
-        out[:, 1] = (ymax - arr[:, 1]) * scale
-        return out
-
-    lo, hi = -float(buffer_px), float(extent + buffer_px)
-    gtype, coords = geom
-
-    if gtype in ("Point", "MultiPoint"):
-        pts = np.asarray([coords] if gtype == "Point" else coords, dtype=float)
-        t = tf(pts)
-        if clip:
-            m = (t[:, 0] >= lo) & (t[:, 0] <= hi) & (t[:, 1] >= lo) & (t[:, 1] <= hi)
-            t = t[m]
-        if len(t) == 0:
-            return None
-        return (C.GEOM_POINT, [np.rint(t).astype(np.int64)])
-
-    if gtype in ("LineString", "MultiLineString"):
-        lines = [coords] if gtype == "LineString" else coords
-        out = []
-        for ls in lines:
-            t = tf(ls)
-            parts = G.clip_line_rect(t, lo, lo, hi, hi) if clip else [t]
-            for p in parts:
-                snapped = _dedupe_consecutive(np.rint(p).astype(np.int64))
-                if len(snapped) >= 2:
-                    out.append(snapped)
-        if not out:
-            return None
-        return (C.GEOM_LINESTRING, out)
-
-    if gtype in ("Polygon", "MultiPolygon"):
-        polys = [coords] if gtype == "Polygon" else coords
-        out = []
-        for rings in polys:
-            fixed_rings = []
-            for k, ring in enumerate(rings):
-                t = tf(ring)
-                r = G.clip_ring_rect(t, lo, lo, hi, hi) if clip else t
-                if r is None:
-                    if k == 0:
-                        fixed_rings = []
-                        break
-                    continue
-                snapped = _dedupe_consecutive(np.rint(r).astype(np.int64))
-                if len(snapped) > 0 and (snapped[0] != snapped[-1]).any():
-                    snapped = np.vstack([snapped, snapped[:1]])
-                if len(snapped) < 4:
-                    if k == 0:
-                        fixed_rings = []
-                        break
-                    continue
-                a = G.ring_area(snapped.astype(float))
-                if a == 0:
-                    if k == 0:
-                        fixed_rings = []
-                        break
-                    continue
-                # MVT spec winding: exterior rings have positive surveyor
-                # area computed on tile coords as-is (y-down => screen-CW);
-                # interior rings negative.
-                want_pos = (k == 0)
-                if (a > 0) != want_pos:
-                    snapped = snapped[::-1]
-                fixed_rings.append(snapped)
-            out.extend(fixed_rings and [fixed_rings] or [])
-        if not out:
-            return None
-        flat = [r for rings in out for r in rings]
-        return (C.GEOM_POLYGON, flat)
-
-    return None
 
 
 def pack_zxy_expr(z="z", x="x", y="y") -> F.Column:
@@ -522,7 +404,8 @@ def with_point_tile_coords(features: DataFrame, extent: int,
                            mvt_buffer: int) -> DataFrame:
     """Map-side ST_AsMVTGeom for points, as Catalyst expressions: tile-
     local integer coords ix/iy (same float order + round-half-even as
-    as_mvt_geom_points, so output bytes are identical), the clip filter,
+    the scalar reference as_mvt_geom_points in tests/mvt_oracle.py, so
+    output bytes are identical), the clip filter,
     and the packed zxy key — BEFORE the (z,x,y) shuffle.
 
     Scale effect: the pyramid shuffle then carries (zxy, ix, iy) small

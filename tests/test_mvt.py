@@ -6,12 +6,17 @@ import hashlib
 import numpy as np
 import pytest
 
-from mvt_oracle import encode_layer, encode_layer_columnar, encode_point_geoms
+from mvt_oracle import (
+    as_mvt_geom,
+    as_mvt_geom_points,
+    encode_layer,
+    encode_layer_columnar,
+    encode_point_geoms,
+)
 from sparktiles.functions import geom as G
 from sparktiles.functions import mvtcodec as C
 from sparktiles.functions.tilemath import tile_bbox
 from sparktiles.functions.vecmvt import fid_fields_vec
-from sparktiles.operators.mvt import as_mvt_geom, as_mvt_geom_points
 
 
 def test_varint_zigzag():

@@ -84,7 +84,7 @@ def test_polygon_feature_tile_counts_match_oracle(spark, polys, poly_build):
     """Every (polygon, z4 tile) pair in the output = oracle pairs where
     the polygon's CLIPPED geometry survives (non-degenerate)."""
     from sparktiles.functions.tilemath import tile_bbox
-    from sparktiles.operators.mvt import as_mvt_geom
+    from mvt_oracle import as_mvt_geom
 
     tm = poly_build.read_tile_map()
     imgs = poly_build.read_tile_images()

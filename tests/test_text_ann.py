@@ -345,6 +345,48 @@ def test_semdedup_nan_and_zero_norm_match_sql(spark):
     assert sem == exact
 
 
+def test_zero_norm_cosines_are_null(spark):
+    """A zero-norm embedding makes the divisor of each of its cosines 0.
+    SQL evaluates that to NULL, so the pair is never a near-dup. Every
+    cosine operator must run without an ANSI [DIVIDE_BY_ZERO] error,
+    give those cosines NULL and every other cosine a value, and
+    cosine_near_dups must return exactly the pairs of its DuckDB oracle
+    (queries._COS_DEDUP_SQL, threshold 0.35)."""
+    import duckdb
+    import pandas as pd
+
+    from sparktiles.queries import _COS_DEDUP_SQL
+
+    def vec(*head):
+        return [float(v) for v in head] + [0.0] * (64 - len(head))
+
+    rows = [(1, vec(1, 2)), (2, vec(1, 2)), (3, vec(0)), (4, vec(2, -1)),
+            (5, vec(-1, 3)), (6, vec(1, 2.5))]
+    d = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    pairs = A.cosine_near_dups(d, 0.35, exact=True).collect()
+    con = duckdb.connect()
+    con.register("embeddings",
+                 pd.DataFrame(rows, columns=["vec_id", "embedding"]))
+    want = {(a, b): c for a, b, c in con.execute(_COS_DEDUP_SQL).fetchall()}
+    assert {(r.id_a, r.id_b) for r in pairs} == set(want)
+    assert not any(3 in p for p in want)
+    for r in pairs:
+        assert r.cos_sim == pytest.approx(want[(r.id_a, r.id_b)], abs=1e-4)
+
+    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    base = d.select(F.col("vec_id").alias("bid"), v.alias("bv"))
+    queries = d.select(F.col("vec_id").alias("qid"), v.alias("qv"))
+    for op in (lambda: A.brute_force_topk(queries, base, k=5),
+               lambda: A.lsh_topk(queries, base, k=5, dim=64, planes=2,
+                                  bands=2),
+               lambda: A.ivf_topk(queries, base, k=5, n_centroids=3,
+                                  n_probe=3)):
+        got = op().collect()
+        assert got
+        for r in got:
+            assert (r.cos_sim is None) == (3 in (r.qid, r.bid)), r
+
+
 def test_kmeans_lloyd_separated_blobs(spark):
     """Three well-separated blobs with k=3: members of one blob share
     a cluster, different blobs never do; the run is deterministic.

@@ -1,15 +1,23 @@
 """Byte-parity fuzz: the batch-vectorized WKB->MVT geometry pipeline
-(functions/vecmvt.py) must reproduce the scalar path — wkb_loads ->
-as_mvt_geom -> encode_geometry (+ the 0x22 length framing) — bit for
-bit, including which rows drop entirely. No Spark needed."""
+(functions/vecmvt.py) must reproduce the scalar reference in
+tests/mvt_oracle.py — wkb_loads -> as_mvt_geom -> encode_geometry (+ the
+0x22 length framing) — bit for bit, including which rows drop entirely;
+its WKB batch decoder must match the per-blob decode_wkb_reference. No
+Spark needed."""
+
+import struct
 
 import numpy as np
 import pytest
 
+from mvt_oracle import as_mvt_geom, decode_wkb_reference
 from sparktiles.functions import geom as G
 from sparktiles.functions import mvtcodec as C
-from sparktiles.functions.vecmvt import fid_fields_vec, wkb_row_fields_vec
-from sparktiles.operators.mvt import as_mvt_geom
+from sparktiles.functions.vecmvt import (
+    decode_wkb_batch,
+    fid_fields_vec,
+    wkb_row_fields_vec,
+)
 
 EXTENT = 4096
 HALF = 20037508.34278925
@@ -151,8 +159,6 @@ def test_points_and_mixed_parity():
         ys.append(y)
     # plus hand-picked edge rows (incl. a BIG-ENDIAN LineString — the
     # WKB spec allows either byte order; scalar wkb_loads handles both)
-    import struct
-
     be_pts = np.array([[-1e6, 2e6], [3e6, -4e6], [5e6, 6e6]])
     be_line = (b"\x00" + struct.pack(">I", 2) + struct.pack(">I", len(be_pts))
                + be_pts.astype(">f8").tobytes())
@@ -182,8 +188,6 @@ def test_mixed_endian_multi_children_parity():
     order (and EWKB its own SRID flag); the scalar reader honors them
     recursively. The batch decoder must match — incl. the MultiPoint
     bulk-read fast path falling back cleanly (ADVICE round-3)."""
-    import struct
-
     def point(xy, big=False, srid=None):
         fmt = ">" if big else "<"
         code = 1 | (0x20000000 if srid else 0)
@@ -236,149 +240,128 @@ def test_mixed_endian_multi_children_parity():
     run_parity(wkbs, zs, xs, ys, 64)
 
 
-def test_decode_wkb_batch_vec_scalar_parity():
-    """The vectorized structure walk must produce exactly the scalar
-    walk's flat family structures for every geometry type, including
-    adjacent-duplicate runs, Nones, NaN-empty points, empty rings/parts,
-    and multi-geometries; uniform big-endian batches take the vectorized
-    path too; mixed-endian and SRID batches must FALL BACK (vec returns
-    None) and still decode correctly end-to-end."""
-    import struct
-
-    from sparktiles.functions.vecmvt import (
-        _decode_wkb_batch_scalar,
-        _decode_wkb_batch_vec,
-        decode_wkb_batch,
-    )
-
+def test_decode_wkb_batch_matches_reference():
+    """decode_wkb_batch must produce exactly the per-blob reference's
+    flat family structures (mvt_oracle.decode_wkb_reference, built on
+    geom.wkb_loads) for every geometry type, including adjacent-
+    duplicate runs, Nones, NaN-empty points, empty rings/parts, empty
+    shells, GeometryCollections and multi-geometries; across uniform
+    little- and big-endian batches, top-level EWKB SRID flags, child
+    headers with their own SRID flag or byte order, and batches that
+    mix byte orders from row to row."""
     rng = np.random.RandomState(123)
 
     def w(fmt, *vals):
         return struct.pack(fmt, *vals)
 
-    def head(fmt, code):
-        return (b"\x01" if fmt == "<" else b"\x00") + w(fmt + "I", code)
+    class Hdr:
+        """Header style of one batch: byte-order choice per header and
+        how often a header carries an EWKB SRID."""
 
-    def pt(fmt="<", nan=False):
-        x, y = (np.nan, np.nan) if nan else tuple(rng.randn(2) * 1e6)
-        return head(fmt, 1) + w(fmt + "dd", x, y)
+        def __init__(self, fmts, srid_p):
+            self.fmts, self.srid_p = fmts, srid_p
 
-    def mpt(npts, fmt="<"):
-        b = head(fmt, 4) + w(fmt + "I", npts)
-        for _ in range(npts):
-            b += head(fmt, 1) + w(fmt + "dd", *(rng.randn(2) * 1e6))
-        return b
+        def fmt(self):
+            return self.fmts[rng.randint(len(self.fmts))]
 
-    def ls(nv, fmt="<"):
-        b = head(fmt, 2) + w(fmt + "I", nv)
-        for _ in range(nv):
-            b += w(fmt + "dd", *(rng.randn(2) * 1e6))
-        return b
+        def head(self, fmt, code):
+            srid = rng.rand() < self.srid_p
+            return ((b"\x01" if fmt == "<" else b"\x00")
+                    + w(fmt + "I", code | (0x20000000 if srid else 0))
+                    + (w(fmt + "I", 3857) if srid else b""))
 
-    def mls(parts, fmt="<"):
-        b = head(fmt, 5) + w(fmt + "I", len(parts))
-        for nv in parts:
-            b += head(fmt, 2) + w(fmt + "I", nv)
-            for _ in range(nv):
-                b += w(fmt + "dd", *(rng.randn(2) * 1e6))
-        return b
+    def xy(fmt, n):
+        return b"".join(w(fmt + "dd", *(rng.randn(2) * 1e6))
+                        for _ in range(n))
 
-    def ring_bytes(nv, fmt="<"):
-        b = w(fmt + "I", nv)
-        for _ in range(nv):
-            b += w(fmt + "dd", *(rng.randn(2) * 1e6))
-        return b
+    def pt(h, fmt, nan=False):
+        body = w(fmt + "dd", np.nan, np.nan) if nan else xy(fmt, 1)
+        return h.head(fmt, 1) + body
 
-    def poly(rings, fmt="<"):
-        b = head(fmt, 3) + w(fmt + "I", len(rings))
-        for nv in rings:
-            b += ring_bytes(nv, fmt)
-        return b
+    def mpt(h, fmt, npts):
+        return h.head(fmt, 4) + w(fmt + "I", npts) + b"".join(
+            pt(h, h.fmt()) for _ in range(npts))
 
-    def mpoly(polys, fmt="<"):
-        b = head(fmt, 6) + w(fmt + "I", len(polys))
-        for rings in polys:
-            b += head(fmt, 3) + w(fmt + "I", len(rings))
-            for nv in rings:
-                b += ring_bytes(nv, fmt)
-        return b
+    def ls(h, fmt, nv):
+        return h.head(fmt, 2) + w(fmt + "I", nv) + xy(fmt, nv)
 
-    def gen_one(fmt="<"):
-        r = rng.randint(12)
+    def mls(h, fmt, parts):
+        return h.head(fmt, 5) + w(fmt + "I", len(parts)) + b"".join(
+            ls(h, h.fmt(), nv) for nv in parts)
+
+    def poly(h, fmt, rings):
+        return h.head(fmt, 3) + w(fmt + "I", len(rings)) + b"".join(
+            w(fmt + "I", nv) + xy(fmt, nv) for nv in rings)
+
+    def mpoly(h, fmt, polys):
+        return h.head(fmt, 6) + w(fmt + "I", len(polys)) + b"".join(
+            poly(h, h.fmt(), rings) for rings in polys)
+
+    def gen_one(h):
+        fmt = h.fmt()
+        r = rng.randint(13)
         if r == 0:
             return None
         if r == 1:
-            return pt(fmt, nan=True)
+            return pt(h, fmt, nan=True)
         if r == 2:
-            return pt(fmt)
+            return pt(h, fmt)
         if r == 3:
-            return mpt(rng.randint(0, 4), fmt)
+            return mpt(h, fmt, rng.randint(0, 4))
         if r == 4:
-            return ls(rng.randint(0, 6), fmt)
+            return ls(h, fmt, rng.randint(0, 6))
         if r == 5:
-            return mls([rng.randint(0, 5) for _ in range(rng.randint(0, 4))], fmt)
+            return mls(h, fmt, [rng.randint(0, 5)
+                                for _ in range(rng.randint(0, 4))])
         if r == 6:
-            return poly([rng.randint(0, 6) for _ in range(rng.randint(0, 4))], fmt)
+            return poly(h, fmt, [rng.randint(0, 6)
+                                 for _ in range(rng.randint(0, 4))])
         if r == 7:
-            return mpoly([[rng.randint(0, 5) for _ in range(rng.randint(0, 3))]
-                          for _ in range(rng.randint(0, 3))], fmt)
+            return mpoly(h, fmt, [[rng.randint(0, 5)
+                                   for _ in range(rng.randint(0, 3))]
+                                  for _ in range(rng.randint(0, 3))])
         if r == 8:
-            return head(fmt, 7) + w(fmt + "I", 0)  # GeometryCollection
+            return h.head(fmt, 7) + w(fmt + "I", 0)  # empty collection
         if r == 9:
-            return poly([5, 0, 4], fmt)            # empty hole
+            return (h.head(fmt, 7) + w(fmt + "I", 1)  # collection
+                    + pt(h, h.fmt()))
         if r == 10:
-            return poly([0, 4], fmt)               # empty shell
-        return mls([3], fmt)
+            return poly(h, fmt, [5, 0, 4])           # empty hole
+        if r == 11:
+            return poly(h, fmt, [0, 4])              # empty shell
+        return mls(h, fmt, [3])
 
-    def flats_equal(a, b):
-        pta, lna, pga = a
-        ptb, lnb, pgb = b
-        for fa, fb in ((pta, ptb), (lna, lnb)):
-            assert np.array_equal(fa.coords, fb.coords)
-            assert np.array_equal(fa.off, fb.off)
-            assert np.array_equal(fa.part_row, fb.part_row)
-        assert np.array_equal(pga.coords, pgb.coords)
-        assert np.array_equal(pga.off, pgb.off)
-        assert np.array_equal(pga.part_poly, pgb.part_poly)
-        assert np.array_equal(pga.poly_row, pgb.poly_row)
-        assert np.array_equal(pga.ring_is_shell, pgb.ring_is_shell)
-
-    for trial in range(30):
-        fmt = ">" if trial % 5 == 4 else "<"
+    styles = [
+        Hdr("<", 0.0), Hdr(">", 0.0),                # plain WKB
+        Hdr("<", 1.0), Hdr(">", 1.0),                # every header EWKB
+        Hdr("<>", 0.0),                              # mixed byte order
+        Hdr("<>", 0.5),                              # mixed order + SRID
+    ]
+    for trial in range(36):
+        h = styles[trial % len(styles)]
         items = []
         for _ in range(rng.randint(1, 40)):
-            g = gen_one(fmt)
+            g = gen_one(h)
             items.extend([g] * rng.randint(1, 4))  # adjacent-dup runs
         blobs = np.array(items, dtype=object)
-        vec = _decode_wkb_batch_vec(blobs)
-        assert vec is not None, (trial, "uniform batch must vectorize")
-        flats_equal(vec, _decode_wkb_batch_scalar(blobs))
-
-    # mixed endianness -> fallback; SRID flag -> fallback
-    mixed = np.array([ls(3, "<"), ls(3, ">")], dtype=object)
-    assert _decode_wkb_batch_vec(mixed) is None
-    srid = head("<", 2 | 0x20000000) + w("<I", 4326) + w("<I", 1) + \
-        w("<dd", 1.0, 2.0)
-    assert _decode_wkb_batch_vec(np.array([srid], dtype=object)) is None
-    # and decode_wkb_batch dispatch still decodes both correctly
-    a = decode_wkb_batch(mixed)
-    b = _decode_wkb_batch_scalar(mixed)
-    flats_equal(a, b)
+        pt_, ln_, pg_ = decode_wkb_batch(blobs)
+        ref = decode_wkb_reference(blobs)
+        got = {
+            "pt": (pt_.coords, pt_.off, pt_.part_row),
+            "ln": (ln_.coords, ln_.off, ln_.part_row),
+            "pg": (pg_.coords, pg_.off, pg_.part_poly, pg_.poly_row,
+                   pg_.ring_is_shell),
+        }
+        for fam, arrays in ref.items():
+            for k, (a, b) in enumerate(zip(got[fam], arrays)):
+                assert np.array_equal(np.asarray(a), np.asarray(b)), \
+                    (trial, fam, k)
 
 
-def test_truncated_wkb_bails_out_of_vec_path():
-    """Corrupt/truncated blobs must not silently gather coordinate
-    bytes from the NEXT rep in the concatenated buffer: the vec walk
-    bounds-checks every count/span read against the owning rep's end
-    and returns None (scalar fallback, which raises), at every
-    structure level and for the truncated-blob-last case too."""
-    import struct
-
-    from sparktiles.functions.vecmvt import (
-        _decode_wkb_batch_scalar,
-        _decode_wkb_batch_vec,
-    )
-
+def test_decode_wkb_batch_raises_on_bad_blobs():
+    """A truncated or corrupt blob raises instead of decoding to a
+    short or borrowed geometry, at every structure level, whether it
+    sits mid-batch or last."""
     rng = np.random.RandomState(7)
 
     def head(code):
@@ -407,14 +390,12 @@ def test_truncated_wkb_bails_out_of_vec_path():
         head(4) + struct.pack("<I", 3) + (head(1) + b"\x00" * 16),  # MultiPoint
         poly([4, 4], claim_first=9),     # Polygon ring overruns
         head(5) + struct.pack("<I", 2) + ls(3),   # MultiLineString missing part
-        head(6) + struct.pack("<I", 1) + poly([4], claim_first=7)[0:],  # MPoly
+        head(6) + struct.pack("<I", 1) + poly([4], claim_first=7),  # MPoly
     ]
     for j, bad in enumerate(bad_cases):
         for blobs in ([good, bad, good], [good, bad]):  # bad mid + bad LAST
-            arr = np.array(blobs, dtype=object)
-            assert _decode_wkb_batch_vec(arr) is None, (j, len(blobs))
-            with pytest.raises(Exception):
-                _decode_wkb_batch_scalar(arr)
-    # well-formed batches still take the vec path
-    assert _decode_wkb_batch_vec(np.array([good, good], dtype=object)) \
-        is not None
+            with pytest.raises((struct.error, ValueError, IndexError)):
+                decode_wkb_batch(np.array(blobs, dtype=object))
+    # a well-formed batch decodes
+    assert len(decode_wkb_batch(np.array([good, good], dtype=object))[1]
+               .part_row) == 2
